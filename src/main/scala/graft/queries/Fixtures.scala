@@ -118,8 +118,7 @@ object Fixtures {
   }
 
   /** Long-lived engine with the trigram name index ATTACHED — the
-    * indexed serving tier ([[graft.tools.ServeProfile]] compares its
-    * request latencies against [[gazEngine]]'s scan tier). Same pois,
+    * indexed serving tier next to [[gazEngine]]'s scan tier. Same pois,
     * same admin; only the candidate-fetch path differs. */
   def gazEngineIndexed(s: SparkSession, dir: String): ScoutEngine = {
     val pois = gazPois(s, dir, withWikidata = true) // outside the memo: see above

@@ -55,14 +55,17 @@ object ReverseGeocode {
     // partitioning (the join broadcasts or co-shuffles; the partial
     // WindowGroupLimit prunes below the window exchange). A caller
     // whose points relation is narrow relative to its cluster — e.g. a
-    // bounded query window on a one-row-group fixture file — should
-    // hash-partition `points` by qid first: the explode and broadcast
-    // join preserve that distribution, so the ranking window reuses it
-    // (no extra exchange) and the CPU-bound trig runs wide. Done in the
-    // caller, NOT here: at corpus scale the scan is already wide, and
-    // an unconditional repartition above the join would either be
-    // discarded by a co-shuffled join or move candidate rows a second
-    // time (measured as the round-19 rejected variant).
+    // bounded query window on a one-row-group fixture file, as in
+    // g12/g13, the only callers — should hash-partition `points` by qid
+    // first: the explode and broadcast join preserve that distribution,
+    // so the ranking window reuses it (no extra exchange) and the
+    // CPU-bound trig runs wide. Done in the caller, NOT here: at corpus
+    // scale the scan is already wide, and an unconditional repartition
+    // above the join would either be discarded by a co-shuffled join or
+    // move candidate rows a second time (measured as the round-19
+    // rejected variant). Serving does not come through here: it
+    // ranks with the scalar twin of this plan ([[graft.core.Nearest]])
+    // over a persisted cell index ([[ScoutEngine.reverse]]).
     probes.join(pcell, Seq("cell_lat", "cell_lon"))
       .withColumn("dist_km",
         round(Geo.haversineKm(col("q_lat"), col("q_lon"),
@@ -103,10 +106,9 @@ object ReverseGeocode {
       deriveCellDeg(pois, targetPerCell, minCellDeg, maxCellDeg))
 
   /** The density-derived cell size alone — factored out of
-    * [[nearestAuto]] so the in-process serving fast path
-    * ([[ScoutEngine.reverseFast]]) derives the SAME cell from the same
-    * aggregate and the two routes cannot drift. Deterministic per
-    * corpus: count/min/max are exact and order-free. */
+    * [[nearestAuto]] so the serving routes ([[ScoutEngine.reverse]])
+    * derive the SAME cell from the same aggregate, once per snapshot.
+    * Deterministic per corpus: count/min/max are exact and order-free. */
   def deriveCellDeg(pois: DataFrame,
                     targetPerCell: Long = 64,
                     minCellDeg: Double = 0.01,

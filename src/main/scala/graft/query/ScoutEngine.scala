@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.core.{Norm, Settings}
+import graft.core.{GeoCell, Nearest, Norm, Settings}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Forward-geocode request (reference: `app.py:14-23`). */
@@ -111,8 +111,9 @@ class ScoutEngine(
     }
 
     // driver-side caches behind the in-process fast paths
-    // ([[forwardFast]] / [[reverseFast]]): hot candidate rows, resolved
-    // area bboxes, and density-grid cells
+    // ([[forwardFast]] / [[reverseFast]]): hot candidate rows (also the
+    // reverse batch job's display columns), resolved area bboxes, and
+    // density-grid cells
     val rowCache = new ScoutEngine.PoiRowCache(poiView)
     val reverseCache = new ScoutEngine.ReverseCellCache(poiView)
     val bboxCache =
@@ -141,10 +142,32 @@ class ScoutEngine(
       }
     }
 
-    /** Release the cached blocks this snapshot owns (the admin cache).
-      * Safe while in-flight requests still hold the DataFrames: the
-      * plans stay valid, only the cached blocks recompute. */
-    def close(): Unit = adminCached.unpersist()
+    // the reverse batch route's cell index ([[ScoutEngine.cellIndex]]):
+    // the snapshot's first batch builds and persists it, close()
+    // releases it. A batch still holding a closed snapshot gets an
+    // unpersisted index, so no block outlives its snapshot.
+    private var cellIndexRdd: ScoutEngine.CellIndex = _
+    private var closed = false
+
+    def cellIndex(cellDeg: Double): ScoutEngine.CellIndex = synchronized {
+      if (cellIndexRdd == null) {
+        cellIndexRdd = ScoutEngine.cellIndex(poiView, cellDeg)
+        if (!closed) cellIndexRdd.persist()
+      }
+      cellIndexRdd
+    }
+
+    /** Release the cached blocks this snapshot owns (the admin cache and
+      * the cell index). Safe while in-flight requests still hold the
+      * DataFrames: the plans stay valid, only the cached blocks
+      * recompute. */
+    def close(): Unit = {
+      adminCached.unpersist()
+      synchronized {
+        closed = true
+        if (cellIndexRdd != null) cellIndexRdd.unpersist(blocking = false)
+      }
+    }
   }
 
   private val state =
@@ -388,28 +411,32 @@ class ScoutEngine(
     texts.indices.map(i => byQid.getOrElse(i.toLong, IndexedSeq.empty))
   }
 
-  /** REVERSE geocode: nearest POI per (lat, lon) point — the spatial
-    * twin of [[bulk]] (the whole point list serves as ONE distributed
-    * job), answered by the density-derived grid join
-    * ([[ReverseGeocode.nearestAuto]] — bounded per-query work at any
-    * corpus density). Returns, per input point in request order, the
-    * nearest POI as a [[Hit]] (score carries 0.0 — ranking is by
-    * distance, which returns alongside in km) or None when no POI lies
-    * within ~a derived cell width of the point. */
+  /** REVERSE geocode: nearest POI per (lat, lon) point over the
+    * snapshot's density-derived grid ([[ReverseGeocode.deriveCellDeg]],
+    * derived once per snapshot — bounded per-point work at any corpus
+    * density). Small lists serve in-process ([[reverseFast]]); the rest
+    * — the spatial twin of [[bulk]] — serve as ONE Spark job over the
+    * snapshot's persisted cell index ([[ScoutEngine.cellIndex]]): every
+    * partition answers every point from its share of the POIs, and the
+    * driver keeps each point's best. Both routes rank with the one
+    * [[graft.core.Nearest.argmin]] kernel, so their answers equal
+    * [[ReverseGeocode.nearest]]'s at the same cell size. Returns, per
+    * input point in request order, the nearest POI as a [[Hit]] (score
+    * carries 0.0 — ranking is by distance, which returns alongside in
+    * km) or None when no POI lies in the point's 3×3 cell
+    * neighbourhood. */
   def reverse(points: Seq[(Double, Double)]): Seq[Option[(Hit, Double)]] =
     reverseFast(points).getOrElse(reverseJob(points))
 
   /** IN-PROCESS reverse fast path (the [[forwardFast]] treatment for
-    * the spatial tier): a single `POST /v1/geocode/reverse` used to pay
-    * the ~200 ms job floor that forward shed in round 10. Small point
-    * lists (≤ [[ScoutEngine.MaxFastReversePoints]]) probe the
-    * snapshot's density-grid cell cache — 3×3 neighborhood lookup +
-    * scalar haversine argmin, bit-equal to the distributed grid join by
-    * construction (same derived cell, same rounding, same tiebreak;
-    * parity spec-pinned). Warm requests launch ZERO Spark jobs; a cold
-    * cell pays one bounded filtered collect. None routes to the job
-    * path: big batches (where the distributed join is the right plan)
-    * and pathological cell density (fetch bound exceeded). */
+    * the spatial tier): small point lists (≤
+    * [[ScoutEngine.MaxFastReversePoints]]) probe the snapshot's
+    * driver-side cell cache — 3×3 neighbourhood lookup + the shared
+    * argmin kernel, so the answers equal the batch job's (parity
+    * spec-pinned). Warm requests launch ZERO Spark jobs; a cold cell
+    * pays one bounded filtered collect. None routes to the batch job:
+    * big batches, out-of-range coordinates, and pathological cell
+    * density (fetch bound exceeded). */
   def reverseFast(points: Seq[(Double, Double)])
       : Option[Seq[Option[(Hit, Double)]]] = {
     if (points.isEmpty) return Some(Seq.empty)
@@ -417,8 +444,8 @@ class ScoutEngine(
     // out-of-range coordinates route to the job path: the packed cell
     // key is collision-free only for |lat|≤90 / |lon|≤180 (a wild
     // point — e.g. lon sent in millidegrees — could pack onto a
-    // legitimate POI cell and return a spurious hit where the grid
-    // join, which joins on the UNpacked cell pair, returns None)
+    // legitimate POI cell and return a spurious hit where the cell
+    // index, keyed by the UNpacked cell pair, returns None)
     if (points.exists { case (la, lo) =>
         la < -90.0 || la > 90.0 || lo < -180.0 || lo > 180.0 ||
           la.isNaN || lo.isNaN }) return None
@@ -430,38 +457,20 @@ class ScoutEngine(
     }))
   }
 
+  /** The batch route of [[reverse]]: one job over the cell index, then
+    * the winners' display columns from the driver row cache. */
   private def reverseJob(points: Seq[(Double, Double)]): Seq[Option[(Hit, Double)]] = {
-    import org.apache.spark.sql.functions.{broadcast, col}
     val b = state.get()
-    import b.poiView
-    if (points.isEmpty) return Seq.empty
-    val pts = spark.createDataFrame(
-      points.zipWithIndex.map { case ((la, lo), i) => (i.toLong, la, lo) }
-    ).toDF("qid", "lat", "lon")
-    val nearest = ReverseGeocode.nearestAuto(pts, poiView)
-    // ≤ one row per point: broadcast them back onto the poi view for
-    // the full Hit surface instead of shuffling the gazetteer
-    val rows = poiView
-      .join(broadcast(nearest), Seq("osm_id"))
-      .select(col("qid"), col("dist_km"), col("osm_id"),
-        org.apache.spark.sql.functions.coalesce(
-          col("name_local"), col("name_en")).as("name"),
-        col("lat"), col("lon"), col("country"), col("state"), col("city"),
-        col("kind"))
-      .collect()
-    val byQid = rows.map { r =>
-      r.getAs[Long]("qid") -> (Hit(
-        name = r.getAs[String]("name"),
-        lat = r.getAs[Double]("lat"),
-        lon = r.getAs[Double]("lon"),
-        country = Option(r.getAs[String]("country")),
-        state = Option(r.getAs[String]("state")),
-        city = Option(r.getAs[String]("city")),
-        osmId = r.getAs[Long]("osm_id"),
-        kind = r.getAs[String]("kind"),
-        score = 0.0), r.getAs[Double]("dist_km"))
-    }.toMap
-    points.indices.map(i => byQid.get(i.toLong))
+    val cellDeg = b.reverseCache.cellDeg
+    val best = ScoutEngine.nearestByIndex(b.cellIndex(cellDeg), points.toArray, cellDeg)
+    val rows = b.rowCache.rows(best.flatMap(_.map(_._2)).distinct)
+      .map(r => r.osmId -> r).toMap
+    best.toIndexedSeq.map(_.flatMap { case (d, id) => rows.get(id).map { r =>
+      (Hit(name = if (r.nameLocal != null) r.nameLocal else r.nameEn,
+        lat = r.lat, lon = r.lon, country = Option(r.country),
+        state = Option(r.state), city = Option(r.city), osmId = r.osmId,
+        kind = r.kind, score = 0.0), d)
+    }})
   }
 
   /** `GET /healthz` analogue (`app.py:116-118`). */
@@ -545,26 +554,73 @@ object ScoutEngine {
       osmId: Long, lat: Double, lon: Double, name: String,
       country: String, state: String, city: String, kind: String)
 
-  /** Points above this route straight to the distributed grid join —
-    * the fast path is for the single-request/small-list serving shape
-    * (the job path amortizes its floor across a real batch anyway). */
+  /** Points above this route straight to the cell-index job — the fast
+    * path is for the single-request/small-list serving shape (the job
+    * spreads a real batch over every core). */
   private[query] val MaxFastReversePoints = 32
+
+  /** A snapshot's reverse cell index: per partition, grid cell → the
+    * POIs of that cell the partition holds. */
+  private[query] type CellIndex =
+    org.apache.spark.rdd.RDD[Map[(Long, Long), GeoCell]]
+
+  /** The cell index of `poiView` at edge `cellDeg`: its (osm_id, lat,
+    * lon) spread round-robin over `defaultParallelism` partitions, so a
+    * batch job runs one task per core over an even share (~24 B per
+    * POI). Lazy; the caller persists it. */
+  private[query] def cellIndex(poiView: DataFrame, cellDeg: Double): CellIndex = {
+    import org.apache.spark.sql.functions.col
+    poiView.select(col("osm_id"), col("lat").cast("double"), col("lon").cast("double"))
+      .rdd.map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+      .repartition(poiView.sparkSession.sparkContext.defaultParallelism)
+      .mapPartitions { it =>
+        val byCell = it.toArray.groupBy { case (_, la, lo) =>
+          (Nearest.cell(la, cellDeg), Nearest.cell(lo, cellDeg)) }
+        Iterator.single(byCell.map { case (k, ps) =>
+          k -> new GeoCell(ps.map(_._1), ps.map(_._2), ps.map(_._3)) })
+      }
+      .setName("reverse cell index")
+  }
+
+  /** One Spark job: each partition of `index` returns, per point, the
+    * best (point, dist_km, osm_id) among its POIs, and the driver keeps
+    * the least by (dist_km, osm_id) — the kernel's own order, so the
+    * reduction is the argmin over all partitions. */
+  private[query] def nearestByIndex(index: CellIndex, points: Array[(Double, Double)],
+                                    cellDeg: Double): Array[Option[(Double, Long)]] = {
+    val found = index.mapPartitions(_.flatMap { cells =>
+      points.indices.iterator.flatMap { i =>
+        val (la, lo) = points(i)
+        val near = Nearest.neighbourhood(la, lo, cellDeg).flatMap(cells.get).toArray
+        Nearest.argmin(la, lo, near).map(f => (i, f.distKm, near(f.cell).ids(f.row)))
+      }
+    }).collect()
+    val best = Array.fill[Option[(Double, Long)]](points.length)(None)
+    for ((i, d, id) <- found) best(i) = best(i) match {
+      case Some((bd, bid)) if bd < d || (bd == d && bid < id) => best(i)
+      case _ => Some((d, id))
+    }
+    best
+  }
+
+  /** One cached cell of the fast path: its POIs' coordinates for the
+    * kernel and, row for row, their display columns. */
+  private[query] final case class RevCell(geo: GeoCell, rows: Array[RevRow])
 
   /** Bounded driver-side CELL cache behind the in-process reverse fast
     * path ([[ScoutEngine.reverseFast]]) — the [[PoiRowCache]] treatment
-    * applied to the density-derived grid of
-    * [[ReverseGeocode.nearestAuto]]: the cell size derives ONCE per
-    * snapshot from the same `deriveCellDeg` aggregate the job path
-    * runs, misses fetch whole 3×3 neighborhoods through ONE filtered
-    * collect over the cached poi view (a packed-cell-key `IN` literal —
-    * codegen, no shuffle), and hits are driver-map lookups — a warm
-    * single-point reverse launches ZERO Spark jobs. Memory is bounded
-    * by `maxCells` × the derived ~64-POI expected occupancy (~30 MB),
-    * flat at any corpus size. The fast path is never approximate: a
-    * fetch whose neighborhoods exceed `maxFetchRows` (pathological
-    * density skew) routes the request to the distributed plan without
-    * caching. Empty cells cache as empty arrays — negative entries, or
-    * every ocean probe would refetch forever. */
+    * applied to the density-derived grid: the cell size derives ONCE
+    * per snapshot ([[ReverseGeocode.deriveCellDeg]]; the batch job's
+    * cell index reads the same value), misses fetch whole 3×3
+    * neighborhoods through ONE filtered collect over the poi view (a
+    * packed-cell-key `IN` literal — codegen, no shuffle), and hits are
+    * driver-map lookups — a warm single-point reverse launches ZERO
+    * Spark jobs. Memory is bounded by `maxCells` × the derived ~64-POI
+    * expected occupancy (~30 MB), flat at any corpus size. The fast
+    * path is never approximate: a fetch whose neighborhoods exceed
+    * `maxFetchRows` (pathological density skew) routes the request to
+    * the batch job without caching. Empty cells cache as empty — negative
+    * entries, or every ocean probe would refetch forever. */
   private[query] final class ReverseCellCache(poiView: DataFrame,
                                               maxCells: Int = 4096,
                                               maxFetchRows: Int = 1 << 15) {
@@ -573,9 +629,9 @@ object ScoutEngine {
     lazy val cellDeg: Double = ReverseGeocode.deriveCellDeg(poiView)
 
     private val cache =
-      new java.util.LinkedHashMap[(Long, Long), Array[RevRow]](256, 0.75f, true) {
+      new java.util.LinkedHashMap[(Long, Long), RevCell](256, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[(Long, Long), Array[RevRow]]): Boolean =
+            e: java.util.Map.Entry[(Long, Long), RevCell]): Boolean =
           size() > maxCells
       }
 
@@ -587,13 +643,9 @@ object ScoutEngine {
         : Option[Seq[Option[(RevRow, Double)]]] = {
       val c = cellDeg // lazy-val init is its own monitor; first touch
       //               pays the one aggregate job OUTSIDE the cache lock
-      val keysPerPoint = points.map { case (la, lo) =>
-        val kx = math.floor(la / c).toLong
-        val ky = math.floor(lo / c).toLong
-        for { dx <- -1L to 1L; dy <- -1L to 1L } yield (kx + dx, ky + dy)
-      }
+      val keysPerPoint = points.map { case (la, lo) => Nearest.neighbourhood(la, lo, c) }
       val wanted = keysPerPoint.flatten.distinct
-      val local = scala.collection.mutable.Map.empty[(Long, Long), Array[RevRow]]
+      val local = scala.collection.mutable.Map.empty[(Long, Long), RevCell]
       // lock ONLY the map probes/installs, never a Spark job: a cold
       // cell's ~200 ms fetch must not serialize concurrent warm
       // zero-job requests behind it (two threads missing the same cell
@@ -607,25 +659,14 @@ object ScoutEngine {
         synchronized { for (k <- missing) cache.put(k, local(k)) }
       }
       Some(points.zip(keysPerPoint).map { case ((qla, qlo), keys) =>
-        var best: RevRow = null
-        var bestD = 0.0
-        for (k <- keys; r <- local(k)) {
-          // bit-parity with the job path: the scalar haversine twin,
-          // the column round's HALF_UP 6-decimal contract, and the
-          // (dist asc, osm_id asc) row_number tiebreak
-          val d = java.math.BigDecimal
-            .valueOf(graft.core.Geo.haversineKm(qla, qlo, r.lat, r.lon))
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-          if (best == null || d < bestD || (d == bestD && r.osmId < best.osmId)) {
-            best = r; bestD = d
-          }
-        }
-        Option(best).map((_, bestD))
+        val cells = keys.map(local).toArray
+        Nearest.argmin(qla, qlo, cells.map(_.geo))
+          .map(f => (cells(f.cell).rows(f.row), f.distKm))
       })
     }
 
     private def fetch(keys: Seq[(Long, Long)],
-                      local: scala.collection.mutable.Map[(Long, Long), Array[RevRow]])
+                      local: scala.collection.mutable.Map[(Long, Long), RevCell])
         : Boolean = {
       import org.apache.spark.sql.functions.{coalesce, col, floor}
       val c = cellDeg
@@ -645,10 +686,12 @@ object ScoutEngine {
       for (k <- keys) {
         // fills `local` only — the caller installs into the LRU under
         // the lock (fetch itself runs a Spark job and must stay outside)
-        local(k) = grouped.getOrElse(pack(k), Array.empty).map { r =>
+        val rs = grouped.getOrElse(pack(k), Array.empty).map { r =>
           RevRow(r.getLong(0), r.getDouble(1), r.getDouble(2), r.getString(3),
             r.getString(4), r.getString(5), r.getString(6), r.getString(7))
         }
+        local(k) = RevCell(
+          new GeoCell(rs.map(_.osmId), rs.map(_.lat), rs.map(_.lon)), rs)
       }
       true
     }

@@ -48,14 +48,22 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
     ex.close()
   }
 
-  private def parseReq(body: String): ForwardReq = {
-    val o = Json.parse(body).asObj
+  private def parseReq(body: Value): ForwardReq = {
+    val o = body.asObj
     ForwardReq(
       candidates = o("candidates").asArr
         .map(c => ForwardCandidate(c.asObj("text").asStr)),
       country = o.get("country").collect { case Str(s) => s },
       cityHint = o.get("city_hint").collect { case Str(s) => s },
-      limit = o.get("limit").collect { case Num(d) => d.toInt }.getOrElse(5))
+      limit = limitOf(o))
+  }
+
+  /** A request's `limit` (default 5), checked here so a negative one is
+    * the client's fault, not a failed Spark plan. */
+  private def limitOf(o: Map[String, Value]): Int = {
+    val limit = o.get("limit").collect { case Num(d) => d.toInt }.getOrElse(5)
+    require(limit >= 0, s"limit must be >= 0, got $limit")
+    limit
   }
 
   private def hitJson(h: Hit): Value = Obj(Map(
@@ -111,25 +119,31 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
     }
   })
 
-  server.createContext("/v1/geocode/forward", new HttpHandler {
-    override def handle(ex: HttpExchange): Unit = {
-      val t0 = System.nanoTime()
-      if (ex.getRequestMethod != "POST") {
-        respond(ex, 405, """{"detail": "Method Not Allowed"}""", t0)
-        return
+  /** A JSON `POST` endpoint in two phases, each with its own fault
+    * class: `parse` turns the body into a request — any failure there
+    * is the client's (422) — and `serve` answers it — any failure there
+    * is the engine's (500). */
+  private def jsonEndpoint[A](path: String)(parse: Value => A)(serve: A => Value): Unit =
+    server.createContext(path, new HttpHandler {
+      override def handle(ex: HttpExchange): Unit = {
+        val t0 = System.nanoTime()
+        def fail(code: Int, e: Exception): Unit = respond(ex, code, write(Obj(Map(
+          "detail" -> Str(Option(e.getMessage).getOrElse(e.getClass.getSimpleName))))), t0)
+        if (ex.getRequestMethod != "POST") {
+          respond(ex, 405, """{"detail": "Method Not Allowed"}""", t0)
+          return
+        }
+        val req = try parse(Json.parse(
+          new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)))
+        catch { case e: Exception => fail(422, e); return }
+        val body = try write(serve(req)) catch { case e: Exception => fail(500, e); return }
+        respond(ex, 200, body, t0)
       }
-      try {
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        val req = parseReq(body)
-        val hits = engine.forward(req)
-        respond(ex, 200, write(Obj(Map("hits" -> Arr(hits.map(hitJson))))), t0)
-      } catch {
-        case e: Exception =>
-          respond(ex, 422, write(Obj(Map("detail" -> Str(
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName))))), t0)
-      }
-    }
-  })
+    })
+
+  jsonEndpoint("/v1/geocode/forward")(parseReq) { req =>
+    Obj(Map("hits" -> Arr(engine.forward(req).map(hitJson))))
+  }
 
   /** BULK endpoint: the reference's forward request shape, list-valued —
     * `{queries:[{text}], limit?}` → `{results:[{text, hits:[...]}]}`,
@@ -137,66 +151,35 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
     * list ([[ScoutEngine.bulk]]), amortizing the per-request job floor
     * the serving profile measured; each entry's hits equal a hint-less
     * single-candidate `/v1/geocode/forward` call (spec-pinned). */
-  server.createContext("/v1/geocode/bulk", new HttpHandler {
-    override def handle(ex: HttpExchange): Unit = {
-      val t0 = System.nanoTime()
-      if (ex.getRequestMethod != "POST") {
-        respond(ex, 405, """{"detail": "Method Not Allowed"}""", t0)
-        return
-      }
-      try {
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        val o = Json.parse(body).asObj
-        val texts = o("queries").asArr.map(q => q.asObj("text").asStr)
-        val limit = o.get("limit").collect { case Num(d) => d.toInt }.getOrElse(5)
-        val results = engine.bulk(texts, limit)
-        respond(ex, 200, write(Obj(Map("results" -> Arr(
-          texts.zip(results).map { case (t, hits) =>
-            Obj(Map("text" -> Str(t), "hits" -> Arr(hits.map(hitJson))))
-          })))), t0)
-      } catch {
-        case e: Exception =>
-          respond(ex, 422, write(Obj(Map("detail" -> Str(
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName))))), t0)
-      }
-    }
-  })
+  jsonEndpoint("/v1/geocode/bulk") { v =>
+    val o = v.asObj
+    (o("queries").asArr.map(q => q.asObj("text").asStr), limitOf(o))
+  } { case (texts, limit) =>
+    Obj(Map("results" -> Arr(texts.zip(engine.bulk(texts, limit)).map { case (t, hits) =>
+      Obj(Map("text" -> Str(t), "hits" -> Arr(hits.map(hitJson))))
+    })))
+  }
 
   /** REVERSE endpoint — the spatial complement the reference lacks:
     * `{points:[{lat, lon}]}` → `{results:[{lat, lon, hit: {...,
-    * dist_km} | null}]}` in request order; the whole point list serves
-    * as one distributed grid join ([[ScoutEngine.reverse]]). */
-  server.createContext("/v1/geocode/reverse", new HttpHandler {
-    override def handle(ex: HttpExchange): Unit = {
-      val t0 = System.nanoTime()
-      if (ex.getRequestMethod != "POST") {
-        respond(ex, 405, """{"detail": "Method Not Allowed"}""", t0)
-        return
-      }
-      try {
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        val o = Json.parse(body).asObj
-        val pts = o("points").asArr.map { p =>
-          val po = p.asObj
-          (po("lat") match { case Num(d) => d; case v => sys.error(s"bad lat: $v") },
-            po("lon") match { case Num(d) => d; case v => sys.error(s"bad lon: $v") })
-        }
-        val results = engine.reverse(pts)
-        respond(ex, 200, write(Obj(Map("results" -> Arr(
-          pts.zip(results).map { case ((la, lo), r) =>
-            Obj(Map("lat" -> Num(la), "lon" -> Num(lo),
-              "hit" -> r.map { case (h, dist) =>
-                val Obj(m) = hitJson(h): @unchecked
-                Obj(m - "score" + ("dist_km" -> Num(dist)))
-              }.getOrElse(Null)))
-          })))), t0)
-      } catch {
-        case e: Exception =>
-          respond(ex, 422, write(Obj(Map("detail" -> Str(
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName))))), t0)
-      }
+    * dist_km} | null}]}` in request order ([[ScoutEngine.reverse]]: a
+    * short list answers in-process from the driver cell cache, a longer
+    * one as one Spark job over the snapshot's cell index). */
+  jsonEndpoint("/v1/geocode/reverse") { v =>
+    v.asObj("points").asArr.map { p =>
+      val po = p.asObj
+      (po("lat") match { case Num(d) => d; case v => sys.error(s"bad lat: $v") },
+        po("lon") match { case Num(d) => d; case v => sys.error(s"bad lon: $v") })
     }
-  })
+  } { pts =>
+    Obj(Map("results" -> Arr(pts.zip(engine.reverse(pts)).map { case ((la, lo), r) =>
+      Obj(Map("lat" -> Num(la), "lon" -> Num(lo),
+        "hit" -> r.map { case (h, dist) =>
+          val Obj(m) = hitJson(h): @unchecked
+          Obj(m - "score" + ("dist_km" -> Num(dist)))
+        }.getOrElse(Null)))
+    })))
+  }
 
   def start(): ScoutServer = { server.start(); this }
   def stop(): Unit = { server.stop(0); pool.shutdown() }
@@ -227,6 +210,8 @@ object ScoutServer {
       |          "200": {"description": "Ranked hits", "content": {"application/json": {
       |            "schema": {"$ref": "#/components/schemas/ForwardResp"}}}},
       |          "422": {"description": "Validation error", "content": {"application/json": {
+      |            "schema": {"$ref": "#/components/schemas/Error"}}}},
+      |          "500": {"description": "Engine error", "content": {"application/json": {
       |            "schema": {"$ref": "#/components/schemas/Error"}}}}}}},
       |    "/v1/geocode/bulk": {
       |      "post": {
@@ -239,6 +224,8 @@ object ScoutServer {
       |            "content": {"application/json": {
       |              "schema": {"$ref": "#/components/schemas/BulkResp"}}}},
       |          "422": {"description": "Validation error", "content": {"application/json": {
+      |            "schema": {"$ref": "#/components/schemas/Error"}}}},
+      |          "500": {"description": "Engine error", "content": {"application/json": {
       |            "schema": {"$ref": "#/components/schemas/Error"}}}}}}},
       |    "/v1/geocode/reverse": {
       |      "post": {
@@ -251,6 +238,8 @@ object ScoutServer {
       |            "content": {"application/json": {
       |              "schema": {"$ref": "#/components/schemas/ReverseResp"}}}},
       |          "422": {"description": "Validation error", "content": {"application/json": {
+      |            "schema": {"$ref": "#/components/schemas/Error"}}}},
+      |          "500": {"description": "Engine error", "content": {"application/json": {
       |            "schema": {"$ref": "#/components/schemas/Error"}}}}}}},
       |    "/healthz": {
       |      "get": {

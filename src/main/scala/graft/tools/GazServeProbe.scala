@@ -58,7 +58,7 @@ object GazServeProbe {
     val eng = graft.query.ScoutEngine.fromPath(spark, current)
 
     // request mix: every 7th gazetteer name (full text) + its first
-    // token, interleaved (the ServeProfile shape)
+    // token, interleaved
     val names = graft.etl.GazetteerBuilder.readPois(spark, current)
       .select("osm_id", "name_local").orderBy("osm_id")
       .collect().map(_.getString(1)).filter(_ != null)

@@ -1,7 +1,7 @@
 package graft.query
 
 import graft.SparkSpec
-import graft.core.Settings
+import graft.core.{Geo, Nearest, Settings}
 import graft.etl.GazetteerBuilder
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
@@ -175,6 +175,142 @@ class ScoutEngineSpec extends SparkSpec {
     // parity holds through the public surface: the job path answers None
     assert(engine.reverse(wild).forall(_.isEmpty),
       "wild coordinates answer None via the grid join")
+  }
+
+  test("reverse batch job: equals ReverseGeocode.nearest and reverseFast on a clustered corpus") {
+    val schema = StructType(Seq(
+      StructField("id", LongType),
+      StructField("name", StringType),
+      StructField("tags", MapType(StringType, StringType)),
+      StructField("wkt", StringType)))
+    def poi(id: Long, lat: Double, lon: Double, name: String = "poi",
+            tags: Map[String, String] = Map.empty) =
+      Row(id, name, tags + ("amenity" -> "cafe"), s"POINT($lon $lat)")
+    // 256 POIs spanning exactly [0,2]×[100,102]: the derived cell edge is
+    // sqrt(4 · 64 / 256) = 1 degree, so integer coordinates are cell edges
+    val special = Seq(
+      poi(7500L, 0.0, 100.0), poi(7501L, 0.0, 102.0), // the bbox corners
+      poi(7502L, 2.0, 100.0), poi(7503L, 2.0, 102.0),
+      poi(7001L, 0.5, 100.5), poi(7000L, 0.5, 100.5), // co-located: exact tie
+      poi(7400L, 1.0, 101.0), // on a cell corner
+      poi(7300L, 0.8, 100.8, name = null, tags = Map("name:en" -> "English Only")))
+    // near-ties: the farther POI of each pair (by 1e-9 degree) has the
+    // LOWER id, so a rounded-distance tie must go to it, not to the raw minimum
+    val nearTie = (0 until 8).map(k => (0.1 + 0.05 * k, 100.15))
+    val nearTies = nearTie.zipWithIndex.flatMap { case ((la, lo), k) =>
+      Seq(poi(7101L + 2 * k, la, lo), poi(7100L + 2 * k, la + 1e-9, lo))
+    }
+    // three clusters; every tenth POI repeats its predecessor's spot
+    val rnd = new scala.util.Random(7)
+    val centres = Seq((1.3, 101.3), (1.7, 101.8), (0.25, 101.6))
+    val spots = (0 until 256 - special.size - nearTies.size).scanLeft((0.0, 0.0)) {
+      case (prev, i) if i % 10 == 9 => prev
+      case (_, i) =>
+        val (cla, clo) = centres(i % centres.size)
+        (math.min(1.99, math.max(0.01, cla + rnd.nextGaussian() * 0.08)),
+          math.min(101.99, math.max(100.01, clo + rnd.nextGaussian() * 0.08)))
+    }.tail
+    val filler = spots.zipWithIndex.map { case ((la, lo), i) => poi(1000L - i, la, lo) }
+    val raw = spark.createDataFrame(
+      spark.sparkContext.parallelize(special ++ nearTies ++ filler, 3), schema)
+    val pois = GazetteerBuilder.buildPois(raw).cache()
+    assert(pois.count() == 256)
+    val cellDeg = ReverseGeocode.deriveCellDeg(pois)
+    assert(cellDeg == 1.0)
+    val eng = new ScoutEngine(spark, pois, GazetteerBuilder.buildAdmin(raw), Settings())
+
+    val edges = for (la <- Seq(0.0, 1.0, 2.0); lo <- Seq(100.0, 100.5, 101.0, 102.0))
+      yield (la, lo)
+    val empty = Seq((5.0, 105.0), (-3.0, 100.5), (0.5, 97.5), (1.0, 98.9))
+    val ties = Seq((0.5003, 100.5004), (0.8001, 100.8001)) ++
+      nearTie.map { case (la, lo) => (la - 0.0001, lo) }
+    val onPois = spots.indices.filter(_ % 7 == 0).map(i => (spots(i)._1 + 1e-4, spots(i)._2))
+    val uniform = Seq.fill(150)((rnd.nextDouble() * 3 - 0.5, 99.5 + rnd.nextDouble() * 3))
+    val pts = edges ++ empty ++ ties ++ onPois ++ uniform
+    assert(pts.size >= 200)
+
+    assert(eng.reverseFast(pts).isEmpty, "a >32-point list must take the batch job")
+    val job = eng.reverse(pts)
+    // the DataFrame plan at the snapshot's cell size
+    import spark.implicits._
+    val truth = ReverseGeocode.nearest(
+        pts.zipWithIndex.map { case ((la, lo), i) => (i.toLong, la, lo) }.toDF("qid", "lat", "lon"),
+        pois, cellDeg)
+      .collect().map(r => r.getLong(0).toInt -> (r.getLong(1), r.getDouble(2))).toMap
+    assert(job.map(_.map { case (h, d) => (h.osmId, d) }) ==
+      pts.indices.map(truth.get), "batch job diverged from ReverseGeocode.nearest")
+    // the fast path, in chunks it accepts
+    val fast = pts.grouped(ScoutEngine.MaxFastReversePoints).flatMap(g => eng.reverseFast(g).get).toSeq
+    assert(fast == job, "batch job diverged from reverseFast")
+
+    val at = pts.zip(job).toMap
+    assert(at((0.5003, 100.5004)).map(_._1.osmId).contains(7000L), "co-located tie goes to the lowest id")
+    val named = at((0.8001, 100.8001)).get._1
+    assert(named.osmId == 7300L && named.name == "English Only")
+    assert(empty.forall(at(_).isEmpty), "an empty 3×3 neighbourhood answers None")
+    // the near-tie pairs: at least one rounds to a tie whose raw minimum
+    // is the higher id, and every pair answers the lower id on a tie
+    val roundingTies = (0 until 8).count { k =>
+      val (qla, qlo) = ties(2 + k)
+      val (la, lo) = nearTie(k)
+      val dNear = Geo.haversineKm(qla, qlo, la, lo)
+      val dFar = Geo.haversineKm(qla, qlo, la + 1e-9, lo)
+      val tie = Nearest.round6(dNear) == Nearest.round6(dFar)
+      assert(at((qla, qlo)).get._1.osmId == (if (tie) 7100L + 2 * k else 7101L + 2 * k))
+      tie && dNear < dFar
+    }
+    assert(roundingTies > 0, "no near-tie pair exercised the rounded tiebreak")
+    eng.close()
+    pois.unpersist()
+  }
+
+  test("reverse batch job: the cell index persists once per snapshot; reload and close release it") {
+    val schema = StructType(Seq(
+      StructField("id", LongType),
+      StructField("name", StringType),
+      StructField("tags", MapType(StringType, StringType)),
+      StructField("wkt", StringType)))
+    def gaz(id: Long, name: String) = {
+      val raw = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+        Row(id, name, Map("amenity" -> "restaurant"), "POINT(101.6869 3.139)"),
+        Row(100L, "Malaysia", Map("boundary" -> "administrative", "admin_level" -> "2"),
+          "POLYGON((99.6 0.8, 119.3 0.8, 119.3 7.4, 99.6 7.4, 99.6 0.8))"))), schema)
+      (GazetteerBuilder.buildPois(raw), GazetteerBuilder.buildAdmin(raw))
+    }
+    val (p1, a1) = gaz(1L, "Monograph Dining")
+    val (p2, a2) = gaz(9L, "Monograph Annex")
+    val sc = spark.sparkContext
+    def added(before: Set[Int]) = sc.getPersistentRDDs.keySet.toSet -- before
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val eng = new ScoutEngine(spark, p1, a1, Settings())
+    val batch = Seq.fill(ScoutEngine.MaxFastReversePoints + 8)((3.14, 101.69))
+    assert(eng.reverse(batch).forall(_.exists(_._1.osmId == 1L)))
+    val index = added(before)
+    assert(index.size == 1 && sc.getPersistentRDDs(index.head).name == "reverse cell index",
+      s"expected exactly the cell index to persist, got ${index.map(sc.getPersistentRDDs)}")
+    // a warm batch is ONE Spark job over the persisted index
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      eng.reverse(batch)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
+      assert(jobs.get() == 1, s"a warm reverse batch launched ${jobs.get()} Spark jobs")
+    } finally sc.removeSparkListener(listener)
+    assert(added(before) == index, "a second batch must reuse the index")
+
+    eng.reload(p2, a2)
+    assert(added(before).isEmpty, "reload must release the old snapshot's index")
+    assert(eng.reverse(batch).forall(_.exists(_._1.osmId == 9L)),
+      "a batch after reload must answer from the new snapshot")
+    assert(added(before).size == 1)
+    eng.close()
+    assert(added(before).isEmpty, "close must release the index")
   }
 
   test("forwardFast engages on a PARTITIONED (CDC-refreshed) snapshot: Some, bit-parity, zero warm jobs") {

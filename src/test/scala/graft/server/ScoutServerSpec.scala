@@ -189,6 +189,36 @@ class ScoutServerSpec extends SparkSpec {
     assert(c2 == 405)
   }
 
+  test("engine failure -> 500 (a Spark job over a deleted gazetteer dir); a bad body stays 422") {
+    val schema = StructType(Seq(
+      StructField("id", LongType),
+      StructField("name", StringType),
+      StructField("tags", MapType(StringType, StringType)),
+      StructField("wkt", StringType)))
+    val raw = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, "Monograph Dining", Map("amenity" -> "restaurant"), "POINT(101.6869 3.139)"),
+      Row(100L, "Malaysia", Map("boundary" -> "administrative", "admin_level" -> "2"),
+        "POLYGON((99.6 0.8, 119.3 0.8, 119.3 7.4, 99.6 7.4, 99.6 0.8))"))), schema)
+    val dir = graft.core.TempDirs.create("graft-gone-gaz") + "/gaz"
+    GazetteerBuilder.write(spark, raw, dir)
+    val eng = ScoutEngine.fromPath(spark, dir)
+    val srv = new ScoutServer(eng, port = 0).start()
+    try {
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(dir))
+      // the first reverse derives the snapshot's cell size: a Spark job
+      // over the now-missing pois files
+      val (code, body, _) = http("POST", "/v1/geocode/reverse",
+        """{"points":[{"lat": 3.14, "lon": 101.69}]}""", srv.boundPort)
+      assert(code == 500 && Json.parse(body).asObj.contains("detail"), s"$code: $body")
+      val (c2, b2, _) = http("POST", "/v1/geocode/reverse",
+        """{"points":[{"lat": "x", "lon": 101.69}]}""", srv.boundPort)
+      assert(c2 == 422 && b2.contains("bad lat"), s"$c2: $b2")
+      val (c3, b3, _) = http("POST", "/v1/geocode/forward",
+        """{"candidates":[{"text":"monograph"}],"limit":-1}""", srv.boundPort)
+      assert(c3 == 422 && b3.contains("limit"), s"$c3: $b3")
+    } finally { srv.stop(); eng.close() }
+  }
+
   test("soak: concurrent forward+reverse over HTTP across a reload and a concurrent index maintain") {
     // the r12 gap: ScoutEngineSpec drives the ENGINE across a reload,
     // but the HTTP layer (thread pool, Server-Timing, JSON codec) had
