@@ -1,10 +1,10 @@
 package graft
 
 import graft.queries.Registry
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times every declared query at the
-  * SF directory in `SPARK_GRAFT_SF_DIR` and prints ONE JSON line.
+  * SF directory in `SPARK_GRAFT_SF_DIR` and prints per-query chunk
+  * lines, then one totals JSON line.
   *
   * `value` is the wall-clock total over the full declared inventory;
   * `headline_total` isolates the SURVEY §2.9 core (g1–g8, r1–r10) that
@@ -41,6 +41,14 @@ object Bench {
     }.toSeq
   }
 
+  /** Run `df` to completion into the `noop` sink. A timed `count()`
+    * lets Catalyst prune every projected column (and any sort without a
+    * limit), so the bench would time a plan that never evaluates the
+    * query's expressions; the sink consumes every output column, the
+    * same work the DuckDB oracle's `fetchall` does. */
+  def drain(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   private val Headline = Set(
     "g1_canon", "g2_token_scan", "g3_area_top1", "g4_bbox_scan",
     "g5_importance", "g6_kind_boost", "g7_haversine", "g8_forward_geocode",
@@ -51,14 +59,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Boot.master(SparkSession.builder(), s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.limit.initialNumPartitions", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Boot.session("graft-bench", s"local[$cpus]", 32,
+      "spark.sql.limit.initialNumPartitions" -> "64")
 
     // Warmup: scheduler, codegen, parquet reader, UDF serialization.
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -76,7 +78,7 @@ object Bench {
       .filter(q => only.forall(_.contains(q.name))).map { q =>
       graft.queries.Q.benchSetupNanos.set(0L)
       val t0 = System.nanoTime()
-      try q.run(spark, sfDir).count()
+      try drain(q.run(spark, sfDir))
       catch { case e: Throwable =>
         failed += q.name
         System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")

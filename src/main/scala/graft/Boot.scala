@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Master selection + executor-JVM wiring shared by every entry point.
+/** The session bootstrap shared by every entry point, tool and spec:
+  * master selection, executor-JVM wiring and the session settings all
+  * of them run with.
   *
   * `SPARK_GRAFT_MASTER=local-cluster[2,8,4096]` runs the engine with
   * executors in SEPARATE JVMs (Spark's standalone-in-a-box test
@@ -33,6 +35,26 @@ object Boot {
     "java.base/sun.nio.ch", "java.base/sun.nio.cs",
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
+
+  /** The one SparkSession bootstrap. Fixed for every caller: the
+    * `SPARK_GRAFT_MASTER` override ([[master]]), UI off, the Graft SQL
+    * extensions, UTC session time and WARN logging. A caller supplies
+    * only what really differs: its app name, default master, shuffle
+    * width and any extra conf. `getOrCreate` semantics — an already
+    * active session is returned, with these confs applied to it where
+    * Spark allows. */
+  def session(app: String, defaultMaster: String, shufflePartitions: Int,
+              conf: (String, String)*): SparkSession = {
+    val b = master(SparkSession.builder(), defaultMaster)
+      .appName(app)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+    val spark = conf.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Apply the (possibly overridden) master to `b`; when the override
     * is a local-cluster, also wire the executor JVMs. */

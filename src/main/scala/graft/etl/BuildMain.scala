@@ -37,13 +37,8 @@ object BuildMain {
     }
     val settings =
       if (args.length > 2) Settings.load(args(2)) else Settings.load("config.toml")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-build")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Boot.session("graft-build",
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]", 8)
     val ran = run(spark, args(0), settings,
       outPath = if (args.length > 1) Some(args(1)) else None,
       cliArgs = args.toSeq)

@@ -258,7 +258,7 @@ object GazetteerBuilder {
     // admin are independent legs — overlapped (guide §2.6); meta stays
     // LAST because it is the idempotent-build gate (`overwrite = false`
     // probes meta existence), so a crashed build can never look complete
-    parallel2(
+    parallelSides(
       () => {
         pois
           .repartitionByRange(poisPartitions, col("lat"), col("lon"))
@@ -692,7 +692,7 @@ object GazetteerBuilder {
     // joins below enforce. On a quiet 32-core driver this folds three
     // job floors into the slowest one; at scale it overlaps three
     // independent I/O legs of one batch.
-    val writtenParts = parallel3(
+    val writtenParts = parallelSides(
       () => writePoolGenerations(spark, root, merged, m.pkWidth, gen),
       () => { graft.ext.TrigramStore.append(deltaPois, storeDir(root),
         deleteIds = delIds, upsertIds = upsertIds); () },
@@ -742,15 +742,6 @@ object GazetteerBuilder {
         }
     } finally pool.shutdown()
   }
-
-  /** Two-leg form (ADVICE r18): the initial-build path overlaps a
-    * single side leg — no phantom third thread. */
-  private def parallel2[T](main: () => T, b: () => Unit): T =
-    parallelSides(main, b)
-
-  private def parallel3[T](main: () => T, b: () => Unit,
-                           c: () => Unit): T =
-    parallelSides(main, b, c)
 
   /** The CURRENT snapshot's applied-transaction frontier for `tag`
     * (None when the root has no versions, no manifest, or no entry) —

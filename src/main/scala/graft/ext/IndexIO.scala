@@ -45,34 +45,6 @@ private[ext] object IndexIO {
     * pay next to an actual filesystem call. */
   @volatile private[ext] var crashHook: () => Unit = () => ()
 
-  // ---- driver-section timing (round 18: driver-gap attribution) ------
-  // Wall-nanos per protocol section, accumulated ACROSS THREADS when
-  // SPARK_GRAFT_SECTIONS=1 — `ConcInflationProbe` diffs sequential vs
-  // concurrent per-section totals to locate which driver-side protocol
-  // section serializes past ~4 concurrent lifecycle jobs. Off by
-  // default: one env read at class-init, zero per-call cost.
-  private[ext] val sectionNanos =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
-  private val sectionsOn = sys.env.get("SPARK_GRAFT_SECTIONS").contains("1")
-  @inline private def section[T](name: String)(body: => T): T =
-    if (!sectionsOn) body
-    else {
-      val t0 = System.nanoTime()
-      try body
-      finally {
-        sectionNanos
-          .computeIfAbsent(name, _ => new java.util.concurrent.atomic.LongAdder)
-          .add(System.nanoTime() - t0)
-        ()
-      }
-    }
-  private[ext] def sectionSecondsAndReset(): Seq[(String, Double)] = {
-    import scala.jdk.CollectionConverters._
-    val out = sectionNanos.asScala.toSeq
-      .map { case (k, v) => k -> v.sum() / 1e9 }.sortBy(-_._2)
-    sectionNanos.clear()
-    out
-  }
   private[ext] def crashTick(): Unit = crashHook()
 
   /** TEST-ONLY interleaving hook, invoked at the top of [[commitShard]]
@@ -328,7 +300,7 @@ private[ext] object IndexIO {
     * subdirectories, Hive partition-dir naming so a plain
     * `spark.read.parquet(root)` discovers them). Driver-side directory
     * listing — one RPC, never a data read. */
-  def shardIds(spark: SparkSession, tableRoot: String): Seq[Int] = section("listing:shardIds") {
+  def shardIds(spark: SparkSession, tableRoot: String): Seq[Int] = {
     val root = new org.apache.hadoop.fs.Path(tableRoot)
     val fs = fsOf(spark, tableRoot)
     if (!fs.exists(root)) Seq.empty
@@ -357,7 +329,7 @@ private[ext] object IndexIO {
   /** Recursive delete (shard-reconcile helper). Missing path is a
     * no-op; a failed delete throws — leaving a half-reconciled index
     * silent would defeat the repair. */
-  def deleteDir(spark: SparkSession, path: String): Unit = section("fsop:deleteDir") {
+  def deleteDir(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = fsOf(spark, path)
     crashTick()
@@ -409,7 +381,7 @@ private[ext] object IndexIO {
     * normal one-file parquet dir — `spark.read.parquet` and the shard
     * protocol read it exactly like a Spark write. */
   def writeIdShard(spark: SparkSession, dir: String, colName: String,
-                   ids: Array[Long]): Unit = section("fsop:writeIdShard") {
+                   ids: Array[Long]): Unit = {
     crashTick()
     val conf = spark.sparkContext.hadoopConfiguration
     val dirPath = new org.apache.hadoop.fs.Path(dir)
@@ -543,7 +515,7 @@ private[ext] object IndexIO {
     * full-index staging). On a rename-atomic filesystem a reader sees
     * the shard fully or not at all — there is no aside/restore dance
     * because nothing pre-existing is touched. */
-  def publishShard(spark: SparkSession, staging: String, destShard: String): Unit = section("fsop:publishShard") {
+  def publishShard(spark: SparkSession, staging: String, destShard: String): Unit = {
     val fs = fsOf(spark, destShard)
     val dest = new org.apache.hadoop.fs.Path(destShard)
     if (fs.exists(dest))
@@ -572,7 +544,7 @@ private[ext] object IndexIO {
                   enforceLease: Boolean = false,
                   verifyTables: Seq[String] = Nil,
                   maintLockNonce: String = "",
-                  tags: Seq[String] = Nil): Unit = section("fsop:commitShard") {
+                  tags: Seq[String] = Nil): Unit = {
     preCommitHook()
     // APPEND commits (enforceLease=true) verify their lease before the
     // marker rename: an append that outran appendLeaseMs may have had
@@ -907,7 +879,7 @@ private[ext] object IndexIO {
     * join the floor computation so a claim never collides with a
     * pre-claims crash orphan that published table shards without a
     * marker. */
-  def claimShardId(spark: SparkSession, root: String, tables: Seq[String]): Int = section("fsop:claimShardId") {
+  def claimShardId(spark: SparkSession, root: String, tables: Seq[String]): Int = {
     requireSupportedFormat(spark, root)
     val fs = fsOf(spark, root)
     var attempts = 0
@@ -959,7 +931,7 @@ private[ext] object IndexIO {
     * (single-maintainer), so the steady-state crawl loop keeps claims
     * bounded by {ids ≥ maxCommitted} ∪ leased instead of growing
     * forever. */
-  def gcClaims(spark: SparkSession, root: String): Unit = section("fsop:gcClaims") {
+  def gcClaims(spark: SparkSession, root: String): Unit = {
     val committed = shardIds(spark, s"$root/commits")
     if (committed.isEmpty) return
     val maxCommitted = committed.max
@@ -1068,7 +1040,7 @@ private[ext] object IndexIO {
       case None => !fs.exists(dst) && fs.rename(src, dst)
     }
 
-  def acquireMaintLock(spark: SparkSession, root: String): String = section("lock:acquireMaint") {
+  def acquireMaintLock(spark: SparkSession, root: String): String = {
     if (maintLockMs <= 0L) return ""
     if (isNonAtomicRenameScheme(root)) {
       if (sys.props.get("graft.maint.lock.allowNonAtomic").contains("1")) {
@@ -1329,7 +1301,7 @@ private[ext] object IndexIO {
   /** Total bytes under a path (0 if missing) — the size input to
     * size-tiered compaction. One driver-side content summary, no data
     * read. */
-  def dirBytes(spark: SparkSession, path: String): Long = section("listing:dirBytes") {
+  def dirBytes(spark: SparkSession, path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = fsOf(spark, path)
     if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
@@ -1353,7 +1325,7 @@ private[ext] object IndexIO {
     * [[appendLeaseMs]] — the same lease the shard reconcile honors. A
     * dir that vanishes mid-check was just published/cleaned by its
     * owner: skipped. */
-  def gcStaging(spark: SparkSession, root: String): Unit = section("fsop:gcStaging") {
+  def gcStaging(spark: SparkSession, root: String): Unit = {
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val fs = fsOf(spark, root)
     val now = System.currentTimeMillis()
@@ -1428,7 +1400,7 @@ private[ext] object IndexIO {
     * before. Falls back to plain inference if no data file is found
     * (never expected for a published table). */
   def readTable(spark: SparkSession, root: String,
-                table: String): org.apache.spark.sql.DataFrame = section("read:readTable") {
+                table: String): org.apache.spark.sql.DataFrame = {
     val key = (root, table)
     val cached = schemaCache.get(key)
     if (cached != null) return spark.read.schema(cached).parquet(s"$root/$table")

@@ -4,8 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Read-only introspection facade over the (package-private) commit
   * protocol for measurement tools outside `graft.ext` — probes report
-  * shard equilibria and replay-guard state without widening
-  * [[IndexIO]]'s visibility. */
+  * shard equilibria without widening [[IndexIO]]'s visibility. */
 object IndexInspect {
 
   /** Live committed shard count (post-REPLACES) — the LSM equilibrium
@@ -13,22 +12,11 @@ object IndexInspect {
   def liveShardCount(spark: SparkSession, root: String): Int =
     IndexIO.liveCommittedIds(spark, root).size
 
-  /** Idempotency tags live on the index (the streaming replay guard). */
-  def committedTags(spark: SparkSession, root: String): Set[String] =
-    IndexIO.committedTags(spark, root)
-
   /** A live committed table, `shard` partition column included — the
-    * probe surface for shard-placement assertions (e.g. WriterRaceProbe
+    * probe surface for shard-placement assertions (`WriterRaceProbe`
     * proving no doc id landed in two live shards). */
   def readLiveCommitted(spark: SparkSession, root: String,
                         table: String): org.apache.spark.sql.DataFrame =
     IndexIO.readCommitted(spark, root, table,
       IndexIO.liveCommittedIds(spark, root))
-
-  /** Per-section driver-protocol wall seconds since the last call,
-    * accumulated across threads — populated only when
-    * `SPARK_GRAFT_SECTIONS=1` ([[graft.tools.ConcInflationProbe]]'s
-    * attribution surface). Sorted descending; resets the counters. */
-  def sectionSecondsAndReset(): Seq[(String, Double)] =
-    IndexIO.sectionSecondsAndReset()
 }

@@ -283,7 +283,7 @@ object MinHashIndex {
     // buckets) of scheduling floor to persist a few hundred KB of
     // 8-longs-per-doc signatures. Bounded collect + scalar minhash twin
     // + parquet Group writes; falls back past the bound.
-    if (partitions == 1 && driverAppendEnabled &&
+    if (partitions == 1 &&
         appendDriver(tokens, path, numHashes, rowsPerBand, next)) {
       IndexIO.commitShard(spark, path, next, enforceLease = true,
         verifyTables = Seq("signatures", "buckets"))
@@ -328,15 +328,6 @@ object MinHashIndex {
     * bounded job (two narrow columns — a few MB) and sign in
     * microseconds on the driver. */
   private val MaxDriverPairs = 1 << 18
-
-  /** Kill switch for the driver append route (`graft.mh.driver.append=0`
-    * or env `GRAFT_MH_DRIVER_APPEND=0`) — the
-    * [[graft.streaming.StreamOps]] volatile-checkpoint precedent: the
-    * optimized path is the default, the switch exists for A/B
-    * measurement and emergency rollback. */
-  private def driverAppendEnabled: Boolean =
-    sys.props.get("graft.mh.driver.append").forall(_ != "0") &&
-      sys.env.get("GRAFT_MH_DRIVER_APPEND").forall(_ != "0")
 
   /** SMALL-BATCH driver route for [[append]] (the
     * [[TextIndex.writeShardTablesDriver]] treatment applied to MinHash):

@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Child-JVM harness for `tools/StreamReplayProbe` (the kill-the-JVM
@@ -18,20 +17,10 @@ object ReplayHarness {
   private val Terms = Seq("fox", "spark", "jugs")
   private def doc(i: Long) = (i, s"fox spark jugs doc$i tok${i % 5}")
 
-  private def session(): SparkSession = {
-    val s = graft.Boot.master(SparkSession.builder(), "local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Layout under `work`: src/ (generation parquet files), ckpt/
     * (durable checkpoint), idx/ (the index). */
   def child(work: String, kill: Int, resume: Boolean): Unit = {
-    val spark = session()
+    val spark = graft.Boot.session("graft-replay", "local[4]", 4)
     import spark.implicits._
     val src = s"$work/src"; val ckpt = s"$work/ckpt"; val idx = s"$work/idx"
     val gens = Seq(10L until 20L, 20L until 30L, 30L until 40L)

@@ -193,8 +193,8 @@ object Fixtures {
 
   /** The gazetteer CDC feed batches (g16/g17/st_gaz_cdc) MATERIALIZED
     * once per (session, sf): a production change feed ARRIVES as a
-    * table (a crawl diff, an edit log — the `tools/GazRefreshProbe`
-    * accounting, promoted to the queries), so the measured refresh work
+    * table (a crawl diff, an edit log — the sf10 refresh accounting in
+    * SCALE.md §Round 17, promoted to the queries), so the measured refresh work
     * reads delta-sized parquet instead of recomputing a corpus join per
     * invocation. Returns the three batch dirs (upserts+deletes,
     * inserts, re-inserts). */

@@ -662,8 +662,8 @@ object GeocodeQueries {
     * recompute of the snapshot pins that partitions carried forward BY
     * REFERENCE hash-match a rebuild (g15's uniform 30% feed keeps the
     * every-partition-touched case covered; `GazetteerDeltaSpec` pins
-    * the mixed-op equality at the unit level; `tools/GazRefreshProbe`
-    * is the sf10 cost artifact — 5.7× over the full rebuild). */
+    * the mixed-op equality at the unit level; SCALE.md §Round 17
+    * records the sf10 cost — 5.7× over the full rebuild). */
   val g16 = Q("g16_gaz_delta",
     (s, dir) => {
       val raw = Fixtures.derivedRaw(s, dir, withWikidata = false)

@@ -137,7 +137,7 @@ object Relational3 {
     * distinct counts swap to `approx_count_distinct` (bounds-proven in
     * `ExtOpsSpec`); everything else is already partial-aggregatable.
     *
-    * MEASURED floor (round 13, `tools/R29Probe` at sf0.1, warm): scan
+    * MEASURED floor (round 13, sf0.1, warm): scan
     * 0.16 s, plain multi-agg 0.19 s, one high-cardinality distinct
     * 0.30 s, three 0.50 s, all six 0.65 s — the cost is the exact
     * distinct aggregation itself (each column adds 150 k rows through

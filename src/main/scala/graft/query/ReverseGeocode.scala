@@ -97,7 +97,8 @@ object ReverseGeocode {
     * still bounds per-query work by the dense cells' occupancy — the
     * bbox shrinks no further than the full spread, so extreme mixes
     * deserve a per-region partition before this call (documented, not
-    * solved here). `tools/G12Probe` measures both shapes. */
+    * solved here). SCALE.md's round-7 reverse-geocode density probe
+    * records both shapes. */
   def nearestAuto(points: DataFrame, pois: DataFrame,
                   targetPerCell: Long = 64,
                   minCellDeg: Double = 0.01,

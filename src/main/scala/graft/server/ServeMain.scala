@@ -45,17 +45,12 @@ object ServeMain {
       if (args.length > 2) Settings.load(args(2)) else Settings.load("config.toml")
     val path = if (args.nonEmpty) args(0) else settings.dbPath
     val port = if (args.length > 1) args(1).toInt else 8000
-    val spark = graft.Boot.master(SparkSession.builder(),
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Boot.session("graft-serve",
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]", 8)
     val (server, follower, _) = launch(spark, path, port, settings)
     println(s"graft serving on :${server.boundPort} (POST /v1/geocode/forward, " +
-      s"GET /healthz)${if (follower.isDefined) s" — following CURRENT of $path" else ""}")
+      s"/v1/geocode/bulk, /v1/geocode/reverse; GET /healthz)" +
+      (if (follower.isDefined) s" — following CURRENT of $path" else ""))
     Thread.currentThread().join()
   }
 }

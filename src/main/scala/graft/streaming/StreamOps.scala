@@ -406,17 +406,14 @@ object StreamOps {
   }
 
   /** A fresh checkpoint dir for one bounded drain — tmpfs-backed when
-    * available. Pair with [[dropCheckpoint]] after the drain.
-    * `-Dgraft.volatile.ckpt=0` disables (A/B seam — with it off, Spark
-    * falls back to its own temp-dir checkpoint). LOCAL MASTER ONLY:
-    * state stores are written by executors, and on a multi-node master
-    * a driver-local /dev/shm path resolves to different physical
-    * storage per node — state recovery between micro-batches would read
-    * the wrong (or no) files. Non-local sessions get None and Spark's
-    * normal checkpoint behavior. */
+    * available. Pair with [[dropCheckpoint]] after the drain. LOCAL
+    * MASTER ONLY: state stores are written by executors, and on a
+    * multi-node master a driver-local /dev/shm path resolves to
+    * different physical storage per node — state recovery between
+    * micro-batches would read the wrong (or no) files. Non-local
+    * sessions get None and Spark's normal checkpoint behavior. */
   def volatileCheckpointDir(spark: SparkSession): Option[String] =
-    if (!spark.sparkContext.isLocal ||
-      sys.props.get("graft.volatile.ckpt").contains("0")) None
+    if (!spark.sparkContext.isLocal) None
     else volatileRoot.map(r => s"$r/${java.util.UUID.randomUUID().toString.take(12)}")
 
   /** Delete a drain's checkpoint dir (tmpfs is a shared bounded

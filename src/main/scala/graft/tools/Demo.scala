@@ -3,7 +3,7 @@ package graft.tools
 import graft.core.Settings
 import graft.etl.GazetteerBuilder
 import graft.query.{ForwardCandidate, ForwardReq, ScoutEngine}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** End-to-end library demo: synthesize a raw OSM-shaped table, build the
@@ -13,12 +13,7 @@ import org.apache.spark.sql.types._
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = graft.Boot.master(SparkSession.builder(), "local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Boot.session("graft-demo", "local[4]", 4)
 
     val schema = StructType(Seq(
       StructField("id", LongType),

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.queries.{Registry, Tables}
 import graft.streaming.StreamOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Executor-LOSS resilience under local-cluster (VERDICT r14 task 2):
@@ -71,13 +71,7 @@ object ExecutorKillProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Boot.master(SparkSession.builder(), "local-cluster[2,8,4096]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Boot.session("graft-executor-kill", "local-cluster[2,8,4096]", 32)
     spark.range(1000000).selectExpr("sum(id)").collect()
     awaitExecutors(2)
     println(s"executors up: ${executorHandles().map(_.pid()).mkString(", ")}")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.queries.Registry
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for a list of registry queries into
   * files — the plan evidence the optimization rounds commit under
@@ -23,14 +22,8 @@ object PlanDump {
     val names = args(2).split(",").toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Boot.master(SparkSession.builder(), s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.limit.initialNumPartitions", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Boot.session("graft-plan-dump", s"local[$cpus]", 32,
+      "spark.sql.limit.initialNumPartitions" -> "64")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {
       val q = Registry.all.find(_.name == name)

@@ -3,13 +3,12 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
-/** Generic Spark-JOB-count decomposition for any registry query — the
-  * [[LifecycleProfile]] lens aimed at arbitrary names. The lifecycle
-  * tier's cost is scheduler round-trips; this shows how many each
-  * query pays and (verbose) the stage names, so a cut can be targeted
-  * instead of guessed.
+/** Generic Spark-JOB-count decomposition for any registry query. The
+  * lifecycle tier's cost is scheduler round-trips; this shows how many
+  * each query pays and (verbose) the stage names, so a cut can be
+  * targeted instead of guessed. Each query is drained through the
+  * `noop` sink, as in [[graft.Bench]], so every output column runs.
   *
   *   SPARK_GRAFT_JP_VERBOSE=1 sbt "runMain graft.tools.QueryJobProfile [sfDir] [passes] [q1,q2,..]"
   */
@@ -19,14 +18,8 @@ object QueryJobProfile {
     val passes = if (args.length > 1) args(1).toInt else 2
     val names = (if (args.length > 2) args(2).split(",").toSeq
       else Seq("st_interval_join", "st_enrich", "st_sessions", "st_stream_dedup"))
-    val spark = graft.Boot.master(SparkSession.builder(), "local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.limit.initialNumPartitions", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Boot.session("graft-query-job-profile", "local[32]", 32,
+      "spark.sql.limit.initialNumPartitions" -> "64")
     val jobs = new AtomicInteger(0)
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val verbose = sys.env.get("SPARK_GRAFT_JP_VERBOSE").contains("1")
@@ -55,13 +48,13 @@ object QueryJobProfile {
     })
     val qs = names.map(n => graft.queries.Registry.all.find(_.name == n)
       .getOrElse(sys.error(s"unknown query $n")))
-    qs.foreach(_.run(spark, sfDir).count()) // warm
+    qs.foreach(q => graft.Bench.drain(q.run(spark, sfDir))) // warm
     for (p <- 1 to passes; q <- qs) {
       org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       sites.clear()
       val j0 = jobs.get()
       val t0 = System.nanoTime()
-      q.run(spark, sfDir).count()
+      graft.Bench.drain(q.run(spark, sfDir))
       org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       println(f"pass $p ${q.name}%-24s ${(System.nanoTime() - t0) / 1e6}%8.1f ms  ${jobs.get() - j0}%3d jobs")
       if (verbose && p == passes) {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Fixture scale-up: writes an N×-enlarged copy of an sf directory by
@@ -61,15 +61,11 @@ object ScaleUp {
     }
     val (src, dst) = (args(0), args(1))
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = graft.Boot.master(SparkSession.builder(), s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", "32")
-      // events.ts is TIMESTAMP(NANOS): read AND write as raw nano longs
-      // so the copy stays loadable through Tables.events unchanged
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // events.ts is TIMESTAMP(NANOS): read AND write as raw nano longs
+    // so the copy stays loadable through Tables.events unchanged
+    val spark = graft.Boot.session("graft-scaleup",
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", 32,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     // optional 4th arg: comma-list restricting which tables to write (a
     // targeted probe fixture — e.g. the sf100 shuffle probe only needs
     // documents + embeddings, not a 600M-row lineitem copy). A table

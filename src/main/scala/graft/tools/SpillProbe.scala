@@ -76,14 +76,8 @@ object SpillProbe {
     val copies = if (args.length > 1) args(1).toInt else 48
 
     // ---- phase A: comfortable memory ----
-    val a = SparkSession.builder().master("local[16]")
-      .appName("graft-spill-comfortable")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    a.sparkContext.setLogLevel("WARN")
+    val a = graft.Boot.session("graft-spill-comfortable", "local[16]", 32,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     val expect = queries(a, sfDir, copies).map { case (name, run) =>
       val t0 = System.nanoTime()
       val cs = run()
@@ -94,14 +88,8 @@ object SpillProbe {
     a.stop()
 
     // ---- phase B: constrained executors, fat partitions ----
-    val b = graft.Boot.master(SparkSession.builder(), "local-cluster[2,2,512]")
-      .appName("graft-spill-constrained")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    b.sparkContext.setLogLevel("WARN")
+    val b = graft.Boot.session("graft-spill-constrained", "local-cluster[2,2,512]", 8,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     val spilledDisk = new AtomicLong(0)
     val spilledMem = new AtomicLong(0)
     b.sparkContext.addSparkListener(new SparkListener {

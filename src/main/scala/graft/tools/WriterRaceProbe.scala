@@ -39,18 +39,9 @@ object WriterRaceProbe {
       .toDF("doc_id", "text")
   }
 
-  private def session(app: String): SparkSession =
-    graft.Boot.master(SparkSession.builder(), "local[4]")
-      .appName(app)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-
   /** The second process: append `n` batches starting at id `lo`. */
   private def workerMain(root: String, lo: Long, n: Int): Unit = {
-    val spark = session("graft-writer-race-worker")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Boot.session("graft-writer-race-worker", "local[4]", 4)
     for (b <- 0 until n)
       TextIndex.append(batch(spark, lo + b * Docs), root, partitions = 1)
     // one cross-process MAINTAIN-vs-MAINTAIN attempt: the lock must
@@ -80,8 +71,7 @@ object WriterRaceProbe {
       return
     }
     val batches = args.headOption.map(_.toInt).getOrElse(6)
-    val spark = session("graft-writer-race")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Boot.session("graft-writer-race", "local[4]", 4)
     import spark.implicits._
 
     val root = graft.core.TempDirs.create("graft-writer-race-") + "/idx"

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * skew-split applies to joins, not aggs — splitting a groupBy hot key
   * would break the agg), or the round-9 case where the skew sits under
   * another operator AQE won't re-shuffle. Measured arms at sf0.1 in
-  * SCALE.md §Round-15 (tools/AqeSkewProbe).
+  * SCALE.md §Round-15 "AQE skew-join vs the manual salt".
   */
 class AqeSkewSpec extends SparkSpec {
 
