@@ -383,22 +383,14 @@ private[ext] object IndexIO {
   def writeIdShard(spark: SparkSession, dir: String, colName: String,
                    ids: Array[Long]): Unit = {
     crashTick()
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirPath.getFileSystem(conf)
-    if (fs.exists(dirPath)) fs.delete(dirPath, true)
-    fs.mkdirs(dirPath)
-    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      s"message ids { required int64 $colName; }")
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-        new org.apache.hadoop.fs.Path(dirPath, "part-00000.parquet"), conf))
-      .withType(schema).withConf(conf).build()
-    try ids.foreach { id =>
-      val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
-      g.add(colName, id)
-      w.write(g)
-    } finally w.close()
+    DriverParquet.writeGroups(spark, dir, s"message ids { required int64 $colName; }") {
+      (schema, w) =>
+        ids.foreach { id =>
+          val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
+          g.add(colName, id)
+          w.write(g)
+        }
+    }
   }
 
   /** Driver-side read of the tombstone shards under `root/deletes/` —
@@ -1314,8 +1306,8 @@ private[ext] object IndexIO {
     * append that died mid-write). All are invisible to readers — this
     * reclaims disk, nothing else — but at 100 TB an abandoned compact
     * staging is a full index copy, so the writers that already rewrite
-    * history ([[TextIndex.compact]] and twins) sweep them. `dest-old-*`
-    * asides are NOT touched: a crash inside [[publish]]'s two renames
+    * history ([[ShardedIndex]] and [[TrigramStore]] folds) sweep them.
+    * `dest-old-*` asides are NOT touched: a crash inside [[publish]]'s two renames
     * leaves the previous index there for recovery.
     *
     * CONCURRENCY: a staging dir ACTIVELY being written by a live

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Persisted MinHash/LSH text-dedup index — the text twin of
+/** Persisted MinHash/LSH text-dedup index — the text counterpart of
   * [[VectorIndex]]: compute signatures ONCE, store them plus their
   * band buckets as tables, and serve candidate-pair queries from the
   * stored layout. [[Dedup.minhashLshPairs]] is the build-inline form;
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * gram-sorted-postings lever). Publication is one directory rename
   * ([[IndexIO]]) — readers never see signatures from one build paired
   * with buckets from another — and incremental [[append]]s follow the
-  * [[TextIndex]] shard-commit protocol: table shards publish first, a
+  * [[ShardedIndex]] shard-commit protocol: table shards publish first, a
   * `commits/shard=K` marker publishes LAST, and [[pairs]] prunes both
   * tables to committed shard ids, so a mid-append crash is invisible
   * to readers and safe to retry.
@@ -84,16 +84,11 @@ object MinHashIndex {
     // evict caller-owned cached blocks.
     val sigCached = sig.select("*")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      sigCached
-        .repartitionByRange(partitions, col("id"))
-        .sortWithinPartitions("id")
-        .write.mode(SaveMode.Overwrite).parquet(s"$staging/signatures/shard=0")
-      bands(sigCached, numHashes, rowsPerBand)
-        .repartitionByRange(partitions, col("band"), col("bucket"))
-        .sortWithinPartitions("band", "bucket", "id")
-        .write.mode(SaveMode.Overwrite).parquet(s"$staging/buckets/shard=0")
-    } finally sigCached.unpersist(false)
+    try writeShard({
+        case "signatures" => sigCached
+        case "buckets" => bands(sigCached, numHashes, rowsPerBand)
+      }, staging, 0, partitions)
+    finally sigCached.unpersist(false)
     // the shard-commit marker ships with the build (whole staging dir
     // publishes in one rename), so every index born here is marker-aware
     IndexIO.commitShard(spark, staging, 0)
@@ -157,81 +152,37 @@ object MinHashIndex {
   private def storedWidth(sig: DataFrame): Int =
     sig.schema.fieldNames.count(_.matches("m\\d+"))
 
-  /** Restore exactly the last committed state after a crash anywhere in
-    * [[append]] (the [[TextIndex]] commit-marker reconcile, round-8
-    * ported here): drop table shards with no commit marker (crash
-    * before the marker rename — invisible to marker-aware readers but
-    * poisonous to a retry, which would duplicate those ids' signature
-    * rows and make [[pairs]]' scoring join emit duplicate rows, and to
-    * [[compact]], which would bake the orphan into `shard=0`
-    * permanently) and markers with missing table shards (external
-    * tampering — serving a bucket hit without its signature rows
-    * silently LOSES pairs, the worse failure). A retried append after
-    * any crash re-signs its batch into a fresh consistent shard.
-    *
-    * Legacy pre-marker indexes (no `commits/` table) keep the old
-    * pairwise reconcile: the old publish order (signatures first) makes
-    * sig-without-bucket the only reachable crash orphan. */
-  private def reconcileShards(spark: SparkSession, path: String): Unit = {
-    val committed = IndexIO.committedIds(spark, path).toSet
-    if (committed.isEmpty) {
-      val sig = IndexIO.shardIds(spark, s"$path/signatures").toSet
-      val bkt = IndexIO.shardIds(spark, s"$path/buckets").toSet
-      (sig diff bkt).foreach(k =>
-        IndexIO.deleteDir(spark, s"$path/signatures/shard=$k"))
-      (bkt diff sig).foreach(k =>
-        IndexIO.deleteDir(spark, s"$path/buckets/shard=$k"))
-    } else {
-      // keep only live-committed-AND-complete shards: an uncommitted
-      // table shard is a crash leftover; a committed-but-incomplete one
-      // is tampering whose surviving table shards must ALSO go (they are
-      // permanent orphans — ids are claimed once, never reused); a
-      // committed-but-REPLACED one is a [[compactSmall]] whose
-      // post-commit cleanup crashed. Markers delete FIRST (publish order
-      // mirrored: marker last in, first out) so a crash mid-reconcile
-      // can never leave a committed id with missing table shards for
-      // readers to serve. SAFE under concurrent appends (round 11):
-      // shard ids under an active appender lease ([[IndexIO.leasedIds]])
-      // are never touched, and commits list BEFORE tables so an id that
-      // commits mid-reconcile has its tables visible to the later
-      // listing — see the [[TextIndex]] reconcile note.
-      val leased = IndexIO.leasedIds(spark, path)
-      val live = IndexIO.liveCommittedIds(spark, path).toSet
-      val sig = IndexIO.shardIds(spark, s"$path/signatures").toSet
-      val bkt = IndexIO.shardIds(spark, s"$path/buckets").toSet
-      val keep = live intersect (sig intersect bkt)
-      (committed diff keep).filterNot(leased).foreach(k =>
-        IndexIO.deleteDir(spark, s"$path/commits/shard=$k"))
-      (sig diff keep).filterNot(leased).foreach(k =>
-        IndexIO.deleteDir(spark, s"$path/signatures/shard=$k"))
-      (bkt diff keep).filterNot(leased).foreach(k =>
-        IndexIO.deleteDir(spark, s"$path/buckets/shard=$k"))
-    }
+  /** The one shard write of build, append and both folds: signatures
+    * id-sorted, buckets (band, bucket, id)-sorted and range-laid on
+    * (band, bucket); `partitions == 1` is the SMALL-BATCH route
+    * (coalesce, no bounds-sampling job). */
+  private def writeShard(rows: String => DataFrame, stage: String, k: Int,
+                         partitions: Int): Unit = {
+    IndexIO.sortedLayout(rows("signatures"), partitions, Seq("id"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$stage/signatures/shard=$k")
+    IndexIO.sortedLayout(rows("buckets").select("id", "band", "bucket"),
+        partitions, Seq("band", "bucket", "id"), Seq("band", "bucket"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$stage/buckets/shard=$k")
   }
 
+  /** This index's shape for the shared protocol ([[ShardedIndex]]): two
+    * sharded tables keyed by `id`, documents counted on signatures. */
+  private val family = ShardedIndex.Family("MinHashIndex",
+    Seq("signatures", "buckets"), "signatures", "id", writeShard)
+
   /** Append new documents' signatures to a stored index WITHOUT a full
-    * rebuild — the incremental-crawl refresh path (the [[VectorIndex.append]]
-    * twin). New (id, tok) rows are signed with the same hash family and
-    * written as ONE NEW shard of each table (`signatures/shard=K`,
-    * `buckets/shard=K`): existing shard files are never read, rewritten,
-    * or moved — at 100 TB an append costs only the new crawl batch, not
-    * the corpus. Band keys for the new shard derive from its JUST-WRITTEN
-    * signatures, and bands(A ∪ B) = bands(A) ∪ bands(B) (the key is a
-    * pure per-row function), so the union-of-shards view is identical to
-    * a rebuild's.
-    *
-    * Publish protocol (the [[TextIndex.append]] commit-marker design,
-    * shared via [[IndexIO.commitShard]]): both table shards rename in
-    * first, then a `commits/shard=K` marker renames in LAST —
-    * its arrival is what makes the shard visible, since every reader
-    * prunes both tables to committed shard ids (a partition-column
-    * filter — directory pruning, no data read). A crash anywhere before
-    * the marker leaves garbage that is invisible to readers and that
-    * the next append/compact [[reconcileShards]] away, so a retry
-    * re-signs its batch into a fresh consistent shard instead of
-    * duplicating ids; a reader can never observe a partially-appended
-    * index — not even the benign-but-visible orphan window the
-    * pre-marker two-rename publish admitted.
+    * rebuild — the incremental-crawl refresh path. New (id, tok) rows
+    * are signed with the same hash family and written as ONE NEW
+    * committed shard of each table ([[ShardedIndex.append]]): existing
+    * shard files are never read, rewritten, or moved — at 100 TB an
+    * append costs only the new crawl batch, not the corpus. Band keys
+    * are a pure per-row function of the signature, so
+    * bands(A ∪ B) = bands(A) ∪ bands(B) and the union-of-shards view is
+    * identical to a rebuild's. Every reader prunes both tables to
+    * committed shard ids, so a crash anywhere before the marker is
+    * invisible and a retry re-signs its batch into a fresh shard. An
+    * index in the pre-shard flat or pre-marker layout is refused until
+    * one [[compact]] migrates it.
     *
     * Equivalence: pairs after append(write(A), B) ≡ pairs after
     * write(A ∪ B) for disjoint id sets — spec-pinned, along with
@@ -241,25 +192,12 @@ object MinHashIndex {
     * from two partial token sets unless the split is exact) — callers
     * route re-crawled docs through [[Dedup.snapshotDiff]] and rebuild
     * or retire those ids first. Many tiny appends accumulate shards —
-    * [[compact]] folds them back to one. */
+    * [[maintain]] folds them back. */
   def append(tokens: DataFrame, path: String, numHashes: Int,
              rowsPerBand: Int, partitions: Int = 8): Unit = {
     require(numHashes % rowsPerBand == 0,
       s"numHashes=$numHashes must be a multiple of rowsPerBand=$rowsPerBand")
     val spark = tokens.sparkSession
-    // an index written by the pre-shard flat layout cannot take shard
-    // dirs next to its part-files (unreadable mixed depths); compact()
-    // reads either layout and republishes sharded, so route through it
-    require(!IndexIO.hasFlatFiles(spark, s"$path/signatures") &&
-        !IndexIO.hasFlatFiles(spark, s"$path/buckets"),
-      s"index at $path uses the pre-shard flat layout; " +
-        "run MinHashIndex.compact(spark, path) once to migrate before appending")
-    // marker-aware appends need a commits table to sequence against; an
-    // index written before the marker layout migrates the same way the
-    // flat layout did — one compact republishes it marker-aware
-    require(IndexIO.committedIds(spark, path).nonEmpty,
-      s"index at $path predates the commit-marker layout; " +
-        "run MinHashIndex.compact(spark, path) once to migrate before appending")
     // a numHashes that disagrees with the stored signature width would
     // silently band the new shard with different keys; fail loudly
     // against the stored schema instead (id + m0..m{n-1} + shard)
@@ -267,61 +205,20 @@ object MinHashIndex {
     require(stored == numHashes,
       s"stored index at $path has $stored minhashes, " +
         s"append called with numHashes=$numHashes")
-    // committed-but-incomplete shards (tampering) are repaired eagerly —
-    // safe under concurrency, unlike the full reconcile (compact-only)
-    IndexIO.dropIncompleteCommitted(spark, path, Seq("signatures", "buckets"))
-    // atomic shard-id claim ([[IndexIO.claimShardId]]): concurrent
-    // appenders each win a distinct id (losers retry), ids are never
-    // reused, and no full reconcile runs here — so parallel ingest jobs
-    // cannot clobber each other's staging or delete each other's
-    // in-flight shards; crash garbage stays reader-invisible until the
-    // next compact reclaims it
-    val next = IndexIO.claimShardId(spark, path, Seq("signatures", "buckets"))
-    // SMALL-BATCH driver route (the [[TextIndex]] writeShardTablesDriver
-    // treatment): a streaming crawl generation is a few thousand docs,
-    // and the Spark path pays a persist + two write jobs (signatures,
-    // buckets) of scheduling floor to persist a few hundred KB of
-    // 8-longs-per-doc signatures. Bounded collect + scalar minhash twin
-    // + parquet Group writes; falls back past the bound.
-    if (partitions == 1 &&
-        appendDriver(tokens, path, numHashes, rowsPerBand, next)) {
-      IndexIO.commitShard(spark, path, next, enforceLease = true,
-        verifyTables = Seq("signatures", "buckets"))
-      return
+    ShardedIndex.append(spark, path, family) { (stage, k) =>
+      if (partitions != 1 || !appendDriver(tokens, stage, k, numHashes, rowsPerBand)) {
+        // persist, as in [[buildStaged]]: the signature write
+        // materializes the cache; the band branches read it instead of
+        // re-running the tokenize→min aggregate
+        val newSig = Dedup.minhashSignature(tokens, numHashes)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try writeShard({
+            case "signatures" => newSig
+            case "buckets" => bands(newSig, numHashes, rowsPerBand)
+          }, stage, k, partitions)
+        finally newSig.unpersist(false)
+      }
     }
-    val sigStaging = IndexIO.shardStagingFor(s"$path/signatures")
-    // persist, as in [[buildStaged]]: the signature write materializes
-    // the cache; the band branches read it instead of re-running the
-    // tokenize→min aggregate or re-reading the just-written parquet
-    val newSig = Dedup.minhashSignature(tokens, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // partitions == 1 is the SMALL-BATCH route (streaming crawl
-      // generations): coalesce keeps the same globally-sorted one-file
-      // layout without repartitionByRange's extra bounds-sampling job
-      (if (partitions == 1) newSig.coalesce(1)
-       else newSig.repartitionByRange(partitions, col("id")))
-        .sortWithinPartitions("id")
-        .write.mode(SaveMode.Overwrite).parquet(sigStaging)
-      // refresh the lease AFTER the signature write (the slow phase —
-      // it materializes the whole tokenize→min aggregate), BEFORE the
-      // first publish: the lease then bounds the publish/bands/commit
-      // tail, not the batch write — see [[TextIndex.append]]
-      IndexIO.heartbeatClaim(spark, path, next)
-      IndexIO.publishShard(spark, sigStaging, s"$path/signatures/shard=$next")
-      val bktStaging = IndexIO.shardStagingFor(s"$path/buckets")
-      val newBands = bands(newSig, numHashes, rowsPerBand)
-      (if (partitions == 1) newBands.coalesce(1)
-       else newBands.repartitionByRange(partitions, col("band"), col("bucket")))
-        .sortWithinPartitions("band", "bucket", "id")
-        .write.mode(SaveMode.Overwrite).parquet(bktStaging)
-      IndexIO.publishShard(spark, bktStaging, s"$path/buckets/shard=$next")
-    } finally newSig.unpersist(false)
-    // marker LAST: this rename is the commit point; verifyTables closes
-    // the check-to-rename TOCTOU (marker withdrawn if the tables were
-    // reclaimed before it landed)
-    IndexIO.commitShard(spark, path, next, enforceLease = true,
-      verifyTables = Seq("signatures", "buckets"))
   }
 
   /** Driver-route bound: ≤ this many (id, tok) pair rows collect in one
@@ -330,22 +227,23 @@ object MinHashIndex {
   private val MaxDriverPairs = 1 << 18
 
   /** SMALL-BATCH driver route for [[append]] (the
-    * [[TextIndex.writeShardTablesDriver]] treatment applied to MinHash):
-    * collect the (id, tok) batch under a bound checked BY the limit
-    * itself (`limit(max+1)` — over it, nothing more materializes and the
-    * caller falls back to the distributed write), compute signatures
-    * with the SCALAR minhash twin ([[Dedup.tokenHashStr]] ≡
-    * [[Dedup.tokenHash]], spec-pinned; same affine family, same int64
-    * arithmetic — multiset min equals the groupBy min bit-for-bit), and
-    * write both table shards with the parquet Group API in the same
-    * id-sorted / (band,bucket,id)-sorted layouts the Spark route lays
-    * down — readers and the shard protocol can't tell. ONE bounded
-    * Spark job (the collect) replaces persist + two write jobs of
-    * scheduling floor. Returns whether it handled the write (rows with
-    * NULL id/tok route back to the Spark path, which defines their
-    * semantics). */
-  private def appendDriver(tokens: DataFrame, path: String, numHashes: Int,
-                           rowsPerBand: Int, next: Int): Boolean = {
+    * [[TextIndex]] driver-writer treatment applied to MinHash): a
+    * streaming crawl generation is a few thousand docs, and the Spark
+    * route pays a persist + two write jobs of scheduling floor to
+    * persist a few hundred KB of signatures. Collect the (id, tok)
+    * batch under a bound checked BY the limit itself (`limit(max+1)` —
+    * over it, nothing more materializes and the caller falls back to
+    * the distributed write), compute signatures with the SCALAR minhash
+    * ([[Dedup.tokenHashStr]] ≡ [[Dedup.tokenHash]], spec-pinned; same
+    * affine family, same int64 arithmetic — multiset min equals the
+    * groupBy min bit-for-bit), and write both table shards under
+    * `stage` with the parquet Group API in the same id-sorted /
+    * (band,bucket,id)-sorted layouts the Spark route lays down — readers
+    * and the shard protocol can't tell. Returns whether it handled the
+    * write (rows with NULL id/tok route back to the Spark path, which
+    * defines their semantics). */
+  private def appendDriver(tokens: DataFrame, stage: String, k: Int,
+                           numHashes: Int, rowsPerBand: Int): Boolean = {
     val spark = tokens.sparkSession
     val probe = tokens
       .select(col("id").cast("long").as("id"), col("tok").cast("string"))
@@ -368,25 +266,7 @@ object MinHashIndex {
       }
     }
     val byId = mins.toArray.sortBy(_._1)
-    val conf = spark.sparkContext.hadoopConfiguration
-    def groupFile(dir: String, schemaStr: String)(
-        write: (org.apache.parquet.schema.MessageType,
-          org.apache.parquet.hadoop.ParquetWriter[
-            org.apache.parquet.example.data.Group]) => Unit): Unit = {
-      val schema =
-        org.apache.parquet.schema.MessageTypeParser.parseMessageType(schemaStr)
-      val dirPath = new org.apache.hadoop.fs.Path(dir)
-      val fs = dirPath.getFileSystem(conf)
-      if (fs.exists(dirPath)) fs.delete(dirPath, true)
-      fs.mkdirs(dirPath)
-      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-          new org.apache.hadoop.fs.Path(dirPath, "part-00000.parquet"), conf))
-        .withType(schema).withConf(conf).build()
-      try write(schema, w) finally w.close()
-    }
-    val sigStaging = IndexIO.shardStagingFor(s"$path/signatures")
-    groupFile(sigStaging,
+    DriverParquet.writeGroups(spark, s"$stage/signatures/shard=$k",
       "message signatures { optional int64 id; " +
         (0 until numHashes).map(i => s"optional int64 m$i; ").mkString + "}") {
       (schema, w) =>
@@ -407,8 +287,7 @@ object MinHashIndex {
     } yield (id, b,
       (b.toString +: (b * rowsPerBand until (b + 1) * rowsPerBand)
         .map(i => arr(i).toString)).mkString("_"))
-    val bktStaging = IndexIO.shardStagingFor(s"$path/buckets")
-    groupFile(bktStaging,
+    DriverParquet.writeGroups(spark, s"$stage/buckets/shard=$k",
       """message buckets { optional int64 id;
         |  optional int32 band; optional binary bucket (UTF8); }"""
         .stripMargin) { (schema, w) =>
@@ -421,199 +300,68 @@ object MinHashIndex {
         w.write(g)
       }
     }
-    // same publish tail as the Spark route: heartbeat (the lease bounds
-    // the publish→commit tail), both shards in, caller lands the marker
-    IndexIO.heartbeatClaim(spark, path, next)
-    IndexIO.publishShard(spark, sigStaging, s"$path/signatures/shard=$next")
-    IndexIO.publishShard(spark, bktStaging, s"$path/buckets/shard=$next")
     true
   }
 
   /** TOMBSTONE a set of documents (retired crawls, takedowns — at
     * 100 TB removal must not cost a rebuild): `ids` (an `id` column,
     * the token-relation naming) lands as ONE NEW shard under
-    * `deletes/` via the [[append]] mechanics (staged hidden dir,
-    * single publish rename, existing files untouched). [[pairs]]
-    * anti-joins the tombstone set out of the bucket table BEFORE the
-    * self-join, so a deleted doc contributes no candidate pairs —
-    * identical results to an index built without those docs
-    * (oracle-pinned). Tombstones are INDEX-WIDE, not sequenced
-    * against shards: a deleted id stays invisible even if a later
-    * [[append]] re-ingests it, until [[compact]] — which physically
-    * drops tombstoned rows and clears the set — resets the index.
-    * This is also the sanctioned route for RE-CRAWLED docs (the
-    * duplicate-id hazard in [[append]]'s contract): delete the stale
-    * id, compact, append the fresh crawl. */
-  def delete(ids: DataFrame, path: String): Unit = {
-    require(ids.columns.contains("id"),
-      s"delete ids need an id column, got ${ids.columns.mkString(", ")}")
-    IndexIO.publishIdShard(ids, path, "id")
-  }
+    * `deletes/` ([[ShardedIndex.delete]]), existing files untouched.
+    * [[pairs]] anti-joins the tombstone set out of the bucket table
+    * BEFORE the self-join, so a deleted doc contributes no candidate
+    * pairs — identical results to an index built without those docs
+    * (oracle-pinned). Tombstones are INDEX-WIDE, not sequenced against
+    * shards: a deleted id stays invisible even if a later [[append]]
+    * re-ingests it, until [[compact]] — which physically drops
+    * tombstoned rows and clears the set — resets the index. This is
+    * also the sanctioned route for RE-CRAWLED docs (the duplicate-id
+    * hazard in [[append]]'s contract): delete the stale id, compact,
+    * append the fresh crawl. */
+  def delete(ids: DataFrame, path: String): Unit =
+    ShardedIndex.delete(ids, path, "id", "id")
 
-  /** The stored tombstone set, if any shard exists — None keeps the
-    * no-deletes serving plan free of an empty-relation join. */
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    if (IndexIO.shardIds(spark, s"$path/deletes").nonEmpty)
-      Some(IndexIO.readTable(spark, path, "deletes").select("id"))
-    else None
+  /** Fold all shards of both tables back into one (`shard=0`) and
+    * republish the WHOLE index ([[ShardedIndex.compact]]): tombstoned
+    * rows drop for good from BOTH tables and the tombstone set clears.
+    * Pair results are unchanged, only layout (and the band self-join's
+    * file-read count) improves. Also the migration of a pre-shard flat
+    * or pre-marker layout. EXCLUSIVE of appends (the root rename) — a
+    * live crawl loop compacts via [[maintain]]/[[compactAllInPlace]]. */
+  def compact(spark: SparkSession, path: String, partitions: Int = 8): Unit =
+    ShardedIndex.compact(spark, path, family, partitions)
 
-  /** Fold all shards of both tables back into one (`shard=0`) — the
-    * compaction counterpart to [[append]]'s accumulate-shards contract.
-    * Tombstoned rows ([[delete]]) are dropped for good from BOTH tables
-    * and the tombstone set is cleared (the staging dir carries no
-    * `deletes/`). Rewrites history, so it goes through the full staging +
-    * aside-protected rename ([[IndexIO.publish]]); pair results are
-    * unchanged, only layout (and the band self-join's file-read count)
-    * improves. EXCLUSIVE of appends (the root rename) — the migration /
-    * claim-reset op; a live crawl loop compacts via
-    * [[maintain]]/[[compactAllInPlace]]. */
-  def compact(spark: SparkSession, path: String, partitions: Int = 8): Unit = {
-    // orphans (crash between append's two publishes) must not be baked
-    // into the compacted shard=0 — drop them first; flat pre-shard
-    // layouts have no shard dirs, so this is a no-op for migration
-    reconcileShards(spark, path)
-    IndexIO.gcStaging(spark, path) // reclaim crashed-build staging dirs
-    val staging = IndexIO.stagingFor(path)
-    val dels = tombstones(spark, path)
-    // prune to LIVE committed shards when markers exist: a young
-    // uncommitted orphan survives the lease-honoring reconcile above
-    // and must not be baked into shard=0 (legacy pre-marker layouts
-    // have no markers — read whole, as before)
-    val live = IndexIO.liveCommittedIds(spark, path)
-    def tbl(name: String) =
-      if (live.nonEmpty) IndexIO.readCommitted(spark, path, name, live)
-      else IndexIO.readTable(spark, path, name)
-    val sig = tbl("signatures")
-    IndexIO.sortedLayout(
-        IndexIO.subtractTombstones(spark, path,
-          sig.select(sig.columns.filterNot(_ == "shard").map(col).toSeq: _*),
-          "id", "id"),
-        partitions, Seq("id"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$staging/signatures/shard=0")
-    IndexIO.sortedLayout(
-        IndexIO.subtractTombstones(spark, path,
-          tbl("buckets").select("id", "band", "bucket"), "id", "id"),
-        partitions, Seq("band", "bucket", "id"), Seq("band", "bucket"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$staging/buckets/shard=0")
-    // compact is also the pre-marker → marker-layout migration (the
-    // flat-layout precedent): the republished index always carries its
-    // commit marker, so appends work on it afterwards
-    IndexIO.commitShard(spark, staging, 0)
-    IndexIO.publish(spark, staging, path)
-  }
-
-  /** SIZE-TIERED incremental compaction (the [[TextIndex.compactSmall]]
-    * protocol): fold ONLY shards that are small (both tables' bytes ≤
+  /** SIZE-TIERED incremental compaction ([[ShardedIndex.compactTiered]]):
+    * fold ONLY shards that are small (both tables' bytes ≤
     * `maxShardBytes`) or tombstone-heavy (≥ `tombstoneFrac` of the
     * shard's signature rows deleted) into one new shard, committed with
-    * a REPLACES marker — one atomic rename swaps the fold set out of
-    * the live id set; every other shard's files stay byte-identical.
+    * a REPLACES marker; every other shard's files stay byte-identical.
     * Tombstones inside folded shards drop physically; the tombstone SET
     * clears only on a full compaction ([[compact]] or
     * [[compactAllInPlace]]). Returns the folded shard ids
     * (empty = nothing worth folding). */
   def compactSmall(spark: SparkSession, path: String, maxShardBytes: Long,
                    partitions: Int = 8, tombstoneFrac: Double = 0.5): Seq[Int] =
-    compactTiered(spark, path, Some(maxShardBytes), partitions, tombstoneFrac)
+    ShardedIndex.compactTiered(spark, path, family, Some(maxShardBytes),
+      partitions, tombstoneFrac)
 
-  /** Full compaction WITHOUT the root-replacing rename (the
-    * [[TextIndex.compactAllInPlace]] twin): folds ALL live shards into
-    * one new shard under the existing root via a REPLACES marker and
-    * clears the tombstone shards observed at entry. [[maintain]]'s
-    * full-compact route — safe under concurrent appends, unlike
-    * [[compact]]'s whole-root rename. Returns the folded shard ids. */
+  /** Full compaction WITHOUT the root-replacing rename: folds ALL live
+    * shards into one new shard under the existing root via a REPLACES
+    * marker and clears the tombstone shards observed at entry.
+    * [[maintain]]'s full-compact route — safe under concurrent appends,
+    * unlike [[compact]]'s whole-root rename. Returns the folded shard
+    * ids. */
   def compactAllInPlace(spark: SparkSession, path: String,
                         partitions: Int = 8): Seq[Int] =
-    compactTiered(spark, path, None, partitions, 0.5)
+    ShardedIndex.compactTiered(spark, path, family, None, partitions, 0.5)
 
-  private def compactTiered(spark: SparkSession, path: String,
-                            maxShardBytes: Option[Long], partitions: Int,
-                            tombstoneFrac: Double): Seq[Int] = {
-    // maintainer mutual exclusion — see [[TextIndex]] compactTiered
-    val lockNonce = IndexIO.acquireMaintLock(spark, path)
-    try compactTieredLocked(spark, path, maxShardBytes, partitions,
-      tombstoneFrac, lockNonce)
-    finally IndexIO.releaseMaintLock(spark, path, lockNonce)
-  }
-
-  private def compactTieredLocked(spark: SparkSession, path: String,
-                                  maxShardBytes: Option[Long], partitions: Int,
-                                  tombstoneFrac: Double,
-                                  lockNonce: String): Seq[Int] = {
-    reconcileShards(spark, path)
-    IndexIO.gcStaging(spark, path)
-    IndexIO.gcClaims(spark, path) // bound historical claim dirs (single-maintainer)
-    val tables = Seq("signatures", "buckets")
-    // observed BEFORE the live-shard listing — only these may clear on
-    // fold-all (a concurrently-landing tombstone shard stays applied;
-    // the ordering makes a tombstone targeting a later-committed shard
-    // provably a delete-before-append, so clearing cannot resurrect —
-    // see the [[TextIndex]] compactTiered note)
-    val obsDels = IndexIO.shardIds(spark, s"$path/deletes")
-    val live = IndexIO.liveCommittedIds(spark, path)
-    require(live.nonEmpty,
-      s"index at $path has no committed shards; compactSmall needs the marker layout")
-    val dels = tombstones(spark, path)
-    val fold = maxShardBytes match {
-      case None => live
-      case Some(bytes) =>
-        val small = live.filter(k =>
-          tables.map(t => IndexIO.dirBytes(spark, s"$path/$t/shard=$k")).sum <= bytes)
-        val heavy: Seq[Int] = dels match {
-          case Some(d) =>
-            IndexIO.readCommitted(spark, path, "signatures", live)
-              .select(col("shard"), col("id"))
-              .join(d.withColumn("t", lit(1)), Seq("id"), "left")
-              .groupBy("shard").agg(count(lit(1)).as("total"),
-                sum(coalesce(col("t"), lit(0))).as("dead"))
-              .filter(col("dead").cast("double") >=
-                lit(tombstoneFrac) * col("total").cast("double"))
-              .select("shard").collect().map(_.getInt(0)).toSeq
-          case None => Nil
-        }
-        val f = (small ++ heavy).distinct.sorted
-        if (f.length < 2 && heavy.isEmpty) return Nil
-        f
-    }
-    val next = IndexIO.claimShardId(spark, path, tables)
-    IndexIO.heartbeatMaintLock(spark, path, lockNonce)
-    def liveRows(table: String, cols: Seq[String]) =
-      IndexIO.subtractTombstones(spark, path,
-        IndexIO.readCommitted(spark, path, table, fold)
-          .select(cols.map(col): _*), "id", "id")
-    val sigCols = IndexIO.readTable(spark, path, "signatures")
-      .columns.filterNot(_ == "shard").toSeq
-    val sigStaging = IndexIO.shardStagingFor(s"$path/signatures")
-    IndexIO.sortedLayout(liveRows("signatures", sigCols), partitions, Seq("id"))
-      .write.mode(SaveMode.Overwrite).parquet(sigStaging)
-    IndexIO.publishShard(spark, sigStaging, s"$path/signatures/shard=$next")
-    val bktStaging = IndexIO.shardStagingFor(s"$path/buckets")
-    IndexIO.sortedLayout(liveRows("buckets", Seq("id", "band", "bucket")),
-        partitions, Seq("band", "bucket", "id"), Seq("band", "bucket"))
-      .write.mode(SaveMode.Overwrite).parquet(bktStaging)
-    IndexIO.publishShard(spark, bktStaging, s"$path/buckets/shard=$next")
-    // the commit point: one rename swaps the fold set for the new shard
-    IndexIO.commitShard(spark, path, next, replaces = fold,
-      maintLockNonce = lockNonce)
-    for (k <- fold) IndexIO.deleteDir(spark, s"$path/commits/shard=$k")
-    for (t <- tables; k <- fold) IndexIO.deleteDir(spark, s"$path/$t/shard=$k")
-    if (maxShardBytes.isEmpty)
-      for (k <- obsDels) IndexIO.deleteDir(spark, s"$path/deletes/shard=$k")
-    fold
-  }
-
-  /** Compaction trigger policy ([[IndexMaintenance]]): call after each
-    * crawl/ingest generation; keeps live shards ≤ `maxShards` and the
-    * dead-row fraction < `tombstoneFrac` by choosing (nothing |
+  /** Compaction trigger policy ([[ShardedIndex.maintain]]): call after
+    * each crawl/ingest generation; keeps live shards ≤ `maxShards` and
+    * the dead-row fraction < `tombstoneFrac` by choosing (nothing |
     * size-tiered [[compactSmall]] | fold-all [[compactAllInPlace]])
-    * from shard stats. Safe under concurrent appends — see
-    * [[IndexMaintenance]]. */
+    * from shard stats. Safe under concurrent appends. */
   def maintain(spark: SparkSession, path: String, maxShards: Int = 8,
                tombstoneFrac: Double = 0.3, partitions: Int = 8): MaintainReport =
-    IndexMaintenance.run(spark, path, Seq("signatures", "buckets"), "signatures", "id",
-      maxShards, tombstoneFrac,
-      () => compactAllInPlace(spark, path, partitions),
-      bytes => compactSmall(spark, path, bytes, partitions, tombstoneFrac))
+    ShardedIndex.maintain(spark, path, family, maxShards, tombstoneFrac, partitions)
 
   /** All candidate pairs from the stored index: docs sharing any band
     * bucket, scored by agreeing-minhash fraction — identical semantics
@@ -635,7 +383,7 @@ object MinHashIndex {
     val sig = pruned("signatures")
     // tombstones cut BEFORE the self-join: a deleted doc contributes no
     // candidates from either side, so one anti-join covers both
-    val bk = tombstones(spark, path)
+    val bk = ShardedIndex.tombstones(spark, path, "id")
       .foldLeft(pruned("buckets"))(
         _.join(_, Seq("id"), "left_anti"))
     val cand = bk.as("l").join(bk.as("r"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted inverted text index serving BM25 retrieval — the keyword
-  * twin of [[VectorIndex]] (vectors) and [[MinHashIndex]] (dedup): the
+  * counterpart of [[VectorIndex]] (vectors) and [[MinHashIndex]] (dedup): the
   * corpus is tokenized ONCE at build, and every query after that is a
   * probe of stored postings, never a re-scan of document text.
   * (Reference counterpart: scout serves its text predicates by
@@ -26,19 +26,18 @@ import org.apache.spark.sql.functions._
   *    constants pre-aggregated so serving never scans doclens; shard
   *    rows sum exactly (INT64) to the rebuild's values.
   *
-  * Shard-commit protocol (shared by all three indexes via
-  * [[IndexIO.commitShard]]; it originated here because with THREE
-  * tables no publish order is benign — a postings shard without its
-  * stats shard mis-scores every query against stale corpus constants):
-  * appends are transactional — all table shards publish first
-  * (each an atomic staged rename), then a `commits/shard=K`
-  * marker publishes LAST, and every reader prunes each table to
-  * committed shard ids (a partition-column `IN` — directory pruning,
-  * no data read). A crash anywhere before the marker leaves invisible
-  * garbage that the next [[append]]/[[compact]] reconciles away; a
-  * reader can never observe a partially-appended index. This is the
-  * manifest-pointer design object-store table formats use, scoped to
-  * one marker file per shard.
+  * Shard-commit protocol ([[ShardedIndex]], shared with [[VectorIndex]]
+  * and [[MinHashIndex]]; with THREE tables no publish order is benign —
+  * a postings shard without its stats shard mis-scores every query
+  * against stale corpus constants): appends are transactional — all
+  * table shards publish first (each an atomic staged rename), then a
+  * `commits/shard=K` marker publishes LAST, and every reader prunes
+  * each table to committed shard ids (a partition-column `IN` —
+  * directory pruning, no data read). A crash anywhere before the marker
+  * leaves invisible garbage that the next [[compact]]/[[compactSmall]]
+  * reconciles away; a reader can never observe a partially-appended
+  * index. This is the manifest-pointer design object-store table
+  * formats use, scoped to one marker file per shard.
   */
 object TextIndex {
 
@@ -94,26 +93,26 @@ object TextIndex {
     val spark = docs.sparkSession
     val staging = IndexIO.stagingFor(path)
     writeShardTables(docs, staging, 0, partitions, withPositions)
-    commitShard(spark, staging, 0)
+    IndexIO.commitShard(spark, staging, 0)
     IndexIO.publish(spark, staging, path)
   }
 
   /** Build and publish a NEW VERSION under a versioned root — the
-    * object-store-safe twin of [[write]], completing the three-index
-    * parity with [[MinHashIndex.writeVersioned]] /
-    * [[VectorIndex.writeVersioned]]: every rebuild lands in an
-    * immutable `v{N}` directory and a one-line CURRENT pointer flips to
-    * it, so a reader ([[bm25TopKCurrent]]) can never observe a
-    * partially-copied index even where directory renames are
-    * copy+delete, and rollback is [[IndexIO.setCurrent]] instead of a
-    * rebuild. Returns the published version path ([[append]] targets it
-    * directly — appends stay within one version). */
+    * object-store-safe counterpart of [[write]], as
+    * [[MinHashIndex.writeVersioned]] / [[VectorIndex.writeVersioned]]:
+    * every rebuild lands in an immutable `v{N}` directory and a
+    * one-line CURRENT pointer flips to it, so a reader
+    * ([[bm25TopKCurrent]]) can never observe a partially-copied index
+    * even where directory renames are copy+delete, and rollback is
+    * [[IndexIO.setCurrent]] instead of a rebuild. Returns the published
+    * version path ([[append]] targets it directly — appends stay within
+    * one version). */
   def writeVersioned(docs: DataFrame, root: String, partitions: Int = 8,
                      withPositions: Boolean = false): String = {
     val spark = docs.sparkSession
     val staging = IndexIO.stagingFor(root)
     writeShardTables(docs, staging, 0, partitions, withPositions)
-    commitShard(spark, staging, 0)
+    IndexIO.commitShard(spark, staging, 0)
     IndexIO.publishVersioned(spark, staging, root)
   }
 
@@ -123,25 +122,6 @@ object TextIndex {
   def bm25TopKCurrent(spark: SparkSession, root: String, terms: Seq[String],
                       k: Int, k1: Double, b: Double): DataFrame =
     bm25TopK(spark, IndexIO.resolveCurrent(spark, root), terms, k, k1, b)
-
-  /** One shard of all three tables under `root`. The spine (with its
-    * token arrays) is `persist`ed so the regex-heavy tokenize runs ONCE
-    * for the derived writes — lineage is KEPT (unlike localCheckpoint),
-    * so an executor loss on a real cluster recomputes the lost
-    * partitions instead of failing the build, and locally it saves the
-    * former write-out/read-back of the full token arrays (a measurable
-    * fixed cost per build/append). */
-  /** Term-sorted shard layout. `partitions == 1` is the SMALL-BATCH
-    * route (streaming ingest, evolve appends): `coalesce(1)` + in-
-    * partition sort gives the same globally-sorted one-file layout with
-    * NO range exchange — `repartitionByRange` runs a whole extra
-    * SAMPLING job over its child to derive bounds, a fixed cost that
-    * dominates exactly where batches are smallest. */
-  private def sortedLayout(df: DataFrame, partitions: Int,
-                           sortCols: Seq[String]): DataFrame =
-    (if (partitions == 1) df.coalesce(1)
-     else df.repartitionByRange(partitions, col(sortCols.head)))
-      .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
 
   /** Driver-side bounds for [[writeShardTablesDriver]]: a micro-batch
     * under both fits comfortably in driver memory (32k docs / 64 MB of
@@ -161,7 +141,7 @@ object TextIndex {
     * API (same files-in-`shard=K`-dir layout, same column order, same
     * optional int64/int32/UTF8 types as the Spark write — readers and
     * the directory protocol can't tell). Tokenization parity:
-    * [[graft.core.Norm.canonStr]] is the spec-pinned scalar twin of the
+    * [[graft.core.Norm.canonStr]] is the spec-pinned scalar form of the
     * column canon, so df/dl/tf match the Spark path bit-for-bit (the
     * ta_bm25 oracle hashes pin it end-to-end). Over the bounds →
     * `false`, caller falls back to the distributed write (the right
@@ -188,35 +168,18 @@ object TextIndex {
     val parsed = probe.map(r =>
       (r.getLong(0), if (r.isNullAt(1)) "" else r.getString(1)))
     IndexIO.crashTick()
-    // tokenize once per doc (scalar canon twin); mirror the Spark
-    // plan's shapes exactly: doclens = one row per INPUT row, postings
-    // merge tf across rows by (term, doc_id) like the groupBy does
+    // tokenize once per doc (scalar canon); mirror the Spark plan's
+    // shapes exactly: doclens = one row per INPUT row, postings merge
+    // tf across rows by (term, doc_id) like the groupBy does
     val toks = parsed.map { case (id, text) =>
       (id, Norm.canonStr(text).split(" ").filter(_.nonEmpty))
     }
     val tf = scala.collection.mutable.LinkedHashMap.empty[(String, Long, Int), Long]
     for ((id, ts) <- toks; t <- ts)
       tf((t, id, ts.length)) = tf.getOrElse((t, id, ts.length), 0L) + 1L
-    val conf = spark.sparkContext.hadoopConfiguration
-    def groupFile(dir: String, schemaStr: String)(
-        write: (org.apache.parquet.schema.MessageType,
-          org.apache.parquet.hadoop.ParquetWriter[
-            org.apache.parquet.example.data.Group]) => Unit): Unit = {
-      val schema =
-        org.apache.parquet.schema.MessageTypeParser.parseMessageType(schemaStr)
-      val dirPath = new org.apache.hadoop.fs.Path(dir)
-      val fs = dirPath.getFileSystem(conf)
-      if (fs.exists(dirPath)) fs.delete(dirPath, true)
-      fs.mkdirs(dirPath)
-      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-          new org.apache.hadoop.fs.Path(dirPath, "part-00000.parquet"), conf))
-        .withType(schema).withConf(conf).build()
-      try write(schema, w) finally w.close()
-    }
     // term-sorted postings — the same (term, doc_id) layout the Spark
     // route sorts to, so row-group pruning on term keeps working
-    groupFile(s"$root/postings/shard=$shard",
+    DriverParquet.writeGroups(spark, s"$root/postings/shard=$shard",
       """message postings { optional binary term (UTF8);
         |  optional int64 doc_id; optional int32 dl; optional int64 tf; }"""
         .stripMargin) { (schema, w) =>
@@ -226,7 +189,7 @@ object TextIndex {
         w.write(g)
       }
     }
-    groupFile(s"$root/doclens/shard=$shard",
+    DriverParquet.writeGroups(spark, s"$root/doclens/shard=$shard",
       "message doclens { optional int64 doc_id; optional int32 dl; }") {
       (schema, w) =>
         for ((id, ts) <- toks.sortBy(_._1)) {
@@ -238,7 +201,7 @@ object TextIndex {
     writeStatsShard(spark, s"$root/stats/shard=$shard",
       toks.length.toLong, toks.iterator.map(_._2.length.toLong).sum)
     if (withPositions)
-      groupFile(s"$root/positions/shard=$shard",
+      DriverParquet.writeGroups(spark, s"$root/positions/shard=$shard",
         """message positions { optional int64 id;
           |  optional int64 pos; optional binary term (UTF8); }"""
           .stripMargin) { (schema, w) =>
@@ -253,85 +216,99 @@ object TextIndex {
     true
   }
 
+  /** One shard of every table under `root` from a doc batch. The spine
+    * (with its token arrays) is `persist`ed so the regex-heavy tokenize
+    * runs ONCE for the derived writes — lineage is KEPT (unlike
+    * localCheckpoint), so an executor loss on a real cluster recomputes
+    * the lost partitions instead of failing the build. `partitions == 1`
+    * tries the driver route first. */
   private def writeShardTables(docs: DataFrame, root: String, shard: Int,
                                partitions: Int, withPositions: Boolean): Unit = {
     if (partitions == 1 &&
       writeShardTablesDriver(docs, root, shard, withPositions)) return
     val spine = docSpine(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // postings first: its write MATERIALIZES the spine cache (the
-      // tokenize pass runs exactly once); the doclens and positions
-      // legs below then read cached blocks only and are independent of
-      // each other — overlapped (optimization guide §2.6), which folds
-      // two write-job floors into the slower one on small batches and
-      // overlaps two independent I/O legs at scale
-      sortedLayout(
+    try writeShard({
+        case "postings" =>
           spine.select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
-            .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf")),
-          partitions, Seq("term", "doc_id"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$root/postings/shard=$shard")
-      // the stats row rides the doclens write as observed metrics — the
-      // former separate spine-scan aggregate was one whole Spark job per
-      // build/append (a fixed cost that dominates small streaming-ingest
-      // batches); the one-row stats table then lands as a local write
-      val positionsLeg: Option[java.util.concurrent.Future[_]] =
-        if (!withPositions) None
-        else {
-          val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-          try Some(pool.submit(new java.util.concurrent.Callable[Unit] {
-            // the (id, pos, term) contract of TextAnalysis
-            // .positionalPostings, derived from the SAME spine
-            // tokenization (1-based positions)
-            def call(): Unit = sortedLayout(
-                spine.select(col("doc_id").as("id"), posexplode(col("toks")))
-                  .select(col("id"), (col("pos") + 1).cast("long").as("pos"),
-                    col("col").as("term")),
-                partitions, Seq("term", "id", "pos"))
-              .write.mode(SaveMode.Overwrite)
-              .parquet(s"$root/positions/shard=$shard")
-          })) finally pool.shutdown()
-        }
-      // first-failure ordering (ADVICE r18): when BOTH legs fail, the
-      // doclens exception the caller unwound on stays primary and the
-      // positions leg's failure attaches as suppressed — the former
-      // finally-block f.get() replaced the primary with the secondary
-      try {
-        writeDoclensAndStats(spine.select("doc_id", "dl"), root, shard, partitions)
+            .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
+        case "doclens" => spine.select("doc_id", "dl")
+        // the (id, pos, term) contract of TextAnalysis.positionalPostings,
+        // derived from the SAME spine tokenization (1-based positions)
+        case "positions" =>
+          spine.select(col("doc_id").as("id"), posexplode(col("toks")))
+            .select(col("id"), (col("pos") + 1).cast("long").as("pos"),
+              col("col").as("term"))
+      }, root, shard, partitions, withPositions)
+    finally spine.unpersist(false)
+  }
+
+  /** Write `root/<table>/shard=K` for every table from `rows(table)` —
+    * a build's spine or a fold's surviving rows ([[ShardedIndex]]).
+    * Term-sorted layouts; `partitions == 1` is the SMALL-BATCH route
+    * ([[IndexIO.sortedLayout]]: no range exchange, no sampling job).
+    * Postings write first: for a build that MATERIALIZES the spine
+    * cache (the tokenize pass runs exactly once); the doclens and
+    * positions legs then read cached blocks and are independent of each
+    * other — overlapped (optimization guide §2.6), which folds two
+    * write-job floors into the slower one on small batches and overlaps
+    * two independent I/O legs at scale. */
+  private def writeShard(rows: String => DataFrame, root: String, shard: Int,
+                         partitions: Int, withPositions: Boolean): Unit = {
+    IndexIO.sortedLayout(rows("postings").select("term", "doc_id", "dl", "tf"),
+        partitions, Seq("term", "doc_id"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$root/postings/shard=$shard")
+    val positionsLeg: Option[java.util.concurrent.Future[_]] =
+      if (!withPositions) None
+      else {
+        val positions = IndexIO.sortedLayout(rows("positions").select("id", "pos", "term"),
+          partitions, Seq("term", "id", "pos"))
+        val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+        try Some(pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = positions.write.mode(SaveMode.Overwrite)
+            .parquet(s"$root/positions/shard=$shard")
+        })) finally pool.shutdown()
+      }
+    // first-failure ordering (ADVICE r18): when BOTH legs fail, the
+    // doclens exception the caller unwound on stays primary and the
+    // positions leg's failure attaches as suppressed — the former
+    // finally-block f.get() replaced the primary with the secondary
+    try {
+      writeDoclensAndStats(rows("doclens").select("doc_id", "dl"), root, shard, partitions)
+      positionsLeg.foreach { f =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+    } catch {
+      case primary: Throwable =>
         positionsLeg.foreach { f =>
           try f.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-        }
-      } catch {
-        case primary: Throwable =>
-          positionsLeg.foreach { f =>
-            try f.get()
-            catch {
-              case e: Throwable =>
-                val sec = e match {
-                  case ee: java.util.concurrent.ExecutionException => ee.getCause
-                  case x => x
-                }
-                if ((sec ne primary) && (primary.getSuppressed.forall(_ ne sec)))
-                  primary.addSuppressed(sec)
-            }
+          catch {
+            case e: Throwable =>
+              val sec = e match {
+                case ee: java.util.concurrent.ExecutionException => ee.getCause
+                case x => x
+              }
+              if ((sec ne primary) && (primary.getSuppressed.forall(_ ne sec)))
+                primary.addSuppressed(sec)
           }
-          throw primary
-      }
-    } finally spine.unpersist(false)
+        }
+        throw primary
+    }
   }
 
   /** Write the doclens shard with an [[org.apache.spark.sql.Observation]]
     * computing (n_docs, sum_dl) during the SAME job, then publish the
-    * one-row stats shard from the driver-held result. Metric identities:
-    * `count(1)` and the null-coalesced `sum(dl)` match the former
-    * standalone aggregate bit-for-bit (both INT64), so shard stats still
-    * sum exactly. */
+    * one-row stats shard from the driver-held result — the former
+    * separate spine-scan aggregate was one whole Spark job per
+    * build/append. Metric identities: `count(1)` and the null-coalesced
+    * `sum(dl)` match a standalone aggregate bit-for-bit (both INT64), so
+    * shard stats still sum exactly. */
   private def writeDoclensAndStats(doclens: DataFrame, root: String,
                                    shard: Int, partitions: Int): Unit = {
     val spark = doclens.sparkSession
     val obs = org.apache.spark.sql.Observation()
-    (if (partitions == 1) doclens.coalesce(1) // see [[sortedLayout]]
+    (if (partitions == 1) doclens.coalesce(1) // see IndexIO.sortedLayout
      else doclens.repartitionByRange(partitions, col("doc_id")))
       // observe ABOVE the range exchange: repartitionByRange runs a
       // sampling pass over its child, which would execute a below-the-
@@ -345,34 +322,24 @@ object TextIndex {
       m("n_docs").asInstanceOf[Long], m("sum_dl").asInstanceOf[Long])
   }
 
-  private lazy val StatsSchema = org.apache.parquet.schema.MessageTypeParser
-    .parseMessageType(
-      "message stats { required int64 n_docs; required int64 sum_dl; }")
-
   /** One-row stats shard, written DRIVER-SIDE with the parquet Group
     * API: the values are already driver-held (the doclens write's
     * Observation), so launching a whole Spark job to persist 16 bytes
     * was a fixed scheduling cost on every build/append — measurable
     * exactly where batches are smallest (streaming ingest). The layout
-    * is unchanged (a one-file `shard=K` dir of the same INT64 columns),
-    * so `spark.read.parquet` and every directory-level protocol check
-    * read it exactly like the former one-task Spark write. */
+    * is a one-file `shard=K` dir of two INT64 columns, so
+    * `spark.read.parquet` and every directory-level protocol check read
+    * it exactly like a one-task Spark write. */
   private def writeStatsShard(spark: SparkSession, dir: String,
                               nDocs: Long, sumDl: Long): Unit = {
     IndexIO.crashTick() // protocol-level driver write: fuzz kill point
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirPath.getFileSystem(conf)
-    if (fs.exists(dirPath)) fs.delete(dirPath, true) // Overwrite semantics
-    fs.mkdirs(dirPath)
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-        new org.apache.hadoop.fs.Path(dirPath, "part-00000.parquet"), conf))
-      .withType(StatsSchema).withConf(conf).build()
-    val g = new org.apache.parquet.example.data.simple.SimpleGroup(StatsSchema)
-    g.add("n_docs", nDocs)
-    g.add("sum_dl", sumDl)
-    try w.write(g) finally w.close()
+    DriverParquet.writeGroups(spark, dir,
+      "message stats { required int64 n_docs; required int64 sum_dl; }") { (schema, w) =>
+      val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
+      g.add("n_docs", nDocs)
+      g.add("sum_dl", sumDl)
+      w.write(g)
+    }
   }
 
   /** Driver-side per-shard (n_docs, sum_dl) over the committed stats
@@ -429,331 +396,99 @@ object TextIndex {
     Tables ++ (if (IndexIO.shardIds(spark, s"$path/positions").nonEmpty)
       Seq("positions") else Nil)
 
-  /** Publish the commit marker for shard `k` — the LAST rename of an
-    * append; its arrival is what makes the shard visible. (Shared
-    * implementation: [[IndexIO.commitShard]], since round 8 also the
-    * protocol of [[MinHashIndex]] and [[VectorIndex]].) */
-  private def commitShard(spark: SparkSession, root: String, k: Int,
-                          enforceLease: Boolean = false,
-                          tags: Seq[String] = Nil): Unit =
-    IndexIO.commitShard(spark, root, k, enforceLease = enforceLease,
-      tags = tags)
-
-  /** Drop table shards with no commit marker (crash before the marker
-    * rename), markers with missing table shards (external tampering
-    * — serving would silently mis-score against partial state, the
-    * worse failure), and shards superseded by a compaction marker whose
-    * post-commit cleanup crashed ([[compactSmall]] deletes its folded
-    * shards after the REPLACES marker lands — a crash in between leaves
-    * them as reader-invisible garbage). Restores exactly the last
-    * committed state. Runs from [[compact]]/[[compactSmall]] — and is
-    * SAFE under concurrent appends since round 11: a shard id under an
-    * active appender lease ([[IndexIO.leasedIds]] — claim younger than
-    * `appendLeaseMs`) is never touched, so a live appender's published-
-    * but-not-yet-committed table shards survive a racing maintenance
-    * pass; commits are listed BEFORE tables so an id that commits
-    * mid-reconcile always has its tables visible to the later listing
-    * (and its young claim shields it even when the marker lands between
-    * the two listings). Crash garbage older than the lease reconciles
-    * exactly as before. */
-  private def reconcileShards(spark: SparkSession, path: String): Unit = {
+  /** This index's shape for the shared protocol ([[ShardedIndex]]):
+    * doclens counts documents; stats re-derive from the folded doclens;
+    * positions key their doc id as `id`. */
+  private def family(spark: SparkSession, path: String): ShardedIndex.Family = {
     val tables = tablesOf(spark, path)
-    val leased = IndexIO.leasedIds(spark, path)
-    val committed = IndexIO.shardIds(spark, s"$path/commits").toSet
-    val live = IndexIO.liveCommittedIds(spark, path).toSet
-    val perTable = tables.map(t => IndexIO.shardIds(spark, s"$path/$t").toSet)
-    // keep only live-committed-AND-complete shards: dropping just the
-    // marker of an incomplete shard would leave its surviving table
-    // shards as permanent orphans. Markers delete FIRST (the publish
-    // order mirrored: marker last in, first out) — deleting a table
-    // shard of a still-committed id first would let a crash
-    // mid-reconcile manufacture a committed-but-tableless state that
-    // readers then serve mis-scored against its stats mass.
-    val keep = live intersect perTable.reduce(_ intersect _)
-    for (k <- committed diff keep if !leased.contains(k))
-      IndexIO.deleteDir(spark, s"$path/commits/shard=$k")
-    for ((t, ids) <- tables.zip(perTable); k <- ids diff keep
-         if !leased.contains(k))
-      IndexIO.deleteDir(spark, s"$path/$t/shard=$k")
+    ShardedIndex.Family("TextIndex", tables, "doclens", "doc_id",
+      (rows, stage, k, partitions) =>
+        writeShard(rows, stage, k, partitions, tables.contains("positions")),
+      idCols = Map("positions" -> "id"))
   }
 
   /** Append a new document batch as ONE NEW committed shard of each
-    * table — existing shard files are never read, rewritten, or moved
-    * (spec-pinned byte-identical), so at 100 TB an append costs only
-    * the new batch. Postings/df/stats all sum across shards exactly,
-    * so serve-after-append ≡ serve-after-rebuild for disjoint doc ids
-    * (oracle-pinned). Re-ingesting an existing doc_id would double its
-    * postings — route re-crawls through [[delete]] + [[compact]]
-    * first, as with [[MinHashIndex.append]].
+    * table ([[ShardedIndex.append]]) — existing shard files are never
+    * read, rewritten, or moved (spec-pinned byte-identical), so at
+    * 100 TB an append costs only the new batch. Postings/df/stats all
+    * sum across shards exactly, so serve-after-append ≡
+    * serve-after-rebuild for disjoint doc ids (oracle-pinned).
+    * Re-ingesting an existing doc_id would double its postings — route
+    * re-crawls through [[delete]] + [[compact]] first, as with
+    * [[MinHashIndex.append]].
     *
-    * CONCURRENT appenders are safe: each claims its shard id through
-    * [[IndexIO.claimShardId]]'s atomic create-fails-if-exists rename
-    * (losers retry at the next id), ids are never reused, and nothing
-    * here deletes other writers' in-flight shards — a parallel-ingest
-    * crawl pipeline can append from many jobs at once, each batch
-    * landing under its own marker (spec-pinned: concurrent appends ≡
-    * some sequential order). Crash garbage (a claimed id whose marker
-    * never landed) stays invisible to readers and is reclaimed by the
-    * next [[compact]]/[[compactSmall]]. */
+    * CONCURRENT appenders are safe: each claims a distinct shard id and
+    * lands under its own marker (spec-pinned: concurrent appends ≡ some
+    * sequential order). A non-empty `batchTag` makes a retried batch a
+    * no-op once it has committed (exactly-once streaming ingest). Crash
+    * garbage stays invisible to readers and is reclaimed by the next
+    * [[compact]]/[[compactSmall]]. */
   def append(docs: DataFrame, path: String, partitions: Int = 8,
              batchTag: String = ""): Unit = {
-    val spark = docs.sparkSession
-    val tables = tablesOf(spark, path)
-    // idempotent replay guard (exactly-once streaming ingest): a tagged
-    // append whose tag is already live has ALREADY committed — the
-    // at-least-once retry of a foreachBatch that crashed between the
-    // marker rename and the checkpoint commit must be a no-op, or the
-    // batch double-appends. Checked BEFORE claiming a shard id so the
-    // skip leaves zero garbage. Compaction unions tags forward
-    // ([[compact]]), so the guard survives folds between crash and
-    // retry.
-    if (batchTag.nonEmpty && IndexIO.committedTags(spark, path).contains(batchTag)) {
-      System.err.println(s"[graft] append to $path: batch tag '$batchTag' " +
-        "already committed — idempotent replay skip")
-      return
-    }
-    // committed-but-incomplete shards (tampering) are repaired eagerly —
-    // safe under concurrency, unlike the full reconcile (compact-only)
-    IndexIO.dropIncompleteCommitted(spark, path, tables)
-    val next = IndexIO.claimShardId(spark, path, tables)
-    // stage all table shards under one hidden dir inside the index
-    // root (same filesystem, invisible to readers), publish each with an
-    // atomic per-dir rename, marker last
-    val stage =
-      s"$path/_append-staging-${java.util.UUID.randomUUID().toString.take(8)}"
-    writeShardTables(docs, stage, next, partitions,
-      withPositions = tables.contains("positions"))
-    // refresh the lease AFTER the long write, BEFORE the publishes: the
-    // lease then bounds only the publish→commit tail, so an arbitrarily
-    // slow batch write cannot make the commit-time check fail
-    // unconditionally (round-12 heartbeat — staging stays invisible and
-    // actively-written staging is mtime-protected meanwhile)
-    IndexIO.heartbeatClaim(spark, path, next)
-    for (t <- tables)
-      IndexIO.publishShard(spark, s"$stage/$t/shard=$next", s"$path/$t/shard=$next")
-    IndexIO.deleteDir(spark, stage)
-    // enforceLease: fail loud if this append outran its lease (a racing
-    // maintain may have reclaimed the uncommitted shards) instead of
-    // landing a marker for data that silently never serves;
-    // verifyTables closes the check-to-rename TOCTOU (marker withdrawn
-    // if the tables were reclaimed before it landed)
-    IndexIO.commitShard(spark, path, next, enforceLease = true,
-      verifyTables = tables,
-      tags = if (batchTag.nonEmpty) Seq(batchTag) else Nil)
+    val f = family(docs.sparkSession, path)
+    ShardedIndex.append(docs.sparkSession, path, f, batchTag)((stage, k) =>
+      writeShardTables(docs, stage, k, partitions, f.tables.contains("positions")))
   }
 
   /** Tombstone a set of doc_ids (takedowns, re-crawls): one tiny
-    * atomic shard under `deletes/`, index-wide like its
-    * [[MinHashIndex.delete]] twin. Serving subtracts the tombstoned
-    * docs EXACTLY — postings anti-joined out, their doc count and
-    * length mass removed from the BM25 corpus constants via the stored
-    * doclens — so results equal an index never containing them
-    * (oracle-pinned). [[compact]] physically drops them and clears the
-    * set. */
-  def delete(ids: DataFrame, path: String): Unit = {
-    require(ids.columns.contains("doc_id"),
-      s"delete ids need a doc_id column, got ${ids.columns.mkString(", ")}")
-    IndexIO.publishIdShard(ids, path, "doc_id")
-  }
-
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    if (IndexIO.shardIds(spark, s"$path/deletes").nonEmpty)
-      Some(IndexIO.readTable(spark, path, "deletes").select("doc_id"))
-    else None
-
-  /** Subtract the tombstone set from `df`, routed by set size exactly
-    * like the serving path ([[probeWith]]) —
-    * [[IndexIO.subtractTombstones]], shared by all three indexes. */
-  private def antiTombstones(spark: SparkSession, path: String,
-                             df: DataFrame, idCol: String): DataFrame =
-    IndexIO.subtractTombstones(spark, path, df, idCol, "doc_id")
+    * atomic shard under `deletes/`, index-wide ([[ShardedIndex.delete]]).
+    * Serving subtracts the tombstoned docs EXACTLY — postings
+    * anti-joined out, their doc count and length mass removed from the
+    * BM25 corpus constants via the stored doclens — so results equal an
+    * index never containing them (oracle-pinned). [[compact]] physically
+    * drops them and clears the set. */
+  def delete(ids: DataFrame, path: String): Unit =
+    ShardedIndex.delete(ids, path, "doc_id", "doc_id")
 
   /** Fold all committed shards back to one (`shard=0`), dropping
     * tombstoned docs for good and re-deriving stats from the compacted
-    * spine; full staging + single publish rename. Results unchanged;
-    * probe file counts and the tombstone anti-join disappear.
-    * EXCLUSIVE of appends (the root rename would strand a concurrent
-    * appender's publishes) — the migration / claim-reset op; a live
-    * crawl loop compacts via [[maintain]]/[[compactAllInPlace]]. */
-  def compact(spark: SparkSession, path: String, partitions: Int = 8): Unit = {
-    reconcileShards(spark, path)
-    IndexIO.gcStaging(spark, path) // reclaim crashed-build staging dirs
-    val committed = IndexIO.liveCommittedIds(spark, path)
-    require(committed.nonEmpty, s"no committed shards under $path — not a TextIndex?")
-    def live(table: String, cols: Seq[String], idCol: String = "doc_id") =
-      antiTombstones(spark, path,
-        IndexIO.readCommitted(spark, path, table, committed)
-          .select(cols.map(col): _*), idCol)
-    val staging = IndexIO.stagingFor(path)
-    sortedLayout(live("postings", Seq("term", "doc_id", "dl", "tf")),
-        partitions, Seq("term", "doc_id"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$staging/postings/shard=0")
-    writeDoclensAndStats(live("doclens", Seq("doc_id", "dl")), staging, 0, partitions)
-    if (tablesOf(spark, path).contains("positions"))
-      sortedLayout(live("positions", Seq("id", "pos", "term"), idCol = "id"),
-          partitions, Seq("term", "id", "pos"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$staging/positions/shard=0")
-    // idempotency tags of every folded shard ride into the rebuilt
-    // root's one marker — a streaming batch's replay guard must survive
-    // the full rebuild exactly as it survives a tiered fold
-    commitShard(spark, staging, 0,
-      tags = committed.flatMap(k => IndexIO.shardTags(spark, path, k)))
-    IndexIO.publish(spark, staging, path)
-  }
+    * doclens; full staging + single publish rename
+    * ([[ShardedIndex.compact]]). Results unchanged; probe file counts
+    * and the tombstone anti-join disappear. EXCLUSIVE of appends — the
+    * migration / claim-reset op; a live crawl loop compacts via
+    * [[maintain]]/[[compactAllInPlace]]. */
+  def compact(spark: SparkSession, path: String, partitions: Int = 8): Unit =
+    ShardedIndex.compact(spark, path, family(spark, path), partitions)
 
   /** SIZE-TIERED incremental compaction — the 100 TB answer to "daily
     * appends accumulate shards, but [[compact]] rewrites the WHOLE
     * index to reclaim a 1% tombstone set". Folds ONLY shards that are
     * small (total table bytes ≤ `maxShardBytes`) or tombstone-heavy
-    * (≥ `tombstoneFrac` of the shard's docs deleted — per-shard doc
-    * counts come from the stats table, dead counts from one tiny
-    * doclens⋉deletes probe) into ONE new shard; every other shard's
-    * files are untouched (spec-pinned byte-identical), so the bytes
-    * rewritten are proportional to the small/dead tail, not the index.
-    *
-    * Swap atomicity: the folded shard commits with a REPLACES marker
-    * ([[IndexIO.commitShard]]) — the single rename that makes the new
-    * shard visible AND the folded ones invisible to readers
-    * ([[IndexIO.liveCommittedIds]]); the superseded shards are
-    * physically deleted after, and a crash mid-cleanup leaves only
-    * reader-invisible garbage that [[reconcileShards]] reclaims.
+    * (≥ `tombstoneFrac` of the shard's docs deleted) into ONE new shard
+    * under a REPLACES marker ([[ShardedIndex.compactTiered]]); every
+    * other shard's files are untouched (spec-pinned byte-identical).
     * Tombstones falling inside folded shards are dropped for good
     * (their doclens rows vanish, so serving stops subtracting them —
     * exact by construction); the tombstone SET only clears on a full
-    * [[compact]], since unfolded shards may still hold listed ids.
-    *
-    * Returns the folded shard ids (empty = nothing worth folding:
-    * fewer than two small shards and no tombstone-heavy one). */
+    * compaction, since unfolded shards may still hold listed ids.
+    * Returns the folded shard ids (empty = nothing worth folding). */
   def compactSmall(spark: SparkSession, path: String, maxShardBytes: Long,
                    partitions: Int = 8, tombstoneFrac: Double = 0.5): Seq[Int] =
-    compactTiered(spark, path, Some(maxShardBytes), partitions, tombstoneFrac)
+    ShardedIndex.compactTiered(spark, path, family(spark, path), Some(maxShardBytes),
+      partitions, tombstoneFrac)
 
   /** Full compaction WITHOUT the root-replacing rename: folds ALL live
     * shards into one new shard under the existing root (REPLACES
     * marker, same swap atomicity as [[compactSmall]]) and clears the
-    * tombstone shards it observed at entry — every tombstoned row falls
-    * inside the fold set, so the observed set is fully applied and its
-    * shards are inert afterwards. This is [[maintain]]'s full-compact
-    * route: unlike [[compact]] (which renames the whole index root
-    * aside and would strand a concurrent appender's publishes), it
-    * stays inside the live root, so appends racing it land intact —
-    * their shards are outside the fold set and outside the observed
-    * tombstones. [[compact]] remains the layout-migration /
-    * claim-resetting op. Returns the folded shard ids. */
+    * tombstone shards it observed at entry. This is [[maintain]]'s
+    * full-compact route: unlike [[compact]] (which renames the whole
+    * index root aside and would strand a concurrent appender's
+    * publishes), appends racing it land intact. Returns the folded
+    * shard ids. */
   def compactAllInPlace(spark: SparkSession, path: String,
                         partitions: Int = 8): Seq[Int] =
-    compactTiered(spark, path, None, partitions, 0.5)
+    ShardedIndex.compactTiered(spark, path, family(spark, path), None, partitions, 0.5)
 
-  private def compactTiered(spark: SparkSession, path: String,
-                            maxShardBytes: Option[Long], partitions: Int,
-                            tombstoneFrac: Double): Seq[Int] = {
-    // MAINTAINER mutual exclusion (round 12): two concurrent fold
-    // passes could select overlapping fold sets and serve duplicated
-    // rows after both REPLACES markers landed — the lock makes the
-    // single-maintainer contract mechanical (second maintainer fails
-    // loud; a crashed maintainer's stale lock ages out)
-    val lockNonce = IndexIO.acquireMaintLock(spark, path)
-    try compactTieredLocked(spark, path, maxShardBytes, partitions,
-      tombstoneFrac, lockNonce)
-    finally IndexIO.releaseMaintLock(spark, path, lockNonce)
-  }
-
-  private def compactTieredLocked(spark: SparkSession, path: String,
-                                  maxShardBytes: Option[Long], partitions: Int,
-                                  tombstoneFrac: Double,
-                                  lockNonce: String): Seq[Int] = {
-    reconcileShards(spark, path)
-    IndexIO.gcStaging(spark, path)
-    IndexIO.gcClaims(spark, path) // bound historical claim dirs (single-maintainer)
-    val tables = tablesOf(spark, path)
-    // observed BEFORE the live-shard listing (and before reading
-    // tombstone rows): only these shards may clear on fold-all. The
-    // ordering matters — listed AFTER `live`, a tombstone landing in
-    // the gap could target a shard that ALSO committed in the gap
-    // (outside the fold set), and clearing it would resurrect the doc;
-    // listed BEFORE, any observed tombstone targeting a later-committed
-    // shard is provably a delete-before-append (an intended re-add),
-    // so the clear is safe
-    val obsDels = IndexIO.shardIds(spark, s"$path/deletes")
-    val live = IndexIO.liveCommittedIds(spark, path)
-    require(live.nonEmpty, s"no committed shards under $path — not a TextIndex?")
-    val dels = tombstones(spark, path)
-    val fold = maxShardBytes match {
-      case None => live // fold-all: every live shard rewrites
-      case Some(bytes) =>
-        val small = live.filter(k =>
-          tables.map(t => IndexIO.dirBytes(spark, s"$path/$t/shard=$k")).sum <= bytes)
-        val heavy: Seq[Int] = dels match {
-          case Some(d) =>
-            // per-shard doc counts come from the driver-side stats read;
-            // only the dead counts need a (tiny) doclens⋉deletes probe
-            val perShard = statsPerShard(spark, path, live)
-            val dead = IndexIO.smallAggHint(spark, path, "doclens", live,
-                IndexIO.readCommitted(spark, path, "doclens", live)
-                  .join(d, Seq("doc_id"), "left_semi"))
-              .groupBy("shard").agg(count(lit(1)).as("dead"))
-              .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-            live.filter { k =>
-              val dk = dead.getOrElse(k, 0L)
-              dk > 0L && dk.toDouble >=
-                tombstoneFrac * perShard.get(k).map(_._1).getOrElse(0L).toDouble
-            }
-          case None => Nil
-        }
-        val f = (small ++ heavy).distinct.sorted
-        if (f.length < 2 && heavy.isEmpty) return Nil
-        f
-    }
-    val next = IndexIO.claimShardId(spark, path, tables)
-    // the fold's write phase can be long at scale — refresh the lock so
-    // maintLockMs bounds only un-heartbeated gaps
-    IndexIO.heartbeatMaintLock(spark, path, lockNonce)
-    val stage =
-      s"$path/_append-staging-${java.util.UUID.randomUUID().toString.take(8)}"
-    def liveRows(table: String, cols: Seq[String], idCol: String = "doc_id") =
-      antiTombstones(spark, path,
-        IndexIO.readCommitted(spark, path, table, fold)
-          .select(cols.map(col): _*), idCol)
-    sortedLayout(liveRows("postings", Seq("term", "doc_id", "dl", "tf")),
-        partitions, Seq("term", "doc_id"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$stage/postings/shard=$next")
-    writeDoclensAndStats(liveRows("doclens", Seq("doc_id", "dl")),
-      stage, next, partitions)
-    if (tables.contains("positions"))
-      sortedLayout(liveRows("positions", Seq("id", "pos", "term"), idCol = "id"),
-          partitions, Seq("term", "id", "pos"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$stage/positions/shard=$next")
-    for (t <- tables)
-      IndexIO.publishShard(spark, s"$stage/$t/shard=$next", s"$path/$t/shard=$next")
-    IndexIO.deleteDir(spark, stage)
-    // the commit point: one rename swaps the fold set for the new shard.
-    // Idempotency tags of the folded shards ride along — a streaming
-    // batch's replay guard must survive a compaction that lands between
-    // its crash and its retry ([[IndexIO.committedTags]]).
-    val foldTags = fold.flatMap(k => IndexIO.shardTags(spark, path, k))
-    IndexIO.commitShard(spark, path, next, replaces = fold,
-      maintLockNonce = lockNonce, tags = foldTags)
-    for (k <- fold) IndexIO.deleteDir(spark, s"$path/commits/shard=$k")
-    for (t <- tables; k <- fold) IndexIO.deleteDir(spark, s"$path/$t/shard=$k")
-    // fold-all applied every observed tombstone (the fold covered every
-    // live shard); clear exactly those — a tombstone landing
-    // concurrently stays and keeps applying
-    if (maxShardBytes.isEmpty)
-      for (k <- obsDels) IndexIO.deleteDir(spark, s"$path/deletes/shard=$k")
-    fold
-  }
-
-  /** Compaction trigger policy ([[IndexMaintenance]]): call after each
-    * crawl/ingest generation; keeps live shards ≤ `maxShards` and the
-    * dead-row fraction < `tombstoneFrac` by choosing (nothing |
-    * size-tiered [[compactSmall]] | full [[compact]]) from shard stats.
-    * Serving equality through every choice is spec-pinned. */
+  /** Compaction trigger policy ([[ShardedIndex.maintain]]): call after
+    * each crawl/ingest generation; keeps live shards ≤ `maxShards` and
+    * the dead-row fraction < `tombstoneFrac` by choosing (nothing |
+    * size-tiered [[compactSmall]] | fold-all [[compactAllInPlace]])
+    * from shard stats. Serving equality through every choice is
+    * spec-pinned. */
   def maintain(spark: SparkSession, path: String, maxShards: Int = 8,
                tombstoneFrac: Double = 0.3, partitions: Int = 8): MaintainReport =
-    IndexMaintenance.run(spark, path, tablesOf(spark, path), "doclens", "doc_id",
-      maxShards, tombstoneFrac,
-      () => compactAllInPlace(spark, path, partitions),
-      bytes => compactSmall(spark, path, bytes, partitions, tombstoneFrac))
+    ShardedIndex.maintain(spark, path, family(spark, path), maxShards,
+      tombstoneFrac, partitions)
 
   /** BM25 top-k for a term set, served ENTIRELY from the stored
     * layout: the postings probe is a term-`IN` over term-sorted row
@@ -935,7 +670,7 @@ object TextIndex {
     // that size.
     val maxLiteralIds = 1024
     val smallDels = IndexIO.readIdShards(spark, s"$path/deletes", "doc_id")
-    val dels = if (smallDels.isDefined) None else tombstones(spark, path)
+    val dels = if (smallDels.isDefined) None else ShardedIndex.tombstones(spark, path, "doc_id")
     lazy val localDels = { // driver ids as a one-column LocalRelation
       import spark.implicits._
       broadcast(smallDels.get.toSeq.toDF("doc_id"))
@@ -1006,7 +741,7 @@ object TextIndex {
     val pos = IndexIO.readCommitted(spark, path, "positions", committed)
       .filter(col("term").isin(phrase.distinct: _*))
       .select("id", "pos", "term")
-    val live = tombstones(spark, path).foldLeft(pos)((p, d) =>
+    val live = ShardedIndex.tombstones(spark, path, "doc_id").foldLeft(pos)((p, d) =>
       p.join(d.withColumnRenamed("doc_id", "id"), Seq("id"), "left_anti"))
     TextAnalysis.phraseSearch(live, phrase)
   }

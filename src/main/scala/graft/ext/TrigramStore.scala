@@ -426,8 +426,8 @@ object TrigramStore {
     if (bytes <= maxBytes) 1 else partitions
   }
 
-  /** WHEN-to-compact policy — [[IndexMaintenance.run]]'s decision order
-    * for this family ([[IndexMaintenance]] itself computes dead mass
+  /** WHEN-to-compact policy — [[ShardedIndex.maintain]]'s decision order
+    * for this family ([[ShardedIndex]] itself computes dead mass
     * from plain id-tombstones, which over-counts under watermarks: a
     * re-append watermark `(id, K)` kills only the id's PRE-`K` rows, so
     * the dead fraction here comes from the store's own exact

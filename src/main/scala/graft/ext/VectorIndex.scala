@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Persisted IVF vector index — the vector twin of
+/** Persisted IVF vector index — the vector counterpart of
   * [[graft.etl.TrigramIndex]]: build the coarse-quantizer structure
   * ONCE, write it as tables, and serve every later query batch from
   * the stored layout instead of re-deriving centroids and assignments
@@ -46,7 +46,7 @@ object VectorIndex {
   }
 
   /** Build and publish a NEW VERSION under a versioned root — the
-    * object-store-safe twin of [[write]] (the
+    * object-store-safe counterpart of [[write]] (the
     * [[MinHashIndex.writeVersioned]] treatment): every rebuild lands in
     * an immutable `v{N}` directory and a one-line CURRENT pointer flips
     * to it, so a reader ([[topKCurrent]]) can never observe a
@@ -86,18 +86,22 @@ object VectorIndex {
     // `cent` plan would re-run its full-corpus TakeOrdered a second time,
     // and reading back also guarantees postings match the persisted table
     val centStored = corpus.sparkSession.read.parquet(s"$staging/centroids")
-    val q = corpus.select(
-      (col("vec_id").as("cand_id") +:
-        Similarity.quantize(col("embedding")).as("c_emb") +:
-        metaCols.map(col)): _*)
-    Similarity.nearestCentroid(q, centStored, "cand_id", "c_emb", metaCols)
-      .select((Seq("cid", "cand_id", "c_emb") ++ metaCols).map(col): _*)
-      .repartitionByRange(partitions, col("cid"))
-      .sortWithinPartitions("cid", "cand_id")
-      .write.mode(SaveMode.Overwrite).parquet(s"$staging/postings/shard=0")
+    writeShard(_ => assign(corpus, centStored, metaCols), staging, 0, partitions)
     // the shard-commit marker ships with the build (whole staging dir
     // publishes in one rename), so every index born here is marker-aware
     IndexIO.commitShard(corpus.sparkSession, staging, 0)
+  }
+
+  /** (cid, cand_id, c_emb, meta*) posting rows: each vector quantized
+    * and assigned to its nearest stored centroid. */
+  private def assign(vectors: DataFrame, centroids: DataFrame,
+                     meta: Seq[String]): DataFrame = {
+    val q = vectors.select(
+      (col("vec_id").as("cand_id") +:
+        Similarity.quantize(col("embedding")).as("c_emb") +:
+        meta.map(col)): _*)
+    Similarity.nearestCentroid(q, centroids, "cand_id", "c_emb", meta)
+      .select((Seq("cid", "cand_id", "c_emb") ++ meta).map(col): _*)
   }
 
   /** Metadata columns a stored posting table carries (everything past
@@ -108,52 +112,36 @@ object VectorIndex {
     postings.schema.fieldNames.toSeq
       .filterNot(Seq("cid", "cand_id", "c_emb", "shard").contains)
 
-  /** Restore exactly the last committed state after a crash anywhere in
-    * [[append]] (the [[TextIndex]] commit-marker reconcile): drop
-    * posting shards with no commit marker — invisible to marker-aware
-    * readers, but a stale uncommitted shard would be baked permanently
-    * into `shard=0` by [[compact]] and would collide with the next
-    * append's shard id — and markers with no posting shard (external
-    * tampering). A retried append after any crash re-assigns its batch
-    * into a fresh consistent shard. Legacy pre-marker indexes (no
-    * `commits/` table) have nothing to reconcile: their single-rename
-    * posting-shard publish was already atomic. */
-  private def reconcileShards(spark: SparkSession, path: String): Unit = {
-    val committed = IndexIO.committedIds(spark, path).toSet
-    if (committed.nonEmpty) {
-      // keep only live-committed-AND-complete: uncommitted shards are
-      // crash leftovers, REPLACED ones a compactSmall whose post-commit
-      // cleanup crashed. Markers delete FIRST (publish order mirrored)
-      // — see the TextIndex reconcile note. SAFE under concurrent
-      // appends (round 11): shard ids under an active appender lease
-      // ([[IndexIO.leasedIds]]) are never touched, and commits list
-      // BEFORE tables so an id committing mid-reconcile has its tables
-      // visible to the later listing.
-      val leased = IndexIO.leasedIds(spark, path)
-      val live = IndexIO.liveCommittedIds(spark, path).toSet
-      val post = IndexIO.shardIds(spark, s"$path/postings").toSet
-      val keep = live intersect post
-      (committed diff keep).filterNot(leased).foreach(k =>
-        IndexIO.deleteDir(spark, s"$path/commits/shard=$k"))
-      (post diff keep).filterNot(leased).foreach(k =>
-        IndexIO.deleteDir(spark, s"$path/postings/shard=$k"))
-    }
+  /** The one posting-shard write of build, append and both folds: a
+    * cid-range layout sorted by (cid, cand_id); `partitions == 1` is the
+    * SMALL-BATCH route (coalesce, no bounds-sampling job). */
+  private def writeShard(rows: String => DataFrame, stage: String, k: Int,
+                         partitions: Int): Unit = {
+    val postings = rows("postings")
+    IndexIO.sortedLayout(
+        postings.select((Seq("cid", "cand_id", "c_emb") ++ storedMetaCols(postings))
+          .map(col): _*),
+        partitions, Seq("cid", "cand_id"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$stage/postings/shard=$k")
   }
+
+  /** This index's shape for the shared protocol ([[ShardedIndex]]): one
+    * sharded posting table keyed by `cand_id`; a full compact carries
+    * the centroid table over unchanged. */
+  private val family = ShardedIndex.Family("VectorIndex", Seq("postings"),
+    "postings", "cand_id", writeShard, copied = Seq("centroids"))
 
   /** Append new vectors to a stored index WITHOUT a full rebuild: the
     * streaming-ingest path. New vectors are assigned against the STORED
     * centroids (no retrain — the coarse quantizer stays fixed, the
-    * standard IVF ingest contract) and written as ONE NEW posting
-    * shard (`postings/shard=K`, K = max existing + 1): existing shard
-    * files are never read, rewritten, or moved — at 100 TB an append
-    * costs only the new batch, not the index. The shard is staged in a
-    * hidden `_shard-staging-*` dir under the posting root, published by
-    * a single rename ([[IndexIO.publishShard]]), and made visible by a
-    * `commits/shard=K` marker published LAST (the [[TextIndex]]
-    * protocol via [[IndexIO.commitShard]]): readers ([[topK]]) prune to
+    * standard IVF ingest contract) and written as ONE NEW committed
+    * posting shard ([[ShardedIndex.append]]): existing shard files are
+    * never read, rewritten, or moved — at 100 TB an append costs only
+    * the new batch, not the index. Readers ([[topK]]) prune to
     * committed shard ids, so a crash anywhere mid-append leaves only
-    * invisible garbage that [[reconcileShards]] clears on the next
-    * append/compact — never a partial or uncommitted shard in results.
+    * invisible garbage, never a partial or uncommitted shard in
+    * results. An index in the pre-shard flat or pre-marker layout is
+    * refused until one [[compact]] migrates it.
     *
     * Equivalence: for the same final corpus and the same centroids,
     * topK over append(write(A), B) ≡ topK over write(A ∪ B)
@@ -162,22 +150,10 @@ object VectorIndex {
     * parity AND that pre-existing shard files stay byte-identical.
     * Each shard is itself cid-range-laid-out, so a probe prunes row
     * groups within every shard; many tiny appends accumulate shards
-    * (and per-probe file reads) — [[compact]] folds them back to one. */
+    * (and per-probe file reads) — [[maintain]] folds them back. */
   def append(newVectors: DataFrame, path: String, partitions: Int = 8,
              evolveMeta: Seq[String] = Nil): Unit = {
     val spark = newVectors.sparkSession
-    // an index written by the pre-shard flat layout cannot take shard
-    // dirs next to its part-files (unreadable mixed depths); compact()
-    // reads either layout and republishes sharded, so route through it
-    require(!IndexIO.hasFlatFiles(spark, s"$path/postings"),
-      s"index at $path uses the pre-shard flat layout; " +
-        "run VectorIndex.compact(spark, path) once to migrate before appending")
-    // marker-aware appends need a commits table to sequence against; an
-    // index written before the marker layout migrates the same way the
-    // flat layout did — one compact republishes it marker-aware
-    require(IndexIO.committedIds(spark, path).nonEmpty,
-      s"index at $path predates the commit-marker layout; " +
-        "run VectorIndex.compact(spark, path) once to migrate before appending")
     val centStored = IndexIO.readTable(spark, path, "centroids")
     // a batch whose embedding dimension differs from the stored index
     // would cosine to NULL against every centroid, tiebreak the WHOLE
@@ -189,16 +165,6 @@ object VectorIndex {
         s"stored index at $path has dimension $storedDim, " +
           s"append batch has dimension ${r.getInt(0)}")
     }
-    // committed-but-incomplete shards (tampering) are repaired eagerly —
-    // safe under concurrency, unlike the full reconcile (compact-only)
-    IndexIO.dropIncompleteCommitted(spark, path, Seq("postings"))
-    // atomic shard-id claim ([[IndexIO.claimShardId]]): concurrent
-    // appenders each win a distinct id (losers retry), ids are never
-    // reused, and no full reconcile runs here — parallel ingest jobs
-    // cannot delete each other's in-flight shards; crash garbage stays
-    // reader-invisible until the next compact reclaims it
-    val next = IndexIO.claimShardId(spark, path, Seq("postings"))
-    val staging = IndexIO.shardStagingFor(s"$path/postings")
     // the stored schema dictates which metadata columns the batch must
     // carry — a shard missing them would serve NULLs into candFilter
     // predicates and silently drop (or keep) the wrong candidates.
@@ -216,29 +182,8 @@ object VectorIndex {
     val meta = stored ++ evolveMeta
     meta.foreach(c => require(newVectors.columns.contains(c),
       s"stored index at $path carries metadata column '$c'; append batch lacks it"))
-    val q = newVectors.select(
-      (col("vec_id").as("cand_id") +:
-        Similarity.quantize(col("embedding")).as("c_emb") +:
-        meta.map(col)): _*)
-    val assigned = Similarity.nearestCentroid(q, centStored, "cand_id", "c_emb", meta)
-      .select((Seq("cid", "cand_id", "c_emb") ++ meta).map(col): _*)
-    // partitions == 1 is the SMALL-BATCH route (streaming/evolve-sized
-    // appends): coalesce keeps the same cid-sorted one-file layout
-    // without repartitionByRange's extra bounds-sampling job
-    (if (partitions == 1) assigned.coalesce(1)
-     else assigned.repartitionByRange(partitions, col("cid")))
-      .sortWithinPartitions("cid", "cand_id")
-      .write.mode(SaveMode.Overwrite).parquet(staging)
-    // refresh the lease AFTER the long assign+write phase, BEFORE the
-    // publish — the lease then bounds only the publish→commit tail
-    // (see [[TextIndex.append]])
-    IndexIO.heartbeatClaim(spark, path, next)
-    IndexIO.publishShard(spark, staging, s"$path/postings/shard=$next")
-    // marker LAST: this rename is the commit point ([[TextIndex]]
-    // protocol, shared via IndexIO.commitShard); verifyTables closes
-    // the check-to-rename TOCTOU
-    IndexIO.commitShard(spark, path, next, enforceLease = true,
-      verifyTables = Seq("postings"))
+    ShardedIndex.append(spark, path, family)((stage, k) =>
+      writeShard(_ => assign(newVectors, centStored, meta), stage, k, partitions))
     // an evolved append widened the table schema: this JVM's schema
     // memo must re-read (it now resolves the NEWEST shard's footer —
     // the widest, since evolution is additive). Other long-lived JVMs
@@ -251,13 +196,13 @@ object VectorIndex {
   /** TOMBSTONE a set of vectors ("right to be forgotten" at 100 TB:
     * removing rows from a sorted multi-TB posting layout must not cost
     * a rebuild). `ids` (a `vec_id` column, the [[write]] input naming)
-    * is written as ONE NEW shard under `deletes/` — the [[append]]
-    * mechanics exactly: staged hidden dir, single publish rename,
-    * existing files untouched. Serving ([[topK]]) anti-joins the
-    * tombstone set AFTER the cid probe (only the probed lists pay the
-    * join) and BEFORE the re-rank, so survivors back-fill the top-k —
-    * identical semantics to a `candFilter` excluding the ids, and the
-    * same position the oracle replays.
+    * is written as ONE NEW shard under `deletes/`
+    * ([[ShardedIndex.delete]]), existing files untouched. Serving
+    * ([[topK]]) anti-joins the tombstone set AFTER the cid probe (only
+    * the probed lists pay the join) and BEFORE the re-rank, so
+    * survivors back-fill the top-k — identical semantics to a
+    * `candFilter` excluding the ids, and the same position the oracle
+    * replays.
     *
     * Tombstones are INDEX-WIDE, not sequenced against shards: a
     * deleted id stays invisible even if a later [[append]] re-ingests
@@ -266,164 +211,51 @@ object VectorIndex {
     * Callers re-ingesting a retired id compact first. Large tombstone
     * sets degrade every serve (an extra join side that never shrinks);
     * compaction is the remedy, same as shard accumulation. */
-  def delete(ids: DataFrame, path: String): Unit = {
-    require(ids.columns.contains("vec_id"),
-      s"delete ids need a vec_id column, got ${ids.columns.mkString(", ")}")
-    IndexIO.publishIdShard(
-      ids.select(col("vec_id").as("cand_id")), path, "cand_id")
-  }
+  def delete(ids: DataFrame, path: String): Unit =
+    ShardedIndex.delete(ids, path, "vec_id", "cand_id")
 
-  /** The stored tombstone set, if any shard exists — None keeps the
-    * no-deletes serving plan free of an empty-relation join. */
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    if (IndexIO.shardIds(spark, s"$path/deletes").nonEmpty)
-      Some(IndexIO.readTable(spark, path, "deletes").select("cand_id"))
-    else None
+  /** Fold all posting shards back into one (`shard=0`) and republish
+    * the WHOLE index ([[ShardedIndex.compact]]): tombstoned rows drop
+    * for good, the tombstone set clears, centroids are copied
+    * unchanged. Serving results are unchanged; only the file layout
+    * (and per-probe file-read count) improves. Also the migration of a
+    * pre-shard flat or pre-marker layout. EXCLUSIVE of appends (the
+    * root rename) — a live crawl loop compacts via
+    * [[maintain]]/[[compactAllInPlace]]. */
+  def compact(spark: SparkSession, path: String, partitions: Int = 8): Unit =
+    ShardedIndex.compact(spark, path, family, partitions)
 
-  /** Fold all posting shards back into one (`shard=0`): the compaction
-    * counterpart to [[append]]'s accumulate-shards contract. Reads every
-    * shard, drops tombstoned rows ([[delete]]) for good, re-lays the
-    * union by cid, and republishes the WHOLE index (centroids copied
-    * unchanged, tombstone set cleared — the staging dir simply carries
-    * no `deletes/`) via the full staging rename — the one operation
-    * here that rewrites history, so it gets [[IndexIO.publish]]'s
-    * aside/restore protection. Serving results are unchanged; only the
-    * file layout (and per-probe file-read count) improves. EXCLUSIVE of
-    * appends (the root rename) — the migration / claim-reset op; a live
-    * crawl loop compacts via [[maintain]]/[[compactAllInPlace]]. */
-  def compact(spark: SparkSession, path: String, partitions: Int = 8): Unit = {
-    // uncommitted crash leftovers must not be baked into shard=0
-    reconcileShards(spark, path)
-    IndexIO.gcStaging(spark, path) // reclaim crashed-build staging dirs
-    val staging = IndexIO.stagingFor(path)
-    IndexIO.readTable(spark, path, "centroids")
-      .write.mode(SaveMode.Overwrite).parquet(s"$staging/centroids")
-    // prune to LIVE committed shards when markers exist: a young
-    // uncommitted orphan survives the lease-honoring reconcile above
-    // and must not be baked into shard=0 (legacy layouts read whole)
-    val liveIds = IndexIO.liveCommittedIds(spark, path)
-    val postings =
-      if (liveIds.nonEmpty) IndexIO.readCommitted(spark, path, "postings", liveIds)
-      else IndexIO.readTable(spark, path, "postings")
-    IndexIO.sortedLayout(
-        IndexIO.subtractTombstones(spark, path, postings, "cand_id", "cand_id")
-          .select((Seq("cid", "cand_id", "c_emb") ++ storedMetaCols(postings))
-            .map(col): _*),
-        partitions, Seq("cid", "cand_id"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$staging/postings/shard=0")
-    // compact is also the pre-marker → marker-layout migration (the
-    // flat-layout precedent): the republished index always carries its
-    // commit marker, so appends work on it afterwards
-    IndexIO.commitShard(spark, staging, 0)
-    IndexIO.publish(spark, staging, path)
-  }
-
-  /** SIZE-TIERED incremental compaction (the [[TextIndex.compactSmall]]
-    * protocol): fold ONLY posting shards that are small (bytes ≤
-    * `maxShardBytes`) or tombstone-heavy (≥ `tombstoneFrac` of the
-    * shard's rows deleted) into one new cid-sorted shard, committed
-    * with a REPLACES marker — one atomic rename swaps the fold set out
-    * of the live id set; every other shard (and the centroid table)
-    * stays byte-identical, so daily small appends compact without
-    * rewriting the multi-TB tail. Tombstones inside folded shards drop
-    * physically; the tombstone SET clears only on a full [[compact]].
-    * Returns the folded shard ids (empty = nothing worth folding). */
+  /** SIZE-TIERED incremental compaction ([[ShardedIndex.compactTiered]]):
+    * fold ONLY posting shards that are small (bytes ≤ `maxShardBytes`)
+    * or tombstone-heavy (≥ `tombstoneFrac` of the shard's rows deleted)
+    * into one new cid-sorted shard, committed with a REPLACES marker;
+    * every other shard (and the centroid table) stays byte-identical.
+    * Tombstones inside folded shards drop physically; the tombstone SET
+    * clears only on a full compaction. Returns the folded shard ids
+    * (empty = nothing worth folding). */
   def compactSmall(spark: SparkSession, path: String, maxShardBytes: Long,
                    partitions: Int = 8, tombstoneFrac: Double = 0.5): Seq[Int] =
-    compactTiered(spark, path, Some(maxShardBytes), partitions, tombstoneFrac)
+    ShardedIndex.compactTiered(spark, path, family, Some(maxShardBytes),
+      partitions, tombstoneFrac)
 
-  /** Full compaction WITHOUT the root-replacing rename (the
-    * [[TextIndex.compactAllInPlace]] twin): folds ALL live posting
-    * shards into one new cid-sorted shard under the existing root via a
+  /** Full compaction WITHOUT the root-replacing rename: folds ALL live
+    * posting shards into one new shard under the existing root via a
     * REPLACES marker and clears the tombstone shards observed at entry
     * (centroids untouched). [[maintain]]'s full-compact route — safe
     * under concurrent appends, unlike [[compact]]'s whole-root rename.
     * Returns the folded shard ids. */
   def compactAllInPlace(spark: SparkSession, path: String,
                         partitions: Int = 8): Seq[Int] =
-    compactTiered(spark, path, None, partitions, 0.5)
+    ShardedIndex.compactTiered(spark, path, family, None, partitions, 0.5)
 
-  private def compactTiered(spark: SparkSession, path: String,
-                            maxShardBytes: Option[Long], partitions: Int,
-                            tombstoneFrac: Double): Seq[Int] = {
-    // maintainer mutual exclusion — see [[TextIndex]] compactTiered
-    val lockNonce = IndexIO.acquireMaintLock(spark, path)
-    try compactTieredLocked(spark, path, maxShardBytes, partitions,
-      tombstoneFrac, lockNonce)
-    finally IndexIO.releaseMaintLock(spark, path, lockNonce)
-  }
-
-  private def compactTieredLocked(spark: SparkSession, path: String,
-                                  maxShardBytes: Option[Long], partitions: Int,
-                                  tombstoneFrac: Double,
-                                  lockNonce: String): Seq[Int] = {
-    reconcileShards(spark, path)
-    IndexIO.gcStaging(spark, path)
-    IndexIO.gcClaims(spark, path) // bound historical claim dirs (single-maintainer)
-    // observed BEFORE the live-shard listing — only these may clear on
-    // fold-all (a concurrently-landing tombstone shard stays applied;
-    // the ordering makes a tombstone targeting a later-committed shard
-    // provably a delete-before-append, so clearing cannot resurrect —
-    // see the [[TextIndex]] compactTiered note)
-    val obsDels = IndexIO.shardIds(spark, s"$path/deletes")
-    val live = IndexIO.liveCommittedIds(spark, path)
-    require(live.nonEmpty,
-      s"index at $path has no committed shards; compactSmall needs the marker layout")
-    val dels = tombstones(spark, path)
-    val fold = maxShardBytes match {
-      case None => live
-      case Some(bytes) =>
-        val small = live.filter(k =>
-          IndexIO.dirBytes(spark, s"$path/postings/shard=$k") <= bytes)
-        val heavy: Seq[Int] = dels match {
-          case Some(d) =>
-            IndexIO.readCommitted(spark, path, "postings", live)
-              .select(col("shard"), col("cand_id"))
-              .join(d.withColumn("t", lit(1)), Seq("cand_id"), "left")
-              .groupBy("shard").agg(count(lit(1)).as("total"),
-                sum(coalesce(col("t"), lit(0))).as("dead"))
-              .filter(col("dead").cast("double") >=
-                lit(tombstoneFrac) * col("total").cast("double"))
-              .select("shard").collect().map(_.getInt(0)).toSeq
-          case None => Nil
-        }
-        val f = (small ++ heavy).distinct.sorted
-        if (f.length < 2 && heavy.isEmpty) return Nil
-        f
-    }
-    val next = IndexIO.claimShardId(spark, path, Seq("postings"))
-    IndexIO.heartbeatMaintLock(spark, path, lockNonce)
-    val folded = IndexIO.readCommitted(spark, path, "postings", fold)
-    val staging = IndexIO.shardStagingFor(s"$path/postings")
-    IndexIO.sortedLayout(
-        IndexIO.subtractTombstones(spark, path, folded, "cand_id", "cand_id")
-          .select((Seq("cid", "cand_id", "c_emb") ++ storedMetaCols(folded))
-            .map(col): _*),
-        partitions, Seq("cid", "cand_id"))
-      .write.mode(SaveMode.Overwrite).parquet(staging)
-    IndexIO.publishShard(spark, staging, s"$path/postings/shard=$next")
-    // the commit point: one rename swaps the fold set for the new shard
-    IndexIO.commitShard(spark, path, next, replaces = fold,
-      maintLockNonce = lockNonce)
-    for (k <- fold) IndexIO.deleteDir(spark, s"$path/commits/shard=$k")
-    for (k <- fold) IndexIO.deleteDir(spark, s"$path/postings/shard=$k")
-    if (maxShardBytes.isEmpty)
-      for (k <- obsDels) IndexIO.deleteDir(spark, s"$path/deletes/shard=$k")
-    fold
-  }
-
-  /** Compaction trigger policy ([[IndexMaintenance]]): call after each
-    * crawl/ingest generation; keeps live shards ≤ `maxShards` and the
-    * dead-row fraction < `tombstoneFrac` by choosing (nothing |
+  /** Compaction trigger policy ([[ShardedIndex.maintain]]): call after
+    * each crawl/ingest generation; keeps live shards ≤ `maxShards` and
+    * the dead-row fraction < `tombstoneFrac` by choosing (nothing |
     * size-tiered [[compactSmall]] | fold-all [[compactAllInPlace]])
-    * from shard stats. Safe under concurrent appends — see
-    * [[IndexMaintenance]]. */
+    * from shard stats. Safe under concurrent appends. */
   def maintain(spark: SparkSession, path: String, maxShards: Int = 8,
                tombstoneFrac: Double = 0.3, partitions: Int = 8): MaintainReport =
-    IndexMaintenance.run(spark, path, Seq("postings"), "postings", "cand_id",
-      maxShards, tombstoneFrac,
-      () => compactAllInPlace(spark, path, partitions),
-      bytes => compactSmall(spark, path, bytes, partitions, tombstoneFrac))
+    ShardedIndex.maintain(spark, path, family, maxShards, tombstoneFrac, partitions)
 
   /** Serve a (small) query batch from the stored index: assign each
     * query to its `nprobe` nearest centroids, then read ONLY those

@@ -58,13 +58,15 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
       limit = limitOf(o))
   }
 
-  /** A request's `limit` (default 5), checked here so a negative one is
-    * the client's fault, not a failed Spark plan. */
-  private def limitOf(o: Map[String, Value]): Int = {
-    val limit = o.get("limit").collect { case Num(d) => d.toInt }.getOrElse(5)
-    require(limit >= 0, s"limit must be >= 0, got $limit")
-    limit
-  }
+  /** A request's `limit` (default 5), checked here so a negative,
+    * fractional or out-of-range one is the client's fault, not a
+    * silently truncated or failed Spark plan. */
+  private def limitOf(o: Map[String, Value]): Int =
+    o.get("limit").collect { case Num(d) =>
+      require(d.isWhole && d >= 0 && d <= Int.MaxValue,
+        s"limit must be an integer in [0, ${Int.MaxValue}], got $d")
+      d.toInt
+    }.getOrElse(5)
 
   private def hitJson(h: Hit): Value = Obj(Map(
     "name" -> Str(h.name),
@@ -122,19 +124,28 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
   /** A JSON `POST` endpoint in two phases, each with its own fault
     * class: `parse` turns the body into a request — any failure there
     * is the client's (422) — and `serve` answers it — any failure there
-    * is the engine's (500). */
+    * is the engine's (500). At most [[ScoutServer.MaxBodyBytes]] of the
+    * body is read: a larger one is answered 413 and its connection
+    * closed, never buffered whole on the driver heap. */
   private def jsonEndpoint[A](path: String)(parse: Value => A)(serve: A => Value): Unit =
     server.createContext(path, new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         val t0 = System.nanoTime()
-        def fail(code: Int, e: Exception): Unit = respond(ex, code, write(Obj(Map(
-          "detail" -> Str(Option(e.getMessage).getOrElse(e.getClass.getSimpleName))))), t0)
+        def detail(msg: String): String = write(Obj(Map("detail" -> Str(msg))))
+        def fail(code: Int, e: Exception): Unit = respond(ex, code,
+          detail(Option(e.getMessage).getOrElse(e.getClass.getSimpleName)), t0)
         if (ex.getRequestMethod != "POST") {
           respond(ex, 405, """{"detail": "Method Not Allowed"}""", t0)
           return
         }
-        val req = try parse(Json.parse(
-          new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)))
+        val raw = ex.getRequestBody.readNBytes(ScoutServer.MaxBodyBytes + 1)
+        if (raw.length > ScoutServer.MaxBodyBytes) {
+          ex.getResponseHeaders.set("Connection", "close") // the rest stays unread
+          respond(ex, 413, detail(
+            s"request body exceeds ${ScoutServer.MaxBodyBytes} bytes"), t0)
+          return
+        }
+        val req = try parse(Json.parse(new String(raw, StandardCharsets.UTF_8)))
         catch { case e: Exception => fail(422, e); return }
         val body = try write(serve(req)) catch { case e: Exception => fail(500, e); return }
         respond(ex, 200, body, t0)
@@ -168,8 +179,12 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
   jsonEndpoint("/v1/geocode/reverse") { v =>
     v.asObj("points").asArr.map { p =>
       val po = p.asObj
-      (po("lat") match { case Num(d) => d; case v => sys.error(s"bad lat: $v") },
-        po("lon") match { case Num(d) => d; case v => sys.error(s"bad lon: $v") })
+      def coord(name: String, bound: Int): Double = po(name) match {
+        case Num(d) if math.abs(d) <= bound => d // false for NaN and ±∞
+        case Num(d) => sys.error(s"$name must be a finite number in [-$bound, $bound], got $d")
+        case v => sys.error(s"bad $name: $v")
+      }
+      (coord("lat", 90), coord("lon", 180))
     }
   } { pts =>
     Obj(Map("results" -> Arr(pts.zip(engine.reverse(pts)).map { case ((la, lo), r) =>
@@ -186,6 +201,11 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
 }
 
 object ScoutServer {
+
+  /** Largest request body a JSON endpoint reads: 1 MiB, two orders of
+    * magnitude above the largest body in use (a 200-point reverse batch
+    * is ~7.5 KB). */
+  val MaxBodyBytes: Int = 1 << 20
 
   /** OpenAPI 3.0 document for the four endpoints. The forward example
     * is the reference's worked request (`app.py:75-84`: Monograph
@@ -209,6 +229,8 @@ object ScoutServer {
       |        "responses": {
       |          "200": {"description": "Ranked hits", "content": {"application/json": {
       |            "schema": {"$ref": "#/components/schemas/ForwardResp"}}}},
+      |          "413": {"description": "Request body over 1 MiB", "content": {"application/json": {
+      |            "schema": {"$ref": "#/components/schemas/Error"}}}},
       |          "422": {"description": "Validation error", "content": {"application/json": {
       |            "schema": {"$ref": "#/components/schemas/Error"}}}},
       |          "500": {"description": "Engine error", "content": {"application/json": {
@@ -223,6 +245,8 @@ object ScoutServer {
       |          "200": {"description": "Per-query hits in request order",
       |            "content": {"application/json": {
       |              "schema": {"$ref": "#/components/schemas/BulkResp"}}}},
+      |          "413": {"description": "Request body over 1 MiB", "content": {"application/json": {
+      |            "schema": {"$ref": "#/components/schemas/Error"}}}},
       |          "422": {"description": "Validation error", "content": {"application/json": {
       |            "schema": {"$ref": "#/components/schemas/Error"}}}},
       |          "500": {"description": "Engine error", "content": {"application/json": {
@@ -237,6 +261,8 @@ object ScoutServer {
       |          "200": {"description": "Nearest hit (or null) per point in request order",
       |            "content": {"application/json": {
       |              "schema": {"$ref": "#/components/schemas/ReverseResp"}}}},
+      |          "413": {"description": "Request body over 1 MiB", "content": {"application/json": {
+      |            "schema": {"$ref": "#/components/schemas/Error"}}}},
       |          "422": {"description": "Validation error", "content": {"application/json": {
       |            "schema": {"$ref": "#/components/schemas/Error"}}}},
       |          "500": {"description": "Engine error", "content": {"application/json": {
@@ -257,7 +283,7 @@ object ScoutServer {
       |          "items": {"$ref": "#/components/schemas/ForwardCandidate"}},
       |        "country": {"type": "string", "nullable": true},
       |        "city_hint": {"type": "string", "nullable": true},
-      |        "limit": {"type": "integer", "default": 5}}},
+      |        "limit": {"type": "integer", "minimum": 0, "default": 5}}},
       |    "Hit": {"type": "object",
       |      "required": ["name", "lat", "lon", "osm_id", "kind", "score"],
       |      "properties": {
@@ -276,7 +302,7 @@ object ScoutServer {
       |      "properties": {
       |        "queries": {"type": "array",
       |          "items": {"$ref": "#/components/schemas/ForwardCandidate"}},
-      |        "limit": {"type": "integer", "default": 5}}},
+      |        "limit": {"type": "integer", "minimum": 0, "default": 5}}},
       |    "BulkResp": {"type": "object", "properties": {
       |      "results": {"type": "array", "items": {"type": "object", "properties": {
       |        "text": {"type": "string"},
@@ -285,7 +311,8 @@ object ScoutServer {
       |    "ReverseReq": {"type": "object", "required": ["points"],
       |      "properties": {"points": {"type": "array", "items": {
       |        "type": "object", "required": ["lat", "lon"], "properties": {
-      |          "lat": {"type": "number"}, "lon": {"type": "number"}}}}}},
+      |          "lat": {"type": "number", "minimum": -90, "maximum": 90},
+      |          "lon": {"type": "number", "minimum": -180, "maximum": 180}}}}}},
       |    "ReverseResp": {"type": "object", "properties": {
       |      "results": {"type": "array", "items": {"type": "object", "properties": {
       |        "lat": {"type": "number"}, "lon": {"type": "number"},

@@ -3,7 +3,7 @@ package graft.ext
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The compaction trigger policy ([[IndexMaintenance]], VERDICT r9
+/** The compaction trigger policy ([[ShardedIndex.maintain]], VERDICT r9
   * task 4): a long-lived crawl loop of appends + deletes, with
   * `maintain` called once per generation, must (a) keep the live shard
   * count bounded by `maxShards`, (b) keep the index-wide dead-row

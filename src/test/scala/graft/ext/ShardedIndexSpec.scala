@@ -1,0 +1,84 @@
+package graft.ext
+
+import graft.SparkSpec
+import org.apache.spark.sql.functions._
+
+import java.nio.file.{Files, Paths}
+
+/** The one shard-protocol core ([[ShardedIndex]]) behind the three
+  * index families: a rule it owns behaves the same for every family,
+  * and the families do not grow their own copies of the protocol back.
+  */
+class ShardedIndexSpec extends SparkSpec {
+
+  import spark.implicits._
+
+  private def fresh(tag: String) = Files
+    .createTempDirectory(s"graft-sharded-$tag").toString + "/idx"
+
+  private def tdocs(ids: Seq[Long]) = ids
+    .map(i => (i, s"fox spark jugs doc$i tok${i % 5}")).toDF("doc_id", "text")
+  private def mtoks(ids: Seq[Long]) = Dedup.docTokens(
+    ids.map(i => (i, s"unique text $i topic ${i % 7}")).toDF("doc_id", "text"),
+    "doc_id", "text", distinct = false)
+  private lazy val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+  private def vecs(lo: Long, hi: Long) = emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
+
+  /** (family, build three shards 0/1/2 of ten-plus rows each, tombstone
+    * one row of shard 1, compactSmall) */
+  private lazy val families: Seq[(String, String => Unit, String => Unit,
+      (String, Double) => Seq[Int])] = Seq(
+    ("TextIndex",
+      p => {
+        TextIndex.write(tdocs(0L until 10L), p)
+        TextIndex.append(tdocs(10L until 20L), p)
+        TextIndex.append(tdocs(20L until 30L), p)
+      },
+      p => TextIndex.delete(Seq(15L).toDF("doc_id"), p),
+      (p, frac) => TextIndex.compactSmall(spark, p, maxShardBytes = 0L, tombstoneFrac = frac)),
+    ("MinHashIndex",
+      p => {
+        MinHashIndex.write(mtoks(0L until 12L), p, 8, rowsPerBand = 2)
+        MinHashIndex.append(mtoks(12L until 24L), p, 8, rowsPerBand = 2)
+        MinHashIndex.append(mtoks(24L until 36L), p, 8, rowsPerBand = 2)
+      },
+      p => MinHashIndex.delete(Seq(15L).toDF("id"), p),
+      (p, frac) => MinHashIndex.compactSmall(spark, p, maxShardBytes = 0L, tombstoneFrac = frac)),
+    ("VectorIndex",
+      p => {
+        VectorIndex.write(vecs(0L, 200L), p, nCentroids = 4)
+        VectorIndex.append(vecs(200L, 300L), p)
+        VectorIndex.append(vecs(300L, 400L), p)
+      },
+      p => VectorIndex.delete(Seq(250L).toDF("vec_id"), p),
+      (p, frac) => VectorIndex.compactSmall(spark, p, maxShardBytes = 0L, tombstoneFrac = frac)))
+
+  test("tombstone-heavy means at least one dead row, for every family") {
+    // per family: (folded with no tombstone at all, folded with one dead
+    // row in shard 1, live shards after) — no shard is small, so only
+    // the heavy rule decides, at the lowest possible fraction bound
+    val got = families.map { case (name, build, deleteOne, compactSmall) =>
+      val path = fresh(name)
+      build(path)
+      assert(IndexIO.liveCommittedIds(spark, path) == Seq(0, 1, 2), name)
+      val clean = compactSmall(path, 0.0)
+      deleteOne(path)
+      name -> ((clean, compactSmall(path, 0.0), IndexIO.liveCommittedIds(spark, path)))
+    }
+    val expected = (Seq[Int](), Seq(1), Seq(0, 2, 3))
+    assert(got.toMap == families.map(_._1 -> expected).toMap)
+  }
+
+  test("the index families call none of the protocol primitives ShardedIndex owns") {
+    val owned = Seq("acquireMaintLock", "releaseMaintLock", "heartbeatMaintLock",
+      "claimShardId", "heartbeatClaim", "leasedIds", "gcClaims", "gcStaging",
+      "dropIncompleteCommitted")
+    val dir = Paths.get("src/main/scala/graft/ext")
+    for (file <- Seq("TextIndex.scala", "VectorIndex.scala", "MinHashIndex.scala")) {
+      val src = new String(Files.readAllBytes(dir.resolve(file)), "UTF-8")
+      val found = owned.filter(m => src.contains(s"IndexIO.$m"))
+      assert(found.isEmpty,
+        s"$file calls ${found.mkString(", ")} — route the protocol through ShardedIndex")
+    }
+  }
+}

@@ -189,6 +189,58 @@ class ScoutServerSpec extends SparkSpec {
     assert(c2 == 405)
   }
 
+  test("request body over the 1 MiB cap -> 413 with detail, and the connection closes") {
+    // raw socket: the client must see the status line AND the server's
+    // close (EOF), not a reset or a hang on the unread remainder
+    val sock = new java.net.Socket("127.0.0.1", server.boundPort)
+    try {
+      sock.setSoTimeout(20000)
+      val body = ("""{"points":[""" + " " * ScoutServer.MaxBodyBytes + "]}")
+        .getBytes(StandardCharsets.UTF_8)
+      val out = sock.getOutputStream
+      out.write(("POST /v1/geocode/reverse HTTP/1.1\r\nHost: x\r\n" +
+        s"Content-Length: ${body.length}\r\n\r\n").getBytes(StandardCharsets.UTF_8))
+      out.write(body)
+      out.flush()
+      val resp = new String(sock.getInputStream.readAllBytes(), StandardCharsets.UTF_8)
+      assert(resp.startsWith("HTTP/1.1 413"), resp.take(200))
+      assert(resp.contains("detail") && resp.contains("exceeds"), resp)
+    } finally sock.close()
+    // the 413 path leaves the server healthy, and a body under the cap
+    // still parses
+    val (code, body, _) = http("POST", "/v1/geocode/reverse",
+      """{"points":[{"lat": 3.14, "lon": 101.69}]}""")
+    assert(code == 200, body)
+  }
+
+  test("non-finite or out-of-range coordinates and a non-integral limit -> 422") {
+    def reverse(lat: String, lon: String) = http("POST", "/v1/geocode/reverse",
+      s"""{"points":[{"lat": 3.14, "lon": 101.69}, {"lat": $lat, "lon": $lon}]}""")
+    for ((lat, lon, field) <- Seq(("1e400", "101.69", "lat"), ("3.14", "-1e400", "lon"),
+        ("90.5", "101.69", "lat"), ("-91", "101.69", "lat"),
+        ("3.14", "180.01", "lon"), ("3.14", "-181", "lon"))) {
+      val (code, body, _) = reverse(lat, lon)
+      assert(code == 422 && body.contains(field), s"($lat, $lon): $code $body")
+    }
+    val (edge, edgeBody, _) = reverse("-90", "180") // the closed bounds are valid
+    assert(edge == 200, edgeBody)
+    for (limit <- Seq("2.7", "1e12", "-1")) {
+      val (code, body, _) = http("POST", "/v1/geocode/forward",
+        s"""{"candidates":[{"text":"Monograph Dining"}],"limit":$limit}""")
+      assert(code == 422 && body.contains("limit"), s"limit $limit: $code $body")
+    }
+    val (whole, wholeBody, _) = http("POST", "/v1/geocode/bulk",
+      """{"queries":[{"text":"Monograph Dining"}],"limit":3.0}""")
+    assert(whole == 200, wholeBody)
+    // the OpenAPI document states the same contract
+    val spec = Json.parse(http("GET", "/openapi.json")._2).asObj
+    val pt = spec("components").asObj("schemas").asObj("ReverseReq").asObj("properties")
+      .asObj("points").asObj("items").asObj("properties").asObj
+    assert(pt("lat").asObj("maximum").asNum == 90 && pt("lon").asObj("minimum").asNum == -180)
+    for (p <- Seq("/v1/geocode/forward", "/v1/geocode/bulk", "/v1/geocode/reverse"))
+      assert(spec("paths").asObj(p).asObj("post").asObj("responses").asObj.contains("413"), p)
+  }
+
   test("engine failure -> 500 (a Spark job over a deleted gazetteer dir); a bad body stays 422") {
     val schema = StructType(Seq(
       StructField("id", LongType),
