@@ -14,7 +14,8 @@ import java.nio.charset.StandardCharsets
   *     `app.py:14-38`)
   *   - `GET /healthz` → `{"ok": true}` (`app.py:116-118`)
   *   - `Server-Timing: app;dur=<ms>` + `X-Process-Time` response headers
-  *     (`app.py:58-65`)
+  *     (`app.py:58-65`); a JSON endpoint's 200 also times its
+  *     `parse`, `engine` and `serialize` phases
   *
   * One engine (one SparkSession, cached gazetteer) serves all requests —
   * the Spark replacement for the reference's per-request read-only
@@ -24,6 +25,13 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
 
   import Json._
 
+  // TCP_NODELAY on every accepted connection. `HttpExchange` writes the
+  // headers and the body as two writes, and cannot combine them; with
+  // Nagle on, the body waits for the client to ACK the headers, which a
+  // keep-alive client delays by ~40 ms. The channel itself is out of
+  // reach without `--add-opens`, so the JDK's own switch is set, before
+  // the first server loads `ServerConfig`, which reads it once.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   // Real request concurrency: SparkSession is thread-safe and concurrent
   // collect()s schedule as concurrent jobs over the shared cached
@@ -36,17 +44,36 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
 
   def boundPort: Int = server.getAddress.getPort
 
-  private def respond(ex: HttpExchange, code: Int, body: String,
-                      startedNs: Long): Unit = {
-    val ms = (System.nanoTime() - startedNs) / 1e6
+  /** Answer `ex` with `body`. `Server-Timing` lists each of `phases` (a
+    * name and the `nanoTime` it ended, in order after `startedNs`), then
+    * `app`, the total, which `X-Process-Time` repeats. Durations are
+    * whole microseconds of the offsets from `startedNs`, so the phases
+    * never sum past `app`. */
+  private def respond(ex: HttpExchange, code: Int, body: String, startedNs: Long,
+                      phases: Seq[(String, Long)] = Nil,
+                      contentType: String = "application/json"): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.getResponseHeaders.set("Server-Timing", f"app;dur=$ms%.1f")
-    ex.getResponseHeaders.set("X-Process-Time", f"$ms%.1f")
+    val ends = (phases.map(_._2) :+ System.nanoTime()).map(t => (t - startedNs) / 1000)
+    val starts = 0L +: ends
+    def ms(us: Long): String = f"${us / 1e3}%.3f"
+    val timing = phases.indices.map(i => s"${phases(i)._1};dur=${ms(ends(i) - starts(i))}") :+
+      s"app;dur=${ms(ends.last)}"
+    ex.getResponseHeaders.set("Content-Type", contentType)
+    ex.getResponseHeaders.set("Server-Timing", timing.mkString(", "))
+    ex.getResponseHeaders.set("X-Process-Time", ms(ends.last))
     ex.sendResponseHeaders(code, bytes.length)
     ex.getResponseBody.write(bytes)
     ex.close()
   }
+
+  /** False, after answering 405 with the `Allow` header RFC 9110
+    * §15.5.6 requires, unless `ex` uses `method`. */
+  private def allows(ex: HttpExchange, method: String, startedNs: Long): Boolean =
+    ex.getRequestMethod == method || {
+      ex.getResponseHeaders.set("Allow", method)
+      respond(ex, 405, """{"detail": "Method Not Allowed"}""", startedNs)
+      false
+    }
 
   private def parseReq(body: Value): ForwardReq = {
     val o = body.asObj
@@ -59,14 +86,22 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
   }
 
   /** A request's `limit` (default 5), checked here so a negative,
-    * fractional or out-of-range one is the client's fault, not a
-    * silently truncated or failed Spark plan. */
+    * fractional or over-cap one is the client's fault, not a silently
+    * truncated or failed Spark plan. */
   private def limitOf(o: Map[String, Value]): Int =
     o.get("limit").collect { case Num(d) =>
-      require(d.isWhole && d >= 0 && d <= Int.MaxValue,
-        s"limit must be an integer in [0, ${Int.MaxValue}], got $d")
+      require(d.isWhole && d >= 0 && d <= ScoutServer.MaxLimit,
+        s"limit must be an integer in [0, ${ScoutServer.MaxLimit}], got $d")
       d.toInt
     }.getOrElse(5)
+
+  /** The array `o(key)`, at most [[ScoutServer.MaxItems]] long. */
+  private def batchOf(o: Map[String, Value], key: String): Seq[Value] = {
+    val items = o(key).asArr
+    require(items.length <= ScoutServer.MaxItems,
+      s"$key takes at most ${ScoutServer.MaxItems} entries, got ${items.length}")
+    items
+  }
 
   private def hitJson(h: Hit): Value = Obj(Map(
     "name" -> Str(h.name),
@@ -94,9 +129,7 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
   server.createContext("/openapi.json", new HttpHandler {
     override def handle(ex: HttpExchange): Unit = {
       val t0 = System.nanoTime()
-      if (ex.getRequestMethod != "GET")
-        respond(ex, 405, """{"detail": "Method Not Allowed"}""", t0)
-      else respond(ex, 200, ScoutServer.openApiJson, t0)
+      if (allows(ex, "GET", t0)) respond(ex, 200, ScoutServer.openApiJson, t0)
     }
   })
 
@@ -106,18 +139,8 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
   server.createContext("/docs", new HttpHandler {
     override def handle(ex: HttpExchange): Unit = {
       val t0 = System.nanoTime()
-      if (ex.getRequestMethod != "GET") {
-        respond(ex, 405, """{"detail": "Method Not Allowed"}""", t0)
-        return
-      }
-      val bytes = ScoutServer.docsHtml.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "text/html; charset=utf-8")
-      // duration measured at write time, like respond() does
-      ex.getResponseHeaders.set("Server-Timing",
-        f"app;dur=${(System.nanoTime() - t0) / 1e6}%.1f")
-      ex.sendResponseHeaders(200, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
+      if (allows(ex, "GET", t0))
+        respond(ex, 200, ScoutServer.docsHtml, t0, contentType = "text/html; charset=utf-8")
     }
   })
 
@@ -126,7 +149,9 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
     * is the client's (422) — and `serve` answers it — any failure there
     * is the engine's (500). At most [[ScoutServer.MaxBodyBytes]] of the
     * body is read: a larger one is answered 413 and its connection
-    * closed, never buffered whole on the driver heap. */
+    * closed, never buffered whole on the driver heap. A 200's
+    * `Server-Timing` splits `app` into `parse` (reading and parsing the
+    * body), `engine` (`serve`) and `serialize` (writing the JSON). */
   private def jsonEndpoint[A](path: String)(parse: Value => A)(serve: A => Value): Unit =
     server.createContext(path, new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
@@ -134,10 +159,7 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
         def detail(msg: String): String = write(Obj(Map("detail" -> Str(msg))))
         def fail(code: Int, e: Exception): Unit = respond(ex, code,
           detail(Option(e.getMessage).getOrElse(e.getClass.getSimpleName)), t0)
-        if (ex.getRequestMethod != "POST") {
-          respond(ex, 405, """{"detail": "Method Not Allowed"}""", t0)
-          return
-        }
+        if (!allows(ex, "POST", t0)) return
         val raw = ex.getRequestBody.readNBytes(ScoutServer.MaxBodyBytes + 1)
         if (raw.length > ScoutServer.MaxBodyBytes) {
           ex.getResponseHeaders.set("Connection", "close") // the rest stays unread
@@ -147,8 +169,12 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
         }
         val req = try parse(Json.parse(new String(raw, StandardCharsets.UTF_8)))
         catch { case e: Exception => fail(422, e); return }
-        val body = try write(serve(req)) catch { case e: Exception => fail(500, e); return }
-        respond(ex, 200, body, t0)
+        val parsed = System.nanoTime()
+        val value = try serve(req) catch { case e: Exception => fail(500, e); return }
+        val served = System.nanoTime()
+        val body = try write(value) catch { case e: Exception => fail(500, e); return }
+        respond(ex, 200, body, t0,
+          Seq("parse" -> parsed, "engine" -> served, "serialize" -> System.nanoTime()))
       }
     })
 
@@ -164,7 +190,7 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
     * single-candidate `/v1/geocode/forward` call (spec-pinned). */
   jsonEndpoint("/v1/geocode/bulk") { v =>
     val o = v.asObj
-    (o("queries").asArr.map(q => q.asObj("text").asStr), limitOf(o))
+    (batchOf(o, "queries").map(q => q.asObj("text").asStr), limitOf(o))
   } { case (texts, limit) =>
     Obj(Map("results" -> Arr(texts.zip(engine.bulk(texts, limit)).map { case (t, hits) =>
       Obj(Map("text" -> Str(t), "hits" -> Arr(hits.map(hitJson))))
@@ -177,7 +203,7 @@ class ScoutServer(engine: ScoutEngine, port: Int = 8000, threads: Int = 8) {
     * short list answers in-process from the driver cell cache, a longer
     * one as one Spark job over the snapshot's cell index). */
   jsonEndpoint("/v1/geocode/reverse") { v =>
-    v.asObj("points").asArr.map { p =>
+    batchOf(v.asObj, "points").map { p =>
       val po = p.asObj
       def coord(name: String, bound: Int): Double = po(name) match {
         case Num(d) if math.abs(d) <= bound => d // false for NaN and ±∞
@@ -206,6 +232,15 @@ object ScoutServer {
     * magnitude above the largest body in use (a 200-point reverse batch
     * is ~7.5 KB). */
   val MaxBodyBytes: Int = 1 << 20
+
+  /** Most entries a bulk `queries` or reverse `points` array may hold:
+    * 50 times the largest batch in use (200 points). */
+  val MaxItems: Int = 10000
+
+  /** Largest `limit`: the forward path's scan cap (`limitScan`), past
+    * which a forward request returns no more hits; bulk keeps the same
+    * bound. */
+  val MaxLimit: Int = 10000
 
   /** OpenAPI 3.0 document for the four endpoints. The forward example
     * is the reference's worked request (`app.py:75-84`: Monograph
@@ -283,7 +318,7 @@ object ScoutServer {
       |          "items": {"$ref": "#/components/schemas/ForwardCandidate"}},
       |        "country": {"type": "string", "nullable": true},
       |        "city_hint": {"type": "string", "nullable": true},
-      |        "limit": {"type": "integer", "minimum": 0, "default": 5}}},
+      |        "limit": {"type": "integer", "minimum": 0, "maximum": 10000, "default": 5}}},
       |    "Hit": {"type": "object",
       |      "required": ["name", "lat", "lon", "osm_id", "kind", "score"],
       |      "properties": {
@@ -300,16 +335,16 @@ object ScoutServer {
       |      "hits": {"type": "array", "items": {"$ref": "#/components/schemas/Hit"}}}},
       |    "BulkReq": {"type": "object", "required": ["queries"],
       |      "properties": {
-      |        "queries": {"type": "array",
+      |        "queries": {"type": "array", "maxItems": 10000,
       |          "items": {"$ref": "#/components/schemas/ForwardCandidate"}},
-      |        "limit": {"type": "integer", "minimum": 0, "default": 5}}},
+      |        "limit": {"type": "integer", "minimum": 0, "maximum": 10000, "default": 5}}},
       |    "BulkResp": {"type": "object", "properties": {
       |      "results": {"type": "array", "items": {"type": "object", "properties": {
       |        "text": {"type": "string"},
       |        "hits": {"type": "array",
       |          "items": {"$ref": "#/components/schemas/Hit"}}}}}}},
       |    "ReverseReq": {"type": "object", "required": ["points"],
-      |      "properties": {"points": {"type": "array", "items": {
+      |      "properties": {"points": {"type": "array", "maxItems": 10000, "items": {
       |        "type": "object", "required": ["lat", "lon"], "properties": {
       |          "lat": {"type": "number", "minimum": -90, "maximum": 90},
       |          "lon": {"type": "number", "minimum": -180, "maximum": 180}}}}}},

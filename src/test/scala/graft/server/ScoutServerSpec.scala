@@ -6,7 +6,7 @@ import graft.etl.GazetteerBuilder
 import graft.query.ScoutEngine
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
-import java.net.{HttpURLConnection, URI}
+import java.net.{HttpURLConnection, InetSocketAddress, URI}
 import java.nio.charset.StandardCharsets
 
 class ScoutServerSpec extends SparkSpec {
@@ -42,7 +42,7 @@ class ScoutServerSpec extends SparkSpec {
     val code = conn.getResponseCode
     val stream = if (code < 400) conn.getInputStream else conn.getErrorStream
     val text = new String(stream.readAllBytes(), StandardCharsets.UTF_8)
-    val headers = Seq("Server-Timing", "X-Process-Time")
+    val headers = Seq("Server-Timing", "X-Process-Time", "Allow", "Content-Type")
       .flatMap(h => Option(conn.getHeaderField(h)).map(h -> _)).toMap
     (code, text, headers)
   }
@@ -91,8 +91,10 @@ class ScoutServerSpec extends SparkSpec {
   }
 
   test("docs page serves endpoint list as HTML") {
-    val (code, body, _) = http("GET", "/docs")
+    val (code, body, headers) = http("GET", "/docs")
     assert(code == 200)
+    assert(headers.get("Content-Type").contains("text/html; charset=utf-8"), headers)
+    assert(headers.contains("Server-Timing"), headers)
     assert(body.contains("/openapi.json") && body.contains("/v1/geocode/forward")
       && body.contains("Monograph Dining"))
   }
@@ -103,8 +105,115 @@ class ScoutServerSpec extends SparkSpec {
   }
 
   test("wrong method -> 405") {
-    val (code, _, _) = http("GET", "/v1/geocode/forward")
-    assert(code == 405)
+    // RFC 9110 §15.5.6: a 405 names the methods the resource allows
+    for ((method, path, allow) <- Seq(("GET", "/v1/geocode/forward", "POST"),
+        ("GET", "/v1/geocode/bulk", "POST"), ("GET", "/v1/geocode/reverse", "POST"),
+        ("POST", "/openapi.json", "GET"), ("POST", "/docs", "GET"))) {
+      val (code, _, headers) = http(method, path)
+      assert(code == 405, s"$method $path")
+      assert(headers.get("Allow").contains(allow), s"$method $path: $headers")
+    }
+  }
+
+  test("keep-alive requests answer without a delayed-ACK stall (server TCP_NODELAY)") {
+    // one keep-alive connection kept as an ordinary client keeps it:
+    // TCP_NODELAY on its side, each request written in one piece. The
+    // server writes headers and body separately, so with Nagle on at
+    // its end every body waited ~40 ms for the ACK of the headers.
+    val sock = new java.net.Socket()
+    try {
+      sock.setTcpNoDelay(true)
+      sock.connect(new InetSocketAddress("127.0.0.1", server.boundPort), 5000)
+      sock.setSoTimeout(20000)
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      val out = sock.getOutputStream
+      def line(): String = {
+        val sb = new StringBuilder
+        var c = in.read()
+        while (c != '\n') {
+          assert(c >= 0, "connection closed mid-response")
+          if (c != '\r') sb += c.toChar
+          c = in.read()
+        }
+        sb.toString
+      }
+      val req = "GET /healthz HTTP/1.1\r\nHost: x\r\n\r\n".getBytes(StandardCharsets.UTF_8)
+      val ms = (0 until 21).map { _ =>
+        val t0 = System.nanoTime()
+        out.write(req)
+        out.flush()
+        val status = line()
+        assert(status.startsWith("HTTP/1.1 200"), status)
+        val length = Iterator.continually(line()).takeWhile(_.nonEmpty).toList
+          .collectFirst { case h if h.toLowerCase.startsWith("content-length:") =>
+            h.substring(h.indexOf(':') + 1).trim.toInt }
+        assert(length.isDefined, "no Content-Length")
+        assert(new String(in.readNBytes(length.get), StandardCharsets.UTF_8) == """{"ok": true}""")
+        (System.nanoTime() - t0) / 1e6
+      }
+      val median = ms.sorted.apply(ms.size / 2)
+      assert(median < 20, f"median $median%.1f ms: ${ms.map(m => f"$m%.1f").mkString(" ")}")
+    } finally sock.close()
+  }
+
+  test("HttpServer.create appears under src/main/scala only in ScoutServer.scala") {
+    // ScoutServer sets sun.net.httpserver.nodelay before its server is
+    // created; a JDK server created anywhere else first would load the
+    // server config without it
+    val callers = graft.BootSpec.mainSourcesContaining("HttpServer.create")
+    assert(callers == Seq("graft/server/ScoutServer.scala"),
+      s"HttpServer.create outside graft/server/ScoutServer.scala: $callers")
+  }
+
+  test("a 200 splits Server-Timing into parse, engine and serialize within app") {
+    for ((path, body) <- Seq(
+        "/v1/geocode/forward" -> """{"candidates":[{"text":"Monograph Dining"}],"limit":3}""",
+        "/v1/geocode/bulk" -> """{"queries":[{"text":"Monograph Dining"}],"limit":3}""",
+        "/v1/geocode/reverse" -> """{"points":[{"lat": 3.14, "lon": 101.69}]}""")) {
+      val (code, text, headers) = http("POST", path, body)
+      assert(code == 200, text)
+      val phases = headers("Server-Timing").split(",").toSeq.map { p =>
+        val Array(name, dur) = p.trim.split(";dur="): @unchecked
+        name -> BigDecimal(dur)
+      }
+      assert(phases.map(_._1) == Seq("parse", "engine", "serialize", "app"), s"$path: $headers")
+      val dur = phases.toMap
+      assert(dur("parse") + dur("engine") + dur("serialize") <= dur("app"), s"$path: $headers")
+      assert(BigDecimal(headers("X-Process-Time")) == dur("app"), s"$path: $headers")
+    }
+  }
+
+  private def schemas: Map[String, Json.Value] =
+    Json.parse(http("GET", "/openapi.json")._2).asObj("components").asObj("schemas").asObj
+
+  test("reverse points over the cap -> 422 naming the cap") {
+    val cap = ScoutServer.MaxItems
+    val points = Seq.fill(cap + 1)("""{"lat": 3.14, "lon": 101.69}""").mkString(",")
+    val (code, body, _) = http("POST", "/v1/geocode/reverse", s"""{"points":[$points]}""")
+    assert(code == 422 && body.contains("points") && body.contains(cap.toString), s"$code $body")
+    assert(schemas("ReverseReq").asObj("properties").asObj("points").asObj("maxItems").asNum == cap)
+  }
+
+  test("bulk queries over the cap -> 422 naming the cap") {
+    val cap = ScoutServer.MaxItems
+    val queries = Seq.fill(cap + 1)("""{"text":"Monograph Dining"}""").mkString(",")
+    val (code, body, _) = http("POST", "/v1/geocode/bulk", s"""{"queries":[$queries]}""")
+    assert(code == 422 && body.contains("queries") && body.contains(cap.toString), s"$code $body")
+    assert(schemas("BulkReq").asObj("properties").asObj("queries").asObj("maxItems").asNum == cap)
+  }
+
+  test("limit over the cap -> 422 naming the cap; the cap itself is served") {
+    val cap = ScoutServer.MaxLimit
+    for ((path, list) <- Seq("/v1/geocode/forward" -> "candidates", "/v1/geocode/bulk" -> "queries")) {
+      val (code, body, _) = http("POST", path,
+        s"""{"$list":[{"text":"Monograph Dining"}],"limit":${cap + 1}}""")
+      assert(code == 422 && body.contains("limit") && body.contains(cap.toString), s"$path: $code $body")
+    }
+    val (code, body, _) = http("POST", "/v1/geocode/forward",
+      s"""{"candidates":[{"text":"Monograph Dining"}],"limit":$cap}""")
+    assert(code == 200, body)
+    for (req <- Seq("ForwardReq", "BulkReq"))
+      assert(schemas(req).asObj("properties").asObj("limit").asObj("maximum").asNum == cap, req)
   }
 
   test("concurrent forward requests: correct results, no cross-request bleed") {
@@ -325,14 +434,17 @@ class ScoutServerSpec extends SparkSpec {
       refSrv.stop(); ref.close()
       val legalFwd = Set(fwd1._2, fwd2._2)
       val legalRev = Set(rev1._2, rev2._2)
-      // 8 threads × 200 requests, alternating forward/reverse; reload
-      // and maintain fire while the storm is in flight
+      // 8 threads, alternating forward/reverse, each sending at least 200
+      // requests and going on until the reload and the maintenance pass
+      // are over, so both fire while the storm is in flight
+      val stormEnd = new java.util.concurrent.atomic.AtomicBoolean(false)
       val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val seenFwd = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
       val done = new java.util.concurrent.atomic.AtomicInteger(0)
       val threads = (0 until 8).map(t => new Thread(() => {
         try {
-          for (i <- 0 until 200) {
+          var i = 0
+          while (i < 200 || !stormEnd.get) {
             val isFwd = (t + i) % 2 == 0
             val (code, body, _) =
               if (isFwd) http("POST", "/v1/geocode/forward", fwdReq, soak.boundPort)
@@ -342,6 +454,7 @@ class ScoutServerSpec extends SparkSpec {
               seenFwd.add(body)
               if (!legalFwd.contains(body)) bad.add(s"mixed fwd body: $body")
             } else if (!legalRev.contains(body)) bad.add(s"mixed rev body: $body")
+            i += 1
           }
           done.incrementAndGet(); ()
         } catch { case e: Throwable => bad.add(s"thread died: $e") }
@@ -355,9 +468,9 @@ class ScoutServerSpec extends SparkSpec {
         catch { case e: Throwable => bad.add(s"maintain died: $e") }
       })
       maintThread.start()
-      eng.reload(p2, a2, Some(ix2))
+      try { eng.reload(p2, a2, Some(ix2)); maintThread.join(180000) }
+      finally stormEnd.set(true)
       threads.foreach(_.join(180000))
-      maintThread.join(180000)
       assert(bad.isEmpty, s"soak violations (${bad.size}): ${bad.peek()}")
       assert(done.get() == 8, "every soak thread must finish its 200 requests")
       // post-reload answers actually arrived
@@ -414,11 +527,14 @@ class ScoutServerSpec extends SparkSpec {
       val fwd1 = http("POST", "/v1/geocode/forward", fwdReq, srv.boundPort)
       val rev1 = http("POST", "/v1/geocode/reverse", revReq, srv.boundPort)
       assert(fwd1._1 == 200 && rev1._1 == 200)
+      // the storm goes on until the maintenance passes are over
+      val stormEnd = new java.util.concurrent.atomic.AtomicBoolean(false)
       val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val done = new java.util.concurrent.atomic.AtomicInteger(0)
       val threads = (0 until 8).map(t => new Thread(() => {
         try {
-          for (i <- 0 until 200) {
+          var i = 0
+          while (i < 200 || !stormEnd.get) {
             val isFwd = (t + i) % 2 == 0
             val (code, body, _) =
               if (isFwd) http("POST", "/v1/geocode/forward", fwdReq, srv.boundPort)
@@ -426,23 +542,26 @@ class ScoutServerSpec extends SparkSpec {
             if (code != 200) bad.add(s"$code: $body")
             else if (isFwd && body != fwd1._2) bad.add(s"mixed fwd body: $body")
             else if (!isFwd && body != rev1._2) bad.add(s"mixed rev body: $body")
+            i += 1
           }
           done.incrementAndGet(); ()
         } catch { case e: Throwable => bad.add(s"thread died: $e") }
       }))
       threads.foreach(_.start())
-      Thread.sleep(100)
-      // two maintain passes die at different protocol points (an early
-      // one inside the claim/publish chain, a later one near the
-      // commit) while the storm is in flight
-      for (k <- Seq(2, 6)) {
-        val crashed = graft.ext.CrashSeam.crashedAt(k) {
-          graft.ext.TextIndex.maintain(spark, idxPath, maxShards = 1)
+      val report = try {
+        Thread.sleep(100)
+        // two maintain passes die at different protocol points (an early
+        // one inside the claim/publish chain, a later one near the
+        // commit) while the storm is in flight
+        for (k <- Seq(2, 6)) {
+          val crashed = graft.ext.CrashSeam.crashedAt(k) {
+            graft.ext.TextIndex.maintain(spark, idxPath, maxShards = 1)
+          }
+          assert(crashed, s"kill point $k was not reached — seam detached?")
         }
-        assert(crashed, s"kill point $k was not reached — seam detached?")
-      }
-      // disarmed retry: must run to a real fold and converge
-      val report = graft.ext.TextIndex.maintain(spark, idxPath, maxShards = 1)
+        // disarmed retry: must run to a real fold and converge
+        graft.ext.TextIndex.maintain(spark, idxPath, maxShards = 1)
+      } finally stormEnd.set(true)
       assert(report.action != "none",
         s"post-crash maintain must still fold: $report")
       threads.foreach(_.join(180000))
@@ -510,12 +629,15 @@ class ScoutServerSpec extends SparkSpec {
       refSrv.stop(); ref.close()
       val legalFwd = Set(fwd1._2, fwd2._2)
       val legalRev = Set(rev1._2, rev2._2)
+      // the storm goes on until the last reload is over
+      val stormEnd = new java.util.concurrent.atomic.AtomicBoolean(false)
       val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val seenFwd = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
       val done = new java.util.concurrent.atomic.AtomicInteger(0)
       val threads = (0 until 8).map(t => new Thread(() => {
         try {
-          for (i <- 0 until 200) {
+          var i = 0
+          while (i < 200 || !stormEnd.get) {
             val isFwd = (t + i) % 2 == 0
             val (code, body, _) =
               if (isFwd) http("POST", "/v1/geocode/forward", fwdReq, srv.boundPort)
@@ -525,26 +647,29 @@ class ScoutServerSpec extends SparkSpec {
               seenFwd.add(body)
               if (!legalFwd.contains(body)) bad.add(s"mixed fwd body: $body")
             } else if (!legalRev.contains(body)) bad.add(s"mixed rev body: $body")
+            i += 1
           }
           done.incrementAndGet(); ()
         } catch { case e: Throwable => bad.add(s"thread died: $e") }
       }))
       threads.foreach(_.start())
-      Thread.sleep(150)
-      // 1. the CDC refresh publishes and the engine tracks it mid-storm
-      GazetteerBuilder.refreshDelta(spark, root, feed)
-      eng.reloadFrom(graft.ext.VersionedStore.resolveCurrent(spark, root))
-      // 2. a maintenance pass is KILLED at a protocol point mid-storm —
-      // serving must never notice (the writer lock releases on the way
-      // out; the fold's crash windows leave old-or-new, never torn)
-      val crashed = graft.ext.CrashSeam.crashedAt(4) {
+      try {
+        Thread.sleep(150)
+        // 1. the CDC refresh publishes and the engine tracks it mid-storm
+        GazetteerBuilder.refreshDelta(spark, root, feed)
+        eng.reloadFrom(graft.ext.VersionedStore.resolveCurrent(spark, root))
+        // 2. a maintenance pass is KILLED at a protocol point mid-storm —
+        // serving must never notice (the writer lock releases on the way
+        // out; the fold's crash windows leave old-or-new, never torn)
+        val crashed = graft.ext.CrashSeam.crashedAt(4) {
+          GazetteerBuilder.maintainSnapshots(spark, root, keepLast = 2, maxShards = 1)
+        }
+        assert(crashed, "kill point 4 was not reached — seam detached?")
+        // 3. the disarmed retry completes the maintenance; the engine
+        // reloads onto the republished (post-fold pin) snapshot
         GazetteerBuilder.maintainSnapshots(spark, root, keepLast = 2, maxShards = 1)
-      }
-      assert(crashed, "kill point 4 was not reached — seam detached?")
-      // 3. the disarmed retry completes the maintenance; the engine
-      // reloads onto the republished (post-fold pin) snapshot
-      GazetteerBuilder.maintainSnapshots(spark, root, keepLast = 2, maxShards = 1)
-      eng.reloadFrom(graft.ext.VersionedStore.resolveCurrent(spark, root))
+        eng.reloadFrom(graft.ext.VersionedStore.resolveCurrent(spark, root))
+      } finally stormEnd.set(true)
       threads.foreach(_.join(180000))
       assert(bad.isEmpty, s"chaos violations (${bad.size}): ${bad.peek()}")
       assert(done.get() == 8, "every storm thread must finish its 200 requests")
