@@ -267,8 +267,8 @@ object GazetteerBuilder {
         // trigram name index: the physical design that keeps the LIKE
         // candidate scan subquadratic at scale (see TrigramIndex).
         // Explicit schema: inference is a footer-read JOB per call.
-        // Width SIZE-ROUTED off the just-written pois bytes (the
-        // TrigramStore.foldWidth discipline, both directions): a small
+        // Width SIZE-ROUTED off the just-written pois bytes (the rule
+        // TrigramStore's folds follow, both directions): a small
         // corpus writes one gram-sorted file with no bounds-sampling
         // job or shuffle; a large one range-partitions at a width that
         // scales with the data (TrigramIndex.widthFor).
@@ -694,8 +694,8 @@ object GazetteerBuilder {
     // independent I/O legs of one batch.
     val writtenParts = parallelSides(
       () => writePoolGenerations(spark, root, merged, m.pkWidth, gen),
-      () => { graft.ext.TrigramStore.append(deltaPois, storeDir(root),
-        deleteIds = delIds, upsertIds = upsertIds); () },
+      () => graft.ext.TrigramStore.append(deltaPois, storeDir(root),
+        deleteIds = delIds, upsertIds = upsertIds),
       () => {
         val oldAdmin = spark.read.schema(AdminSchema).parquet(s"$base/admin")
         minusKeys(oldAdmin)
@@ -809,11 +809,11 @@ object GazetteerBuilder {
     * operator's one periodic call after a run of [[refreshDelta]]
     * batches (single-writer, like the refreshes themselves):
     *
-    *   1. fold the trigram store to one shard with DEFERRED deletes
-    *      ([[graft.ext.TrigramStore.compactAll]](deferDeletes = true)) —
-    *      live reads swap atomically, and every already-published
-    *      manifest's PINNED read keeps resolving (folded shards stay on
-    *      disk, merely REPLACES-hidden);
+    *   1. fold the trigram store when its policy asks for it
+    *      ([[graft.ext.TrigramStore.maintain]]) — live reads swap
+    *      atomically, and every already-published manifest's PINNED
+    *      read keeps resolving (folded shards stay on disk, merely
+    *      REPLACES-hidden);
     *   2. republish: a new version whose manifest carries the SAME
     *      pk→generation map but pins the POST-FOLD index state (the
     *      admin/meta tables are copied forward) — without this, the
@@ -843,10 +843,10 @@ object GazetteerBuilder {
     val store = storeDir(root)
     // MEASURED trigger, not an unconditional fold (round 18): the
     // policy folds all (dead-posting fraction) or size-tiered (shard
-    // count), in the pin-safe deferred mode either way — a cheap "none"
-    // decision still runs the retention/gc tail below.
+    // count), pin-safe either way — a cheap "none" decision still runs
+    // the retention/gc tail below.
     val report = graft.ext.TrigramStore.maintain(spark, store, maxShards,
-      tombstoneFrac, partitions, deferDeletes = true)
+      tombstoneFrac, partitions)
     val base = graft.ext.VersionedStore.resolveCurrent(spark, root)
     val m = readManifest(spark, base).getOrElse(throw new java.io.IOException(
       s"$base has no $ManifestFile — maintainSnapshots needs the partitioned layout"))

@@ -43,7 +43,7 @@ object TrigramIndex {
   }
 
   /** Bulk-index write width from the listed source (pois) bytes — the
-    * [[graft.ext.TrigramStore]] foldWidth discipline routed BOTH ways
+    * [[graft.ext.TrigramStore]] fold-width discipline routed BOTH ways
     * (VERDICT r18 item 4): one coalesced gram-sorted file under the
     * 64 MB gate (no bounds-sampling job, no shuffle), and past it a
     * range width that SCALES with the data (~128 MB of pois per range

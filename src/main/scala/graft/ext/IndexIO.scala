@@ -95,13 +95,8 @@ private[ext] object IndexIO {
   private def claimTs(fs: org.apache.hadoop.fs.FileSystem,
                       claimDir: org.apache.hadoop.fs.Path): Long = {
     def contentTsAt(p: org.apache.hadoop.fs.Path, line: Int): Option[Long] =
-      try {
-        val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        val in = fs.open(p)
-        try in.readFully(0, buf) finally in.close()
-        new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-          .split("\n").drop(line).headOption.flatMap(_.trim.toLongOption)
-      } catch { case _: java.io.IOException => None }
+      try readSmallFile(fs, p).split("\n").drop(line).headOption.flatMap(_.trim.toLongOption)
+      catch { case _: java.io.IOException => None }
     val mtime = fs.getFileStatus(claimDir).getModificationTime // FNF → caller
     // Heartbeats: the FileContext path replaces `HB` atomically; the
     // no-binding fallback lands versioned `HB-*` files (new file first,
@@ -247,12 +242,29 @@ private[ext] object IndexIO {
     }
 
   private def readLine1Raw(fs: org.apache.hadoop.fs.FileSystem,
-                           p: org.apache.hadoop.fs.Path): String = {
+                           p: org.apache.hadoop.fs.Path): String =
+    readSmallFile(fs, p).split("\n").headOption.map(_.trim).getOrElse("")
+
+  /** The whole content of a small protocol file (markers, claims,
+    * pointers, high-marks) as UTF-8 — the one reader every such file
+    * goes through. Throws FileNotFound when the file is absent; callers
+    * keep their own absence and retry rules. */
+  private[ext] def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
+                                 p: org.apache.hadoop.fs.Path): String = {
     val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
     val in = fs.open(p)
     try in.readFully(0, buf) finally in.close()
     new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").headOption.map(_.trim).getOrElse("")
+  }
+
+  /** The shard ids compaction marker `k` replaces — its REPLACES file,
+    * empty for an append marker. FileNotFound propagates when the marker
+    * vanishes between the check and the read. */
+  private[ext] def replacesOf(fs: org.apache.hadoop.fs.FileSystem, root: String,
+                               k: Int): Set[Int] = {
+    val rp = new org.apache.hadoop.fs.Path(s"$root/commits/shard=$k/REPLACES")
+    if (!fs.exists(rp)) Set.empty
+    else readSmallFile(fs, rp).split("\\s+").filter(_.nonEmpty).map(_.toInt).toSet
   }
 
   /** Shard ids under an active appender lease: claimed recently (last
@@ -285,7 +297,7 @@ private[ext] object IndexIO {
   def stagingFor(dest: String): String =
     s"$dest-staging-${java.util.UUID.randomUUID().toString.take(8)}"
 
-  private def fsOf(spark: SparkSession, path: String) =
+  private[ext] def fsOf(spark: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -522,8 +534,8 @@ private[ext] object IndexIO {
     * is what makes the shard visible to marker-aware readers
     * ([[committedIds]]). One tiny marker file per shard — the
     * manifest-pointer design object-store table formats use, scoped to
-    * one marker per shard. Shared by all three persisted indexes
-    * ([[TextIndex]], [[MinHashIndex]], [[VectorIndex]]).
+    * one marker per shard. Shared by all four persisted index families
+    * ([[ShardedIndex]]).
     *
     * `replaces` non-empty makes this a COMPACTION marker: the named
     * shard ids are superseded by `k` — [[liveCommittedIds]] subtracts
@@ -662,23 +674,13 @@ private[ext] object IndexIO {
       try {
         val all = shardIds(spark, s"$root/commits")
         if (all.isEmpty) return all
-        val replaced = scala.collection.mutable.Set[Int]()
         // per-shard-dir reads, NOT a recursive listing of commits/: a
         // recursive walk descends into a CONCURRENT appender's
         // `_shard-staging-*` dir and can hit its files mid-rename
         // (observed as a FileNotFound inside the listing iterator);
         // committed shard dirs are immutable once published, so reading
         // them directly never races an appender
-        for (k <- all) {
-          val rp = new org.apache.hadoop.fs.Path(s"$root/commits/shard=$k/REPLACES")
-          if (fs.exists(rp)) {
-            val buf = new Array[Byte](fs.getFileStatus(rp).getLen.toInt)
-            val in = fs.open(rp)
-            try in.readFully(0, buf) finally in.close()
-            new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-              .split("\\s+").filter(_.nonEmpty).foreach(s => replaced += s.toInt)
-          }
-        }
+        val replaced = all.flatMap(k => replacesOf(fs, root, k)).toSet
         return all.filterNot(replaced)
       } catch {
         // a compact's post-commit cleanup (single-writer) may delete a
@@ -696,13 +698,7 @@ private[ext] object IndexIO {
     val fs = fsOf(spark, root)
     val tp = new org.apache.hadoop.fs.Path(s"$root/commits/shard=$k/TAGS")
     if (!fs.exists(tp)) Nil
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(tp).getLen.toInt)
-      val in = fs.open(tp)
-      try in.readFully(0, buf) finally in.close()
-      new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-        .split("\n").map(_.trim).filter(_.nonEmpty).toSeq
-    }
+    else readSmallFile(fs, tp).split("\n").map(_.trim).filter(_.nonEmpty).toSeq
   }
 
   /** Union of idempotency tags across LIVE committed shards — the
@@ -1265,22 +1261,13 @@ private[ext] object IndexIO {
     // a REPLACES-hidden marker is folded history, never a crashed
     // append (a compaction folds only fully-committed shards; a crashed
     // append has no marker to fold) — a maintainer may retain one past
-    // its table data on purpose ([[TrigramStore.compactSmall]] keeps
-    // folded markers because watermark validity is keyed on marker
-    // existence); repairing it away here would flip those watermarks
-    // inert and resurrect the rows they supersede
+    // its table data on purpose ([[TrigramStore.gcUnpinned]] keeps a
+    // folded marker while a watermark names it, because watermark
+    // validity is keyed on marker existence); repairing it away here
+    // would flip those watermarks inert and resurrect the rows they
+    // supersede
     val fs = fsOf(spark, root)
-    val hidden = committed.flatMap { k =>
-      val rp = new org.apache.hadoop.fs.Path(s"$root/commits/shard=$k/REPLACES")
-      if (!fs.exists(rp)) Set.empty[Int]
-      else {
-        val buf = new Array[Byte](fs.getFileStatus(rp).getLen.toInt)
-        val in = fs.open(rp)
-        try in.readFully(0, buf) finally in.close()
-        new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-          .split("\\s+").filter(_.nonEmpty).map(_.toInt).toSet
-      }
-    }
+    val hidden = committed.flatMap(k => replacesOf(fs, root, k))
     val bad = committed diff complete diff hidden
     // markers delete first (publish order mirrored: marker last in,
     // first out) so a crash mid-repair cannot re-manufacture a
@@ -1306,7 +1293,7 @@ private[ext] object IndexIO {
     * append that died mid-write). All are invisible to readers — this
     * reclaims disk, nothing else — but at 100 TB an abandoned compact
     * staging is a full index copy, so the writers that already rewrite
-    * history ([[ShardedIndex]] and [[TrigramStore]] folds) sweep them.
+    * history ([[ShardedIndex]] folds) sweep them.
     * `dest-old-*` asides are NOT touched: a crash inside [[publish]]'s two renames
     * leaves the previous index there for recovery.
     *
@@ -1567,10 +1554,7 @@ private[ext] object IndexIO {
     val fs = fsOf(spark, root)
     if (!fs.exists(ptr))
       throw new java.io.IOException(s"no $Pointer pointer under $root")
-    val buf = new Array[Byte](fs.getFileStatus(ptr).getLen.toInt)
-    val in = fs.open(ptr)
-    try in.readFully(0, buf) finally in.close()
-    val version = new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim
+    val version = readSmallFile(fs, ptr).trim
     if (!VersionRe.matches(version))
       throw new java.io.IOException(s"corrupt $Pointer under $root: '$version'")
     s"$root/$version"

@@ -9,12 +9,12 @@ import org.apache.spark.sql.functions._
 case class MaintainReport(
     liveShards: Int, deadFrac: Double, action: String, folded: Seq[Int])
 
-/** The shard-commit protocol of the persisted index families
-  * ([[TextIndex]], [[VectorIndex]], [[MinHashIndex]]), written once.
-  * Each family describes itself with a [[ShardedIndex.Family]] value
-  * and keeps only its build, serve and per-table write code; every
-  * public append/delete/compact/maintain method of a family is a call
-  * into this object.
+/** The shard-commit protocol of the four persisted index families
+  * ([[TextIndex]], [[VectorIndex]], [[MinHashIndex]], [[TrigramStore]]),
+  * written once. Each family describes itself with a
+  * [[ShardedIndex.Family]] value and keeps only its build, serve and
+  * per-table write code; every public append/compact/maintain method of
+  * a family is a call into this object.
   *
   * Protocol: an append claims a fresh shard id ([[IndexIO.claimShardId]]
   * — concurrent appenders each win a distinct id, ids are never
@@ -22,13 +22,86 @@ case class MaintainReport(
   * publishes each with an atomic rename, and lands the
   * `commits/shard=K` marker LAST; readers prune every table to live
   * committed ids, so a crash anywhere before the marker leaves
-  * reader-invisible garbage that [[reconcile]] reclaims. Tombstones
-  * ([[delete]]) are index-wide id shards under `deletes/`. Folds
+  * reader-invisible garbage that [[reconcile]] reclaims. Deletes are
+  * shards under `deletes/`, stored and applied by the family's
+  * [[ShardedIndex.DeleteModel]]: index-wide id tombstones
+  * ([[ShardedIndex.Tombstones]], the first three families) or
+  * per-id watermarks sequenced against markers (TrigramStore's). Folds
   * ([[compactTiered]]) swap their fold set for one new shard with a
   * single REPLACES marker under the maintenance lock; [[compact]]
   * republishes the whole root (the layout-migration op).
   */
 private[ext] object ShardedIndex {
+
+  /** How a family stores and applies `deletes/` — a format fact of the
+    * family, not a caller switch. It supplies what a fold and
+    * [[maintain]] need to know about deletes. */
+  trait DeleteModel {
+    /** `rows` for [[Family.writeShard]]: `shards` of each table (the
+      * whole table when empty — a legacy layout) with the deletes
+      * applied (`dels`: the delete shards a fold observed before its
+      * live listing), `shard` column dropped. */
+    def foldRows(spark: SparkSession, path: String, f: Family, shards: Seq[Int],
+                 dels: Seq[Int]): String => DataFrame
+    /** Per-shard `(rows, dead rows)` of the doc table over `live`, from
+      * ONE aggregate; empty when nothing is deleted (no job at all).
+      * Feeds both [[maintain]]'s index-wide dead fraction and
+      * [[compactTiered]]'s tombstone-heavy shard choice. */
+    def deadByShard(spark: SparkSession, path: String, f: Family,
+                    live: Seq[Int]): Map[Int, (Long, Long)]
+    /** True when a fold leaves its folded shards and markers on disk
+      * (the family's own gc reclaims them); [[reconcile]] then deletes
+      * no marker and only table shards no marker names. */
+    def keepsFolded: Boolean
+    /** Runs after a fold of EVERY live shard landed its marker: all
+      * observed delete shards `dels` are applied in the folded output. */
+    def foldedAll(spark: SparkSession, path: String, dels: Seq[Int]): Unit
+  }
+
+  /** Index-wide id tombstones: `deletes/` shards store `idCol`. Serving
+    * subtracts the set until a fold drops the rows physically; a fold
+    * deletes what it folded, and a fold of every live shard clears the
+    * tombstone shards it observed. */
+  object Tombstones extends DeleteModel {
+    /** Tombstones subtracted with the serving path's routing. */
+    def foldRows(spark: SparkSession, path: String, f: Family, shards: Seq[Int],
+                 dels: Seq[Int]): String => DataFrame = t =>
+      IndexIO.subtractTombstones(spark, path,
+        IndexIO.readCommitted(spark, path, t, shards).drop("shard"),
+        f.idCols.getOrElse(t, f.idCol), f.idCol)
+
+    /** Routed like serving: a small tombstone set rides the scan as
+      * literals (coalesced to one job when the table is small); past the
+      * driver-read bound — a mass takedown — a plain left join against
+      * the tombstone table. */
+    def deadByShard(spark: SparkSession, path: String, f: Family,
+                    live: Seq[Int]): Map[Int, (Long, Long)] = {
+      val docs = IndexIO.readCommitted(spark, path, f.docTable, live)
+        .select(col("shard"), col(f.idCol))
+      val counted = IndexIO.readIdShards(spark, s"$path/deletes", f.idCol) match {
+        case Some(ids) if ids.isEmpty => return Map.empty
+        case Some(ids) =>
+          IndexIO.smallAggHint(spark, path, f.docTable, live, docs)
+            .groupBy("shard").agg(count(lit(1)),
+              coalesce(sum(when(col(f.idCol).isInCollection(ids.toSeq), 1L)), lit(0L)))
+        case None =>
+          val dels = IndexIO.readTable(spark, path, "deletes")
+            .select(col(f.idCol)).distinct().withColumn("t", lit(1L))
+          docs.join(dels, Seq(f.idCol), "left")
+            .groupBy("shard").agg(count(lit(1)), coalesce(sum(col("t")), lit(0L)))
+      }
+      collectCounts(counted)
+    }
+
+    val keepsFolded = false
+
+    def foldedAll(spark: SparkSession, path: String, dels: Seq[Int]): Unit =
+      for (k <- dels) IndexIO.deleteDir(spark, s"$path/deletes/shard=$k")
+  }
+
+  /** `(shard, rows, dead)` rows of a per-shard count aggregate as a map. */
+  def collectCounts(counted: DataFrame): Map[Int, (Long, Long)] =
+    counted.collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
 
   /** A family's shape. `tables` are the shard-partitioned tables an
     * append writes and a fold rewrites; `docTable`/`idCol` the table
@@ -37,8 +110,10 @@ private[ext] object ShardedIndex {
     * `idCol`; `copied` are unsharded tables a full [[compact]] carries
     * over unchanged. `writeShard(rows, stageDir, k, partitions)` writes
     * `stageDir/<table>/shard=k` for every table from `rows(table)` —
-    * the tombstone-subtracted rows of the folded shards, `shard` column
-    * dropped. */
+    * the delete-applied rows of the folded shards, `shard` column
+    * dropped. `deletes` is the delete model. A fold whose input shards
+    * total at most `oneFileFoldBytes` writes one partition (no
+    * bounds-sampling job or shuffle); 0 keeps `partitions`. */
   case class Family(
       name: String,
       tables: Seq[String],
@@ -46,7 +121,9 @@ private[ext] object ShardedIndex {
       idCol: String,
       writeShard: (String => DataFrame, String, Int, Int) => Unit,
       idCols: Map[String, String] = Map.empty,
-      copied: Seq[String] = Nil)
+      copied: Seq[String] = Nil,
+      deletes: DeleteModel = Tombstones,
+      oneFileFoldBytes: Long = 0L)
 
   /** Restore exactly the last committed state: drop table shards with
     * no live marker (a crash before the marker rename, or shards a fold
@@ -62,14 +139,20 @@ private[ext] object ShardedIndex {
     * set — a live appender's published-but-uncommitted shards survive.
     * An index with no markers at all is a legacy pre-marker layout:
     * only shards present in every table are kept (its single-shard or
-    * flat layout, which [[compact]] then migrates). */
+    * flat layout, which [[compact]] then migrates). A delete model that
+    * keeps folded shards ([[DeleteModel.keepsFolded]]) keeps every
+    * marker and the table shards any marker names: only marker-less
+    * shards (a crashed append) go. */
   private def reconcile(spark: SparkSession, path: String, f: Family): Unit = {
     val committed = IndexIO.committedIds(spark, path).toSet
     val live = IndexIO.liveCommittedIds(spark, path).toSet
     val perTable = f.tables.map(t => IndexIO.shardIds(spark, s"$path/$t").toSet)
     val leased = IndexIO.leasedIds(spark, path)
     val complete = perTable.reduce(_ intersect _)
-    val keep = if (committed.isEmpty) complete else live intersect complete
+    val keep =
+      if (committed.isEmpty) complete
+      else if (f.deletes.keepsFolded) committed
+      else live intersect complete
     for (k <- committed diff keep if !leased(k))
       IndexIO.deleteDir(spark, s"$path/commits/shard=$k")
     for ((t, ids) <- f.tables.zip(perTable); k <- ids diff keep if !leased(k))
@@ -93,43 +176,8 @@ private[ext] object ShardedIndex {
       Some(IndexIO.readTable(spark, path, "deletes").select(idCol))
     else None
 
-  /** Per-shard `(rows, dead rows)` of the doc table over `live`, from
-    * ONE aggregate routed like serving: a small tombstone set rides the
-    * scan as literals (coalesced to one job when the table is small);
-    * past the driver-read bound — a mass takedown — a plain left join
-    * against the tombstone table. Empty when no tombstone exists (no
-    * job at all). Feeds both [[maintain]]'s index-wide dead fraction and
-    * [[compactTiered]]'s tombstone-heavy shard choice. */
-  private def deadByShard(spark: SparkSession, path: String, f: Family,
-                          live: Seq[Int]): Map[Int, (Long, Long)] = {
-    val docs = IndexIO.readCommitted(spark, path, f.docTable, live)
-      .select(col("shard"), col(f.idCol))
-    val counted = IndexIO.readIdShards(spark, s"$path/deletes", f.idCol) match {
-      case Some(ids) if ids.isEmpty => return Map.empty
-      case Some(ids) =>
-        IndexIO.smallAggHint(spark, path, f.docTable, live, docs)
-          .groupBy("shard").agg(count(lit(1)),
-            coalesce(sum(when(col(f.idCol).isInCollection(ids.toSeq), 1L)), lit(0L)))
-      case None =>
-        val dels = IndexIO.readTable(spark, path, "deletes")
-          .select(col(f.idCol)).distinct().withColumn("t", lit(1L))
-        docs.join(dels, Seq(f.idCol), "left")
-          .groupBy("shard").agg(count(lit(1)), coalesce(sum(col("t")), lit(0L)))
-    }
-    counted.collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-  }
-
   private def shardBytes(spark: SparkSession, path: String, f: Family, k: Int): Long =
     f.tables.map(t => IndexIO.dirBytes(spark, s"$path/$t/shard=$k")).sum
-
-  /** `rows` for [[Family.writeShard]]: `shards` of each table (the
-    * whole table when empty — a legacy layout), tombstones subtracted
-    * with the serving path's routing. */
-  private def foldRows(spark: SparkSession, path: String, f: Family,
-                       shards: Seq[Int]): String => DataFrame = t =>
-    IndexIO.subtractTombstones(spark, path,
-      IndexIO.readCommitted(spark, path, t, shards).drop("shard"),
-      f.idCols.getOrElse(t, f.idCol), f.idCol)
 
   private def hiddenStage(path: String): String =
     s"$path/_append-staging-${java.util.UUID.randomUUID().toString.take(8)}"
@@ -182,8 +230,8 @@ private[ext] object ShardedIndex {
       verifyTables = f.tables, tags = Seq(tag).filter(_.nonEmpty))
   }
 
-  /** Fold every live shard back to one `shard=0`, drop tombstoned rows
-    * for good and clear the tombstone set (the staging root carries no
+  /** Fold every live shard back to one `shard=0`, drop deleted rows
+    * for good and clear the delete set (the staging root carries no
     * `deletes/`), then republish the WHOLE root through
     * [[IndexIO.publish]]'s aside-protected rename. Also the layout
     * migration: a flat or pre-marker legacy index is read whole and
@@ -194,6 +242,7 @@ private[ext] object ShardedIndex {
   def compact(spark: SparkSession, path: String, f: Family, partitions: Int): Unit = {
     reconcile(spark, path, f)
     IndexIO.gcStaging(spark, path) // reclaim crashed-build staging dirs
+    val dels = IndexIO.shardIds(spark, s"$path/deletes")
     val live = IndexIO.liveCommittedIds(spark, path)
     // a young uncommitted orphan survives the lease-honoring reconcile:
     // read live shards only, and a marker-less table whole only in a
@@ -204,7 +253,7 @@ private[ext] object ShardedIndex {
     for (t <- f.copied)
       IndexIO.readTable(spark, path, t)
         .write.mode(SaveMode.Overwrite).parquet(s"$staging/$t")
-    f.writeShard(foldRows(spark, path, f, live), staging, 0, partitions)
+    f.writeShard(f.deletes.foldRows(spark, path, f, live, dels), staging, 0, partitions)
     IndexIO.commitShard(spark, staging, 0,
       tags = live.flatMap(k => IndexIO.shardTags(spark, path, k)))
     IndexIO.publish(spark, staging, path)
@@ -215,18 +264,20 @@ private[ext] object ShardedIndex {
     * table bytes are ≤ it, or that are tombstone-heavy (at least one
     * and ≥ `tombstoneFrac` of their doc rows deleted), fold; fewer than
     * two small shards and no heavy one is nothing to do (`Nil`). Without
-    * it (`compactAllInPlace`): every live shard folds and the tombstone
-    * shards observed at entry clear — every tombstoned row fell inside
-    * the fold. Unfolded shards stay byte-identical, so the bytes
-    * rewritten are proportional to the small/dead tail.
+    * it (`compactAllInPlace`): every live shard folds. Unfolded shards
+    * stay byte-identical, so the bytes rewritten are proportional to
+    * the small/dead tail.
     *
     * One REPLACES marker swaps the fold set for the new shard in a
-    * single rename; the superseded shards are deleted after it, and a
-    * crash in between leaves reader-invisible garbage for [[reconcile]].
+    * single rename. Under tombstones the superseded shards are deleted
+    * after it (a crash in between leaves reader-invisible garbage for
+    * [[reconcile]]); a delete model that keeps folded shards leaves them
+    * for its own gc. A fold that took every live shard applied every
+    * delete shard observed at entry ([[DeleteModel.foldedAll]]).
     * Runs under the maintenance lock ([[IndexIO.acquireMaintLock]]): a
     * second maintainer fails loud instead of folding the same shards
     * twice. Safe under concurrent appends — their shards land outside
-    * the fold set and the observed tombstones. Returns the folded ids. */
+    * the fold set and the observed deletes. Returns the folded ids. */
   def compactTiered(spark: SparkSession, path: String, f: Family,
                     maxShardBytes: Option[Long], partitions: Int,
                     tombstoneFrac: Double): Seq[Int] = {
@@ -236,10 +287,10 @@ private[ext] object ShardedIndex {
       IndexIO.gcStaging(spark, path)
       IndexIO.gcClaims(spark, path) // bound historical claim dirs (single-maintainer)
       // observed BEFORE the live listing: only these may clear on
-      // fold-all. Listed after it, a tombstone landing in the gap could
+      // fold-all. Listed after it, a delete landing in the gap could
       // target a shard that also committed in the gap (outside the fold)
       // and clearing it would resurrect the doc; listed before, any
-      // observed tombstone targeting a later shard is provably a
+      // observed delete targeting a later shard is provably a
       // delete-before-append (an intended re-add)
       val obsDels = IndexIO.shardIds(spark, s"$path/deletes")
       val live = IndexIO.liveCommittedIds(spark, path)
@@ -249,7 +300,7 @@ private[ext] object ShardedIndex {
         case None => live
         case Some(bytes) =>
           val small = live.filter(k => shardBytes(spark, path, f, k) <= bytes)
-          val heavy = deadByShard(spark, path, f, live).collect {
+          val heavy = f.deletes.deadByShard(spark, path, f, live).collect {
             case (k, (total, dead)) if dead > 0L && dead.toDouble >= tombstoneFrac * total => k
           }.toSeq
           if (small.length < 2 && heavy.isEmpty) return Nil
@@ -259,15 +310,20 @@ private[ext] object ShardedIndex {
       // the write phase can be long at scale: maintLockMs then bounds
       // only un-heartbeated gaps
       IndexIO.heartbeatMaintLock(spark, path, lock)
+      val width =
+        if (f.oneFileFoldBytes > 0L &&
+            fold.map(k => shardBytes(spark, path, f, k)).sum <= f.oneFileFoldBytes) 1
+        else partitions
       val stage = hiddenStage(path)
-      f.writeShard(foldRows(spark, path, f, fold), stage, next, partitions)
+      f.writeShard(f.deletes.foldRows(spark, path, f, fold, obsDels), stage, next, width)
       publishStaged(spark, path, f, stage, next)
       IndexIO.commitShard(spark, path, next, replaces = fold, maintLockNonce = lock,
         tags = fold.flatMap(k => IndexIO.shardTags(spark, path, k)))
-      for (k <- fold) IndexIO.deleteDir(spark, s"$path/commits/shard=$k")
-      for (t <- f.tables; k <- fold) IndexIO.deleteDir(spark, s"$path/$t/shard=$k")
-      if (maxShardBytes.isEmpty)
-        for (k <- obsDels) IndexIO.deleteDir(spark, s"$path/deletes/shard=$k")
+      if (!f.deletes.keepsFolded) {
+        for (k <- fold) IndexIO.deleteDir(spark, s"$path/commits/shard=$k")
+        for (t <- f.tables; k <- fold) IndexIO.deleteDir(spark, s"$path/$t/shard=$k")
+      }
+      if (fold == live) f.deletes.foldedAll(spark, path, obsDels)
       fold
     } finally IndexIO.releaseMaintLock(spark, path, lock)
   }
@@ -278,9 +334,9 @@ private[ext] object ShardedIndex {
     * (the usual call decides "nothing to do" from listings plus one
     * bounded aggregate). Decision order:
     *  1. dead fraction ≥ `tombstoneFrac` → fold-all in place
-    *     (`compactAllInPlace`), which also clears the observed
-    *     tombstone shards (shard folds only drop tombstones inside
-    *     them, so the set would otherwise grow without bound);
+    *     (`compactAllInPlace`), which also retires the observed delete
+    *     shards (shard folds only drop deletes inside them, so the set
+    *     would otherwise grow without bound);
     *  2. live shards > `maxShards` → `compactSmall` with the byte
     *     threshold AT the (n−maxShards+1)-th smallest shard, so at
     *     least that many fold into one and the count lands back
@@ -293,7 +349,7 @@ private[ext] object ShardedIndex {
     require(maxShards >= 1, s"maxShards must be >= 1, got $maxShards")
     val live = IndexIO.liveCommittedIds(spark, path)
     require(live.nonEmpty, s"no committed shards under $path")
-    val counts = deadByShard(spark, path, f, live).values
+    val counts = f.deletes.deadByShard(spark, path, f, live).values
     val total = counts.map(_._1).sum
     val deadFrac = if (total == 0L) 0.0 else counts.map(_._2).sum.toDouble / total
     if (deadFrac >= tombstoneFrac) {

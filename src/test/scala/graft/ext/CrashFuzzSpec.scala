@@ -248,12 +248,12 @@ class CrashFuzzSpec extends SparkSpec with EagerLease {
       val pin = build(path)
       val before = gserve(path)
       val crashed = crashedAt(k) {
-        TrigramStore.compactAll(spark, path, deferDeletes = true)
+        TrigramStore.compactAll(spark, path)
       }
       assert(gserve(path) == before, s"compactAll kill point $k changed serving")
       assert(gset(TrigramStore.postingsPinned(spark, path, pin)) == before,
         s"compactAll kill point $k: pinned read drifted")
-      TrigramStore.compactAll(spark, path, deferDeletes = true) // repair/finish
+      TrigramStore.compactAll(spark, path) // repair/finish
       assert(gserve(path) == before, s"repair pass at kill point $k changed serving")
       assert(gset(TrigramStore.postingsPinned(spark, path, pin)) == before,
         s"repair pass at kill point $k: pinned read drifted")

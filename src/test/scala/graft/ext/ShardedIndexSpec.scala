@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
 
-/** The one shard-protocol core ([[ShardedIndex]]) behind the three
+/** The one shard-protocol core ([[ShardedIndex]]) behind the four
   * index families: a rule it owns behaves the same for every family,
   * and the families do not grow their own copies of the protocol back.
   */
@@ -23,9 +23,13 @@ class ShardedIndexSpec extends SparkSpec {
     "doc_id", "text", distinct = false)
   private lazy val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
   private def vecs(lo: Long, hi: Long) = emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
+  private def gpois(ids: Seq[Long]) = ids
+    .map(i => (i, s"poi number $i", null: String))
+    .toDF("osm_id", "name_local_norm", "name_en_norm")
 
   /** (family, build three shards 0/1/2 of ten-plus rows each, tombstone
-    * one row of shard 1, compactSmall) */
+    * one row of shard 1 — for the watermark store, most of its ids —
+    * compactSmall) */
   private lazy val families: Seq[(String, String => Unit, String => Unit,
       (String, Double) => Seq[Int])] = Seq(
     ("TextIndex",
@@ -51,7 +55,15 @@ class ShardedIndexSpec extends SparkSpec {
         VectorIndex.append(vecs(300L, 400L), p)
       },
       p => VectorIndex.delete(Seq(250L).toDF("vec_id"), p),
-      (p, frac) => VectorIndex.compactSmall(spark, p, maxShardBytes = 0L, tombstoneFrac = frac)))
+      (p, frac) => VectorIndex.compactSmall(spark, p, maxShardBytes = 0L, tombstoneFrac = frac)),
+    ("TrigramStore",
+      p => {
+        TrigramStore.write(gpois(0L until 10L), p)
+        TrigramStore.append(gpois(10L until 20L), p)
+        TrigramStore.append(gpois(20L until 30L), p)
+      },
+      p => TrigramStore.delete(spark, p, 10L until 17L),
+      (p, frac) => TrigramStore.compactSmall(spark, p, maxShardBytes = 0L, tombstoneFrac = frac)))
 
   test("tombstone-heavy means at least one dead row, for every family") {
     // per family: (folded with no tombstone at all, folded with one dead
@@ -74,7 +86,8 @@ class ShardedIndexSpec extends SparkSpec {
       "claimShardId", "heartbeatClaim", "leasedIds", "gcClaims", "gcStaging",
       "dropIncompleteCommitted")
     val dir = Paths.get("src/main/scala/graft/ext")
-    for (file <- Seq("TextIndex.scala", "VectorIndex.scala", "MinHashIndex.scala")) {
+    for (file <- Seq("TextIndex.scala", "VectorIndex.scala", "MinHashIndex.scala",
+        "TrigramStore.scala")) {
       val src = new String(Files.readAllBytes(dir.resolve(file)), "UTF-8")
       val found = owned.filter(m => src.contains(s"IndexIO.$m"))
       assert(found.isEmpty,

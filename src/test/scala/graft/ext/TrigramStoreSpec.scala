@@ -102,7 +102,7 @@ class TrigramStoreSpec extends SparkSpec {
       "a watermark for a shard that never committed must not subtract anything")
   }
 
-  test("pins freeze the served state; compactAll fails pinned reads LOUDLY") {
+  test("pins freeze the served state; fold + gc fails pinned reads LOUDLY") {
     val base = pois((1L, "old cafe", null), (2L, "stable name", null))
     val path = tmp() + "/ix"
     TrigramStore.write(base, path)
@@ -114,6 +114,7 @@ class TrigramStoreSpec extends SparkSpec {
     val pin1 = TrigramStore.pinNow(spark, path)
     val liveBefore = postingSet(TrigramStore.postings(spark, path))
     val folded = TrigramStore.compactAll(spark, path)
+    TrigramStore.gcUnpinned(spark, path, pins = Nil)
     assert(folded.nonEmpty)
     assert(postingSet(TrigramStore.postings(spark, path)) == liveBefore,
       "fold must not change the served rows")
@@ -130,7 +131,7 @@ class TrigramStoreSpec extends SparkSpec {
   }
 
   test("delete → re-append → DEFERRED fold: the id keeps serving (round-18 HIGH fix)") {
-    // the failure mode: after compactAll(deferDeletes = true) the
+    // the failure mode: after a deferred compactAll the
     // re-append watermark (id, K) names a REPLACES-hidden shard; an
     // inert-check keyed on the SERVING set (instead of marker
     // existence) filters it out, the older (id, MaxValue) delete wins
@@ -143,7 +144,7 @@ class TrigramStoreSpec extends SparkSpec {
     val expect = postingSet(graft.etl.TrigramIndex.build(
       pois((1L, "phoenix reborn", null), (2L, "bystander", null))))
     assert(postingSet(TrigramStore.postings(spark, path)) == expect)
-    TrigramStore.compactAll(spark, path, deferDeletes = true)
+    TrigramStore.compactAll(spark, path)
     // deferred fold: watermark shards and folded markers stay on disk —
     // the LIVE read must re-apply them as a no-op, not a false negative
     assert(postingSet(TrigramStore.postings(spark, path)) == expect,
@@ -215,6 +216,7 @@ class TrigramStoreSpec extends SparkSpec {
     TrigramStore.delete(spark, path, (1L to 15L))
     val rep = TrigramStore.maintain(spark, path, maxShards = 3,
       tombstoneFrac = 0.3)
+    TrigramStore.gcUnpinned(spark, path, pins = Nil)
     assert(rep.action == "compact", s"expected the dead-mass route: $rep")
     assert(IndexIO.shardIds(spark, s"$path/deletes").isEmpty,
       "the immediate-mode full fold clears applied watermarks")
@@ -228,7 +230,7 @@ class TrigramStoreSpec extends SparkSpec {
     val path = tmp() + "/ix"
     TrigramStore.write(pois((1L, "alpha site", null), (2L, "beta site", null)), path)
     TrigramStore.append(pois((1L, "alpha renamed", null)), path) // wm (1, s1)
-    TrigramStore.compactAll(spark, path, deferDeletes = true)    // applies + defers
+    TrigramStore.compactAll(spark, path)                         // applies + defers
     // a delete landing AFTER the fold is pending — a standalone gc
     // sweep must not reclaim it (that would resurrect id 2)
     TrigramStore.delete(spark, path, Seq(2L))
@@ -244,6 +246,26 @@ class TrigramStoreSpec extends SparkSpec {
     assert(IndexIO.shardIds(spark, s"$path/postings") ==
       IndexIO.liveCommittedIds(spark, path),
       "unpinned folded postings must be reclaimed")
+  }
+
+  test("a crashed append's marker-less postings shard is reclaimed by the next fold") {
+    val base = pois((1L, "old cafe", null), (2L, "stable name", null))
+    val path = tmp() + "/ix"
+    TrigramStore.write(base, path)
+    val served = postingSet(TrigramStore.postings(spark, path))
+    // the crash window between the postings publish and the marker: an
+    // expired claim (writer timestamp 0) and its published postings shard
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val claim = fs.create(new org.apache.hadoop.fs.Path(s"$path/claims/shard=5/CLAIM"))
+    try claim.writeBytes("crashed-appender\n0\n") finally claim.close()
+    graft.etl.TrigramIndex.build(pois((9L, "ghost diner", null))).coalesce(1)
+      .write.mode(SaveMode.Overwrite).parquet(s"$path/postings/shard=5")
+    assert(postingSet(TrigramStore.postings(spark, path)) == served)
+    TrigramStore.compactAll(spark, path)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/postings/shard=5")),
+      "an uncommitted postings shard with no live lease must be reclaimed")
+    assert(postingSet(TrigramStore.postings(spark, path)) == served)
   }
 
   test("format gate inherited: a future-format store refuses this binary's mutations") {
