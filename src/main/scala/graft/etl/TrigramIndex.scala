@@ -16,9 +16,11 @@ import org.apache.spark.sql.functions._
   * with the scan path is asserted in the spec.
   *
   * Scale shape: the index is (gram, col, osm_id) — build is one
-  * explode + distinct; a query is k posting-list lookups (equality
-  * predicates → Parquet min/max pruning when sorted by gram) + a
-  * semi-join, instead of a substring match over every name in 100 TB.
+  * explode + distinct. It serves two routes: the bulk join
+  * ([[candidateIdsBulk]], equality joins on gram) and the single-request
+  * fast path, which probes a driver-side [[PostingCache]] over the
+  * [[packed]] form. A forward request the fast path declines scans
+  * (`Repo.fetchCandidates`).
   */
 object TrigramIndex {
 
@@ -224,7 +226,8 @@ object TrigramIndex {
   /** Index-accelerated candidate fetch: prefilter by posting-list
     * intersection, then re-verify the exact predicate on the survivors.
     * Results are identical to `Repo.fetchCandidates` up to the
-    * engine-order-dependent cap (P8). */
+    * engine-order-dependent cap (P8). Not a serving route: the oracle
+    * checks this probe against DuckDB. */
   def fetchCandidates(poiView: DataFrame, index: DataFrame,
                       nameTokens: Seq[String], bboxPred: Option[Column],
                       limitScan: Int = 10000): Option[DataFrame] =
@@ -235,16 +238,14 @@ object TrigramIndex {
       bboxPred.fold(base)(base.filter).limit(limitScan)
     }
 
-  /** PACKED per-gram posting arrays `(gram, col_id, ids)` — the
-    * low-latency SERVING layout: a probe reads ~|query grams| rows
-    * instead of their exploded posting rows, collects them driver-side
-    * (they are the request's working set — the classic retrieval-server
-    * shape, posting lists intersected in-process), and the main job
-    * then runs with the candidate set as a literal `InSet`, so a
-    * request is ONE aux collect with no shuffle plus the ranking job.
-    * `maxDf` bounds every array for the 100 TB case: an over-cap
-    * (ubiquitous) gram keeps its row with `ids = NULL` — a marker the
-    * probe reads as "skip this constraint" — which is distinguishable
+  /** PACKED per-gram posting arrays `(gram, col_id, ids)` — what the
+    * fast path's [[PostingCache]] reads: a probe reads ~|query grams|
+    * rows instead of their exploded posting rows and intersects them
+    * driver-side (the classic retrieval-server shape). Derived from
+    * the row layout at bind; no writer stores it. `maxDf` bounds every
+    * array for the 100 TB case: an over-cap (ubiquitous) gram keeps
+    * its row with `ids = NULL` — a marker the probe reads as "skip
+    * this constraint" — which is distinguishable
     * from an ABSENT gram (no postings → the token matches nothing).
     * Dropping constraints only widens the superset; the caller's exact
     * re-verify restores precision. */
@@ -339,7 +340,7 @@ object TrigramIndex {
     * the in-process posting cache a retrieval server fronts its stored
     * postings with: misses fetch through ONE filtered collect over the
     * gram-sorted cached relation, hits cost driver-map lookups only, so
-    * a warm request runs ZERO auxiliary jobs before its ranking job.
+    * a warm probe runs ZERO jobs.
     * Memory is bounded by entry count × the pack-time `maxDf` array
     * bound, flat at any corpus size; eviction is access-order LRU.
     * Thread-safe (one lock — the fetch is the only slow path). */
@@ -391,51 +392,4 @@ object TrigramIndex {
     indexableGramSets(tokens).flatMap { gramSets =>
       intersectPost(cache.postings(gramSets.flatten.distinct), gramSets)
     }
-
-  /** [[fetchCandidates]] over a [[packed]] index: the candidate set is
-    * intersected driver-side ([[probeIds]]) and pushed into the poi
-    * scan as an `InSet` literal — no aux shuffle, no broadcast
-    * exchange; same verify + bbox + cap tail as the row-layout path.
-    * Identical results to `Repo.fetchCandidates` up to the
-    * engine-order-dependent cap (P8), like [[fetchCandidates]]. */
-  def fetchCandidatesPacked(poiView: DataFrame, packedIx: DataFrame,
-                            nameTokens: Seq[String], bboxPred: Option[Column],
-                            limitScan: Int = 10000,
-                            cache: Option[PostingCache] = None,
-                            maxCandidates: Int = 4096): Option[DataFrame] = {
-    val ids = cache match {
-      case Some(c) => probeIdsCached(c, nameTokens)
-      case None => probeIds(packedIx, nameTokens)
-    }
-    // SELECTIVITY routing: a probe matching more than `maxCandidates`
-    // ids prunes nothing worth the narrowing plan's extra legs — the
-    // verify predicate alone does the work, i.e. the SCAN plan, so
-    // route there (None) instead of serving the scan's job with an
-    // index toll on top. The classic optimizer rule (skip an index
-    // below some selectivity), applied at serve time where the probe
-    // has just measured its own selectivity for free.
-    ids.filter(_.length <= maxCandidates).map { arr =>
-      val verify = graft.query.Repo.likePredicate(
-        nameTokens, Seq(col("name_local_norm"), col("name_en_norm")))
-      // narrow candidate sets ride as an IN literal (InSet after
-      // OptimizeIn); wide ones (first-token probes at large corpora)
-      // become a broadcast of a LOCAL relation — an In with tens of
-      // thousands of literal children costs more to ANALYZE per request
-      // than the ranking job itself, and a raw InSet over the cached
-      // scan measured slower still (per-row boxed set probes across the
-      // whole corpus vs a hashed semi-join over it)
-      val narrowed =
-        if (arr.length <= 1024)
-          poiView.filter(col("osm_id").isInCollection(arr.toSeq))
-        else {
-          val spark = poiView.sparkSession
-          import spark.implicits._
-          poiView.join(
-            org.apache.spark.sql.functions.broadcast(arr.toSeq.toDF("osm_id")),
-            Seq("osm_id"), "left_semi")
-        }
-      val base = narrowed.filter(verify)
-      bboxPred.fold(base)(base.filter).limit(limitScan)
-    }
-  }
 }

@@ -277,10 +277,15 @@ private[ext] object ShardedIndex {
     * Runs under the maintenance lock ([[IndexIO.acquireMaintLock]]): a
     * second maintainer fails loud instead of folding the same shards
     * twice. Safe under concurrent appends — their shards land outside
-    * the fold set and the observed deletes. Returns the folded ids. */
+    * the fold set and the observed deletes. `dead` supplies per-shard
+    * `(rows, dead)` counts a caller already aggregated ([[maintain]]);
+    * absent, the size-tiered route runs [[DeleteModel.deadByShard]]
+    * itself. Either way only shards of the live listing taken under the
+    * lock can fold. Returns the folded ids. */
   def compactTiered(spark: SparkSession, path: String, f: Family,
                     maxShardBytes: Option[Long], partitions: Int,
-                    tombstoneFrac: Double): Seq[Int] = {
+                    tombstoneFrac: Double,
+                    dead: Option[Map[Int, (Long, Long)]] = None): Seq[Int] = {
     val lock = IndexIO.acquireMaintLock(spark, path)
     try {
       reconcile(spark, path, f)
@@ -300,9 +305,9 @@ private[ext] object ShardedIndex {
         case None => live
         case Some(bytes) =>
           val small = live.filter(k => shardBytes(spark, path, f, k) <= bytes)
-          val heavy = f.deletes.deadByShard(spark, path, f, live).collect {
-            case (k, (total, dead)) if dead > 0L && dead.toDouble >= tombstoneFrac * total => k
-          }.toSeq
+          val counts = dead.getOrElse(f.deletes.deadByShard(spark, path, f, live))
+          val heavy = live.filter(k => counts.get(k).exists { case (total, d) =>
+            d > 0L && d.toDouble >= tombstoneFrac * total })
           if (small.length < 2 && heavy.isEmpty) return Nil
           (small ++ heavy).distinct.sorted
       }
@@ -349,16 +354,18 @@ private[ext] object ShardedIndex {
     require(maxShards >= 1, s"maxShards must be >= 1, got $maxShards")
     val live = IndexIO.liveCommittedIds(spark, path)
     require(live.nonEmpty, s"no committed shards under $path")
-    val counts = f.deletes.deadByShard(spark, path, f, live).values
-    val total = counts.map(_._1).sum
-    val deadFrac = if (total == 0L) 0.0 else counts.map(_._2).sum.toDouble / total
+    // one aggregate feeds both the decision and the size-tiered fold's
+    // tombstone-heavy choice
+    val dead = f.deletes.deadByShard(spark, path, f, live)
+    val total = dead.values.map(_._1).sum
+    val deadFrac = if (total == 0L) 0.0 else dead.values.map(_._2).sum.toDouble / total
     if (deadFrac >= tombstoneFrac) {
       val folded = compactTiered(spark, path, f, None, partitions, 0.5)
       MaintainReport(live.size - folded.size + 1, deadFrac, "compact", folded)
     } else if (live.size > maxShards) {
       val sizes = live.map(k => shardBytes(spark, path, f, k)).sorted
       val folded = compactTiered(spark, path, f, Some(sizes(live.size - maxShards)),
-        partitions, tombstoneFrac)
+        partitions, tombstoneFrac, Some(dead))
       MaintainReport(live.size - folded.size + (if (folded.nonEmpty) 1 else 0),
         deadFrac, "compactSmall", folded)
     } else MaintainReport(live.size, deadFrac, "none", Nil)

@@ -663,7 +663,7 @@ object TextIndex {
     // as literal membership predicates — no deletes parquet read in the
     // plan, no broadcast anti-join build per probe. Wide literal lists
     // measurably dominate per-request ANALYSIS cost (same finding as
-    // fetchCandidatesPacked / PoiRowCache), so past `maxLiteralIds` the
+    // ScoutEngine.PoiRowCache), so past `maxLiteralIds` the
     // driver-read set becomes a broadcast anti-join of a LocalRelation
     // (still no deletes scan in the plan); a set past the driver-read
     // bound falls back to the distributed anti-join, the right plan at

@@ -159,9 +159,8 @@ object TrigramStore {
       })
 
   /** The live postings view: committed shards, watermark-subtracted.
-    * Same (gram, col_id, osm_id) shape as the bulk artifact — plugs
-    * straight into [[graft.etl.TrigramIndex.fetchCandidates]] and the
-    * serving engine's nameIndex slot. */
+    * The row layout (gram, col_id, osm_id) of the bulk artifact, the
+    * one the serving engine's nameIndex slot binds. */
   def postings(spark: SparkSession, path: String): DataFrame = {
     val committed = IndexIO.liveCommittedIds(spark, path)
     IndexIO.requireCommittedOrLegacy(spark, path, "postings", committed)

@@ -117,31 +117,6 @@ object Fixtures {
     }
   }
 
-  /** Long-lived engine with the trigram name index ATTACHED — the
-    * indexed serving tier next to [[gazEngine]]'s scan tier. Same pois,
-    * same admin; only the candidate-fetch path differs. */
-  def gazEngineIndexed(s: SparkSession, dir: String): ScoutEngine = {
-    val pois = gazPois(s, dir, withWikidata = true) // outside the memo: see above
-    // the index gets its own memo entry so clear() unpersists it (the
-    // engine's close() only owns its internal admin cache)
-    val ix = memo(s, dir, "nameIndex") {
-      // PACKED per-gram posting arrays ([[TrigramIndex.packed]]): a
-      // request probes ~|query grams| rows driver-side and ranks with
-      // the candidate set as an InSet literal — no aux shuffle or
-      // broadcast per request. Gram-sorted within partitions: cached
-      // columnar batches keep min/max stats, so the gram-IN probe
-      // prunes whole batches instead of filtering every cached row
-      TrigramIndex.packed(TrigramIndex.build(pois))
-        .repartition(width(s), col("gram"))
-        .sortWithinPartitions("gram").persist()
-    }
-    memo(s, dir, "engineIndexed") {
-      new ScoutEngine(s, pois,
-        GazetteerBuilder.buildAdmin(derivedRaw(s, dir, withWikidata = true)),
-        nameIndex = Some(ix))
-    }
-  }
-
   /** Memoized PERSISTED-INDEX path for the pure index-SERVING queries —
     * the [[gazEngine]] treatment extended to the ext indexes: production
     * builds an index once and serves many queries, so the bench should

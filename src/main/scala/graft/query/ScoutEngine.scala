@@ -36,8 +36,7 @@ class ScoutEngine(
     pois: DataFrame,
     admin: DataFrame,
     settings: Settings = Settings(),
-    nameIndex: Option[DataFrame] = None,
-    fastPathMaxCandidates: Int = 4096) {
+    nameIndex: Option[DataFrame] = None) {
 
   /** Everything derived from ONE gazetteer snapshot, bound together so
     * [[reload]] can swap the whole set atomically: a request reads the
@@ -70,45 +69,20 @@ class ScoutEngine(
     // than state.set, which is already after the old entry's eviction.
     lazy val adminCached: DataFrame = admin.cache()
 
-    // bind-time PACKING (round 18): a ROW-layout name index — what a
-    // monolithic snapshot's `name_index` dir and a partitioned
-    // snapshot's pinned TrigramStore read ([[graft.etl.GazetteerBuilder
-    // .readNameIndex]]) both carry — packs here into the per-gram
-    // posting-array serving layout, so the in-process fast path works
-    // on EVERY bound snapshot, including the refreshDelta journey
-    // (whose warm requests used to silently pay the distributed job).
-    // The pack is a lazy plan: nothing runs at bind; a PostingCache
-    // miss pays one gram-pushdown aggregate, once per cold gram.
-    val packedIx: Option[DataFrame] = nameIndex.map { ix =>
-      if (ix.columns.contains("ids")) ix else graft.etl.TrigramIndex.packed(ix)
-    }
-
-    // in-process posting cache over the packed layout: warm requests
-    // probe entirely on the driver — no auxiliary job before the ranking
-    // job ([[graft.etl.TrigramIndex.PostingCache]]; bounded LRU)
-    val packedCache: Option[graft.etl.TrigramIndex.PostingCache] =
-      packedIx.map(new graft.etl.TrigramIndex.PostingCache(_))
-
-    // ROW-layout posting view for the bulk join ([[GeocodeJoin.topKIndexed]]
-    // wants (gram, col_id, osm_id) rows): a row-layout bind serves
-    // as-is (no round-trip through the pack); a packed bind derives it
-    // by exploding the posting arrays — EXACT when no gram is
-    // ubiquity-marked (pack-time `ids = NULL`, whose postings are gone; a
-    // derived row view would silently turn "skip constraint" into "token
-    // matches nothing" = false negatives). The marker probe is one tiny
-    // limit(1) action, paid once per snapshot, not per request.
-    lazy val rowIndex: Option[DataFrame] = nameIndex.flatMap { ix =>
-      import org.apache.spark.sql.functions.{col, explode}
-      if (!ix.columns.contains("ids")) Some(ix)
-      else if (ix.filter(col("ids").isNull).limit(1).isEmpty)
-        Some(ix.select(col("gram"), col("col_id"), explode(col("ids")).as("osm_id")))
-      else {
-        System.err.println(
-          "[graft] bulk geocode: packed name index carries ubiquity markers; " +
-            "falling back to the unindexed scan join")
-        None
-      }
-    }
+    // The bound name index is the ROW layout `(gram, col_id, osm_id)`
+    // that every writer produces: a monolithic snapshot's `name_index`
+    // dir and a partitioned snapshot's pinned TrigramStore
+    // ([[graft.etl.GazetteerBuilder.readNameIndex]]). Bulk joins it as
+    // is; the fast path probes it through a driver-side posting cache
+    // over its per-gram packing ([[graft.etl.TrigramIndex.PostingCache]],
+    // bounded LRU). The pack is a lazy plan: nothing runs at bind; a
+    // cache miss pays one gram-pushdown aggregate, once per cold gram.
+    for (ix <- nameIndex)
+      require(Seq("gram", "col_id", "osm_id").forall(ix.columns.contains),
+        "the name index must have the row layout (gram, col_id, osm_id), got " +
+          ix.columns.mkString("(", ", ", ")"))
+    val postingCache: Option[graft.etl.TrigramIndex.PostingCache] = nameIndex.map(ix =>
+      new graft.etl.TrigramIndex.PostingCache(graft.etl.TrigramIndex.packed(ix)))
 
     // driver-side caches behind the in-process fast paths
     // ([[forwardFast]] / [[reverseFast]]): hot candidate rows (also the
@@ -176,7 +150,7 @@ class ScoutEngine(
   /** ATOMIC snapshot swap — the serving answer to the versioned-pointer
     * index publish (an engine binds an immutable gazetteer snapshot;
     * refreshing the corpus used to mean standing up a new engine): one
-    * reference flip replaces the poi view, admin cache, packed posting
+    * reference flip replaces the poi view, admin cache, posting
     * cache, and both driver LRUs together, so every request before the
     * flip serves the old snapshot and every request after serves the
     * new one — no mixed state, no restart, [[forwardFast]] intact (its
@@ -255,38 +229,24 @@ class ScoutEngine(
     () => { stop.set(true); t.interrupt(); t.join() }
   }
 
-  /** Stage 1–5 of `app.py:86-114` as a DataFrame; rows>0 iff hits. */
+  /** Stage 1–5 of `app.py:86-114` as a DataFrame; rows>0 iff hits. The
+    * candidates come from the reference's one program
+    * ([[Repo.fetchCandidates]]: token `LIKE` conjunction, bbox range,
+    * scan cap) whatever the bind — the job route of [[forward]], and the
+    * program [[forwardFast]] is held equal to. */
   def forwardDF(req: ForwardReq, limitScan: Int = 10000): DataFrame = {
     val b = state.get()
-    import b.{packedCache, poiView}
     val texts = req.candidates.map(_.text)
     val nameTokens = Norm.dedupTokens(texts.map(Norm.tokenize))
     if (nameTokens.isEmpty) {
       // empty token list → empty hits (app.py:96-97)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        Ranking.rank(poiView.limit(0), Seq("x"), None, settings, 1).schema)
+        Ranking.rank(b.poiView.limit(0), Seq("x"), None, settings, 1).schema)
     }
     val bbox = b.resolveBboxCached(req.cityHint, req.country)
-    // trigram-index path when one is attached and every token is
-    // indexable; identical results (TrigramIndexSpec) — falls back to
-    // the scan path otherwise. Every bound index serves through the
-    // PACKED layout (row-layout binds packed at bind time): the probe
-    // runs driver-side through the posting cache, skipping the aux
-    // shuffle + broadcast the row layout pays per request. A probe the
-    // packed path declines for SELECTIVITY (wide candidate set) retries
-    // the distributed row-index join when the bind was row-layout —
-    // that was its plan for every request before round 18 — and the
-    // scan otherwise.
-    val bboxP = bbox.map(Repo.bboxPredicate)
-    val candidates = b.packedIx
-      .flatMap(ix => graft.etl.TrigramIndex.fetchCandidatesPacked(
-        poiView, ix, nameTokens, bboxP, limitScan, cache = packedCache))
-      .orElse(b.nameIndex.filterNot(_.columns.contains("ids"))
-        .flatMap(ix => graft.etl.TrigramIndex.fetchCandidates(
-          poiView, ix, nameTokens, bboxP, limitScan)))
-      .getOrElse(Repo.fetchCandidates(poiView, nameTokens, bbox, limitScan))
-    Ranking.rank(candidates, texts, bbox, settings, req.limit)
+    Ranking.rank(Repo.fetchCandidates(b.poiView, nameTokens, bbox, limitScan),
+      texts, bbox, settings, req.limit)
   }
 
   /** Typed result surface: the ranked hits as a `Dataset[Hit]` with a
@@ -302,24 +262,24 @@ class ScoutEngine(
     * `POST /v1/geocode/forward` in single-digit ms because everything is
     * in-process (`app.py:86-114`, DuckDB); a Spark job/collect carries a
     * ~150–230 ms scheduling floor however small the data. When the
-    * packed-postings probe (driver-side, warm = map lookups) yields
-    * ≤ `fastPathMaxCandidates` ids, the candidate rows come from a
-    * bounded driver row cache and scoring runs as plain Scala
+    * posting-cache probe (driver-side, warm = map lookups) yields
+    * ≤ [[ScoutEngine.FastPathMaxCandidates]] ids, the candidate rows come
+    * from a bounded driver row cache and scoring runs as plain Scala
     * ([[Ranking.scoreScalar]] — bit-equal to the column program), so a
-    * warm request launches ZERO Spark jobs. None routes to the job path:
-    * no packed index, unindexable tokens, a ubiquity-marked probe, or a
-    * candidate set wide enough that the distributed plan is the right
-    * one anyway (also whenever the P8 cap could bind — ids ≤ limitScan
-    * guarantees the verified set never hits the cap, keeping fast-path
-    * results EXACTLY the job path's, not just cap-equivalent). */
+    * warm request launches ZERO Spark jobs. None routes to [[forwardDF]]:
+    * no name index, unindexable tokens, or a candidate set wide enough
+    * that the scan is the right plan anyway (also whenever the P8 cap
+    * could bind — ids ≤ limitScan guarantees the verified set never
+    * hits the cap, keeping fast-path results EXACTLY the scan's, not
+    * just cap-equivalent). */
   def forwardFast(req: ForwardReq, limitScan: Int = 10000): Option[Seq[Hit]] = {
     val b = state.get()
     val texts = req.candidates.map(_.text)
     val nameTokens = Norm.dedupTokens(texts.map(Norm.tokenize))
     if (nameTokens.isEmpty) return Some(Seq.empty) // app.py:96-97
-    b.packedCache.flatMap { cache =>
+    b.postingCache.flatMap { cache =>
       graft.etl.TrigramIndex.probeIdsCached(cache, nameTokens)
-        .filter(a => a.length <= fastPathMaxCandidates && a.length <= limitScan)
+        .filter(a => a.length <= ScoutEngine.FastPathMaxCandidates && a.length <= limitScan)
         .map { ids =>
           val bbox = b.resolveBboxCached(req.cityHint, req.country)
           b.rowCache.rows(ids)
@@ -331,17 +291,9 @@ class ScoutEngine(
             .filter(r => bbox.forall(b => // P6
               r.lat >= b.miny && r.lat <= b.maxy &&
                 r.lon >= b.minx && r.lon <= b.maxx))
-            .map { r =>
-              Hit(
-                name = if (r.nameLocal != null) r.nameLocal
-                       else if (r.nameEn != null) r.nameEn else "",
-                lat = r.lat, lon = r.lon,
-                country = Option(r.country), state = Option(r.state),
-                city = Option(r.city), osmId = r.osmId, kind = r.kind,
-                score = Ranking.scoreScalar(texts, bbox, settings,
-                  r.nameLocal, r.nameEn, r.nameLocalNorm, r.nameEnNorm,
-                  r.kind, r.importance, r.lat, r.lon))
-            }
+            .map(r => r.hit(Ranking.scoreScalar(texts, bbox, settings,
+              r.nameLocal, r.nameEn, r.nameLocalNorm, r.nameEnNorm,
+              r.kind, r.importance, r.lat, r.lon)))
             .sortBy(h => (-h.score, h.osmId))
             .take(req.limit)
         }
@@ -360,30 +312,27 @@ class ScoutEngine(
     * settings the per-request path uses), amortizing the per-job floor
     * the serving profile measured (~200-450 ms per request) across the
     * batch — the shape the reference cannot express (one HTTP request
-    * at a time, `app.py:86`). Rides the trigram index when the engine
-    * carries one. No per-query area hints (the bulk contract): results
-    * per text equal a hint-less [[forward]] request with that single
-    * candidate — proximity contributes zero to both scores, and the
-    * spec pins the parity. The returned hits carry the full per-request
-    * [[Hit]] surface: the ranked rows broadcast-join back to the poi
-    * view for the admin columns (country/state/city). */
+    * at a time, `app.py:86`). Joins the bound row postings
+    * ([[GeocodeJoin.topKIndexed]]) when the engine carries a name index.
+    * No per-query area hints (the bulk contract): results per text equal
+    * a hint-less [[forward]] request with that single candidate —
+    * proximity contributes zero to both scores, and the spec pins the
+    * parity. The returned hits carry the full per-request [[Hit]]
+    * surface: the ranked rows broadcast-join back to the poi view for
+    * the admin columns (country/state/city). */
   def bulkDF(texts: Seq[String], limit: Int = 5): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
     val b = state.get()
-    import b.{poiView, rowIndex}
     val queries = spark.createDataFrame(
       texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
     ).toDF("qid", "text")
-    val ranked = rowIndex match {
-      // the bulk join needs the ROW posting layout; a packed serving
-      // index derives it (`rowIndex`) so bulk keeps index acceleration
-      case Some(ix) =>
-        GeocodeJoin.topKIndexed(queries, poiView, ix, settings, limit)
-      case None => GeocodeJoin.topK(queries, poiView, settings, limit)
+    val ranked = b.nameIndex match {
+      case Some(ix) => GeocodeJoin.topKIndexed(queries, b.poiView, ix, settings, limit)
+      case None => GeocodeJoin.topK(queries, b.poiView, settings, limit)
     }
     // the ranked rows are ≤ |texts| × k — broadcast them back onto the
     // poi view for the admin columns instead of shuffling the gazetteer
-    poiView.select(col("osm_id"), col("country"), col("state"), col("city"))
+    b.poiView.select(col("osm_id"), col("country"), col("state"), col("city"))
       .join(broadcast(ranked), Seq("osm_id"))
       .select(col("qid"), col("text"), col("rank"), col("name"),
         col("lat"), col("lon"), col("country"), col("state"), col("city"),
@@ -465,12 +414,7 @@ class ScoutEngine(
     val best = ScoutEngine.nearestByIndex(b.cellIndex(cellDeg), points.toArray, cellDeg)
     val rows = b.rowCache.rows(best.flatMap(_.map(_._2)).distinct)
       .map(r => r.osmId -> r).toMap
-    best.toIndexedSeq.map(_.flatMap { case (d, id) => rows.get(id).map { r =>
-      (Hit(name = if (r.nameLocal != null) r.nameLocal else r.nameEn,
-        lat = r.lat, lon = r.lon, country = Option(r.country),
-        state = Option(r.state), city = Option(r.city), osmId = r.osmId,
-        kind = r.kind, score = 0.0), d)
-    }})
+    best.toIndexedSeq.map(_.flatMap { case (d, id) => rows.get(id).map(r => (r.hit(0.0), d)) })
   }
 
   /** `GET /healthz` analogue (`app.py:116-118`). */
@@ -492,7 +436,18 @@ object ScoutEngine {
       osmId: Long, nameLocal: String, nameEn: String,
       nameLocalNorm: String, nameEnNorm: String,
       city: String, state: String, country: String,
-      lat: Double, lon: Double, kind: String, importance: Option[Double])
+      lat: Double, lon: Double, kind: String, importance: Option[Double]) {
+    /** This row as a [[Hit]]; the name is [[Ranking.rank]]'s
+      * `coalesce(name_local, name_en, "")`. */
+    def hit(score: Double): Hit = Hit(
+      name = Option(nameLocal).orElse(Option(nameEn)).getOrElse(""),
+      lat = lat, lon = lon, country = Option(country), state = Option(state),
+      city = Option(city), osmId = osmId, kind = kind, score = score)
+  }
+
+  /** [[ScoutEngine.forwardFast]] serves a probe of at most this many ids;
+    * a wider one takes the scan job ([[ScoutEngine.forwardDF]]). */
+  val FastPathMaxCandidates = 4096
 
   /** Bounded driver-side LRU over serving rows (osm_id → row) — the
     * in-process fast path's row store, the [[graft.etl.TrigramIndex
@@ -521,8 +476,8 @@ object ScoutEngine {
       for (id <- ids; e = cache.get(id); if e != null) local(id) = e
       val missing = ids.distinct.filterNot(local.contains)
       if (missing.nonEmpty) {
-        // same In-literal vs broadcast-semi-join routing as the packed
-        // candidate narrowing (analyzer cost dominates wide In lists)
+        // narrow sets ride as an In literal, wide ones as a broadcast
+        // semi-join (analyzer cost dominates wide In lists)
         val narrowed =
           if (missing.length <= 1024)
             poiView.filter(col("osm_id").isInCollection(missing.toSeq))
@@ -668,14 +623,14 @@ object ScoutEngine {
     private def fetch(keys: Seq[(Long, Long)],
                       local: scala.collection.mutable.Map[(Long, Long), RevCell])
         : Boolean = {
-      import org.apache.spark.sql.functions.{coalesce, col, floor}
+      import org.apache.spark.sql.functions.{coalesce, col, floor, lit}
       val c = cellDeg
       val packedKey = floor(col("lat") / c).cast("long") * 100000L +
         floor(col("lon") / c).cast("long")
       val rows = poiView.select(col("osm_id"),
           col("lat").cast("double").as("lat"),
           col("lon").cast("double").as("lon"),
-          coalesce(col("name_local"), col("name_en")).as("name"),
+          coalesce(col("name_local"), col("name_en"), lit("")).as("name"),
           col("country"), col("state"), col("city"), col("kind"),
           packedKey.as("ck"))
         .filter(col("ck").isInCollection(keys.map(pack)))

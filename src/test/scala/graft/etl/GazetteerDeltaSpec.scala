@@ -88,19 +88,25 @@ class GazetteerDeltaSpec extends SparkSpec {
     assert(v2 != v1)
     // the serving engine reloads the OLD version dir: old pois, old pins
     val eng = graft.query.ScoutEngine.fromPath(spark, v1)
+    // forwardFast reads the bound trigram index (forwardDF scans pois).
+    // "cafe number" and not "cafe number 3": a one-character token is
+    // below the trigram size, so such a request never reads the index;
+    // limit 50 returns every cafe the index holds
     val req = graft.query.ForwardReq(
-      Seq(graft.query.ForwardCandidate("cafe number 3")), limit = 3)
-    val hits = eng.forwardDF(req).collect()
-    assert(hits.exists(_.getAs[String]("name") == "cafe number 3"),
+      Seq(graft.query.ForwardCandidate("cafe number")), limit = 50)
+    val hits = eng.forwardFast(req)
+    assert(hits.isDefined, "v1's pinned index must serve the request")
+    assert(hits.get.exists(_.name == "cafe number 3"),
       "v1 must serve the pre-delta name through its pinned index")
     val eng2 = graft.query.ScoutEngine.fromPath(spark, v2)
-    val hits2 = eng2.forwardDF(graft.query.ForwardReq(
-      Seq(graft.query.ForwardCandidate("renamed three")), limit = 3)).collect()
-    assert(hits2.exists(_.getAs[String]("name") == "renamed three"),
+    val hits2 = eng2.forwardFast(graft.query.ForwardReq(
+      Seq(graft.query.ForwardCandidate("renamed three")), limit = 3))
+    assert(hits2.isDefined, "v2's pinned index must serve the request")
+    assert(hits2.get.exists(_.name == "renamed three"),
       "v2 must serve the renamed poi through the appended index shard")
-    assert(eng2.forwardDF(graft.query.ForwardReq(
-      Seq(graft.query.ForwardCandidate("cafe number 7")), limit = 3))
-      .collect().forall(_.getAs[Long]("osm_id") != 7L),
+    val hits3 = eng2.forwardFast(req)
+    assert(hits3.isDefined, "v2's pinned index must serve the request")
+    assert(hits3.get.nonEmpty && hits3.get.forall(_.osmId != 7L),
       "v2 must not serve the deleted poi")
   }
 
@@ -204,9 +210,10 @@ class GazetteerDeltaSpec extends SparkSpec {
     assert(poiSet(GazetteerBuilder.readPois(spark, current))
       .contains((7L, "phoenix seven")))
     val eng = graft.query.ScoutEngine.fromPath(spark, current)
-    val hits = eng.forwardDF(graft.query.ForwardReq(
-      Seq(graft.query.ForwardCandidate("phoenix seven")), limit = 3)).collect()
-    assert(hits.exists(_.getAs[Long]("osm_id") == 7L),
+    val hits = eng.forwardFast(graft.query.ForwardReq(
+      Seq(graft.query.ForwardCandidate("phoenix seven")), limit = 3))
+    assert(hits.isDefined, "the pinned trigram index must serve the request")
+    assert(hits.get.exists(_.osmId == 7L),
       "re-appended id lost from the pinned trigram index after maintenance")
     eng.close()
     // and the raw live store agrees

@@ -108,9 +108,12 @@ class TrigramIndexSpec extends SparkSpec {
 
   private lazy val packedIx = TrigramIndex.packed(index)
 
+  /** The packed probe's superset, narrowed by the exact P5 predicate. */
   private def packedIds(tokens: Seq[String]): Option[Set[Long]] =
-    TrigramIndex.fetchCandidatesPacked(pois, packedIx, tokens, None)
-      .map(_.select("osm_id").as[Long].collect().toSet)
+    TrigramIndex.probeIds(packedIx, tokens).map(ids =>
+      pois.filter(col("osm_id").isInCollection(ids.toSeq))
+        .filter(Repo.likePredicate(tokens, Seq(col("name_local_norm"), col("name_en_norm"))))
+        .select("osm_id").as[Long].collect().toSet)
 
   test("packed probe returns exactly the scan-path results") {
     for (tokens <- Seq(
@@ -122,8 +125,8 @@ class TrigramIndexSpec extends SparkSpec {
   }
 
   test("packed probe: short tokens fall back to the scan path (None)") {
-    assert(TrigramIndex.fetchCandidatesPacked(pois, packedIx, Seq("ab"), None).isEmpty)
-    assert(TrigramIndex.fetchCandidatesPacked(pois, packedIx, Seq("abc", "x"), None).isEmpty)
+    assert(packedIds(Seq("ab")).isEmpty)
+    assert(packedIds(Seq("abc", "x")).isEmpty)
   }
 
   test("packed maxDf markers: cut grams skip their constraint (superset), " +

@@ -55,8 +55,8 @@ class PlanShapeSpec extends SparkSpec {
       s"term probe not pushed:\n${plan.linesIterator.filter(_.contains("PushedFilters")).mkString("\n")}")
   }
 
-  test("packed-trigram serving: the narrow path ranks with ZERO exchanges " +
-      "(probe resolved driver-side, candidates an In literal, top-k a TakeOrdered)") {
+  test("forward job plan: the scan ranks with no hash exchange " +
+      "(the scan cap's funnel only, top-k a TakeOrdered)") {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.Row
     val schema = StructType(Seq(
@@ -70,25 +70,24 @@ class PlanShapeSpec extends SparkSpec {
       Row(3L, "Dining Hall", Map("tourism" -> "museum"), "POINT(103.8 1.3)"))
     val raw = spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
     val pois = graft.etl.GazetteerBuilder.buildPois(raw)
-    val packed = graft.etl.TrigramIndex.packed(graft.etl.TrigramIndex.build(pois))
     val engine = new graft.query.ScoutEngine(spark, pois,
       graft.etl.GazetteerBuilder.buildAdmin(raw), graft.core.Settings(),
-      nameIndex = Some(packed))
+      nameIndex = Some(graft.etl.TrigramIndex.build(pois)))
     val ranked = engine.forwardDF(graft.query.ForwardReq(
       Seq(graft.query.ForwardCandidate("dining")), limit = 5))
     val plan = physical(ranked)
-    // the per-request serving invariant the round-9 latency work bought:
-    // after the driver-side probe, ONE job with no HASH shuffle — filter
-    // + score + TakeOrdered over the narrowed candidates. The single
-    // permitted exchange is the P8 scan cap's SinglePartition funnel
-    // (GlobalLimit limitScan — it moves at most limitScan narrow rows).
+    // the forward job route (what a request the fast path declines
+    // runs): ONE job with no HASH shuffle — the P5/P6 filter + score +
+    // TakeOrdered over the capped scan. The single permitted exchange
+    // is the P8 scan cap's SinglePartition funnel (GlobalLimit
+    // limitScan — it moves at most limitScan narrow rows).
     assert(!plan.contains("Exchange hashpartitioning"),
-      s"narrow packed serving plan hash-shuffles:\n$plan")
+      s"forward job plan hash-shuffles:\n$plan")
     assert("Exchange".r.findAllIn(plan).size <= 1,
-      s"narrow packed serving plan has exchanges beyond the cap funnel:\n$plan")
+      s"forward job plan has exchanges beyond the cap funnel:\n$plan")
     assert(plan.contains("TakeOrderedAndProject"),
       "top-k must be a TakeOrdered, not a global sort")
-    assertNoProductJoin(plan, "packed serving")
+    assertNoProductJoin(plan, "forward job")
   }
 
   test("batch BM25 serving keeps the single-probe shape: pushed union-vocabulary IN, no product joins") {

@@ -81,6 +81,47 @@ class ShardedIndexSpec extends SparkSpec {
     assert(got.toMap == families.map(_._1 -> expected).toMap)
   }
 
+  test("maintain's size-tiered route runs no more jobs than compactSmall at the same threshold") {
+    // two identical copies: three shards and one deleted id, so the
+    // dead fraction (1/30) stays under maintain's 0.3 bound and
+    // maxShards = 2 takes the compactSmall route
+    def copy(tag: String) = {
+      val p = fresh(tag)
+      TrigramStore.write(gpois(0L until 10L), p)
+      TrigramStore.append(gpois(10L until 20L), p)
+      TrigramStore.append(gpois(20L until 30L), p)
+      TrigramStore.delete(spark, p, Seq(15L))
+      p
+    }
+    val (viaMaintain, viaCompact) = (copy("maintain"), copy("compactSmall"))
+    val sc = spark.sparkContext
+    def jobsOf[T](body: => T): (T, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
+      sc.addSparkListener(listener)
+      try {
+        val out = body
+        org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
+        (out, jobs.get())
+      } finally sc.removeSparkListener(listener)
+    }
+    // maintain's threshold: the (n - maxShards + 1)-th smallest shard
+    val live = IndexIO.liveCommittedIds(spark, viaCompact)
+    val threshold = live.map(k =>
+      IndexIO.dirBytes(spark, s"$viaCompact/postings/shard=$k")).sorted.apply(live.size - 2)
+    val (report, maintainJobs) = jobsOf(TrigramStore.maintain(spark, viaMaintain, maxShards = 2))
+    val (folded, compactJobs) =
+      jobsOf(TrigramStore.compactSmall(spark, viaCompact, threshold, tombstoneFrac = 0.3))
+    assert(report.action == "compactSmall" && report.folded == folded, s"$report vs $folded")
+    assert(maintainJobs <= compactJobs,
+      s"maintain ran $maintainJobs Spark jobs, compactSmall $compactJobs")
+  }
+
   test("the index families call none of the protocol primitives ShardedIndex owns") {
     val owned = Seq("acquireMaintLock", "releaseMaintLock", "heartbeatMaintLock",
       "claimShardId", "heartbeatClaim", "leasedIds", "gcClaims", "gcStaging",

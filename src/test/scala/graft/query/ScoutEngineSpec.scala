@@ -98,8 +98,11 @@ class ScoutEngineSpec extends SparkSpec {
     val pois = GazetteerBuilder.buildPois(raw)
     val admin = GazetteerBuilder.buildAdmin(raw)
     val scan = new ScoutEngine(spark, pois, admin, Settings())
-    val packed = new ScoutEngine(spark, pois, admin, Settings(),
-      nameIndex = Some(graft.etl.TrigramIndex.packed(graft.etl.TrigramIndex.build(pois))))
+    // bound as a served gazetteer binds it: the written name_index dir
+    val ixDir = graft.core.TempDirs.create("graft-engine-ix-") + "/name_index"
+    graft.etl.TrigramIndex.write(pois, ixDir, partitions = 1)
+    val indexed = new ScoutEngine(spark, pois, admin, Settings(),
+      nameIndex = Some(spark.read.parquet(ixDir)))
     val reqs = Seq(
       ForwardReq(Seq(ForwardCandidate("Monograph Dining")), limit = 3),
       ForwardReq(Seq(ForwardCandidate("dining")), limit = 5),
@@ -107,43 +110,41 @@ class ScoutEngineSpec extends SparkSpec {
       ForwardReq(Seq(ForwardCandidate("zz")), limit = 3), // short token: scan fallback
       ForwardReq(Seq(ForwardCandidate("")), limit = 3))
     for (r <- reqs)
-      assert(packed.forward(r) == scan.forward(r), s"request $r diverged")
+      assert(indexed.forward(r) == scan.forward(r), s"request $r diverged")
 
-    // IN-PROCESS fast path (round-10): a packed engine must (a) engage
+    // IN-PROCESS fast path (round-10): an indexed engine must (a) engage
     // the zero-job driver path for every indexable request shape —
     // including the hinted one, whose bbox resolves through the LRU —
     // and (b) produce BIT-EQUAL hits (scores included) to the
     // distributed job path, which scoreScalar mirrors term-for-term.
     for (r <- reqs.take(3)) { // the three indexable-token requests
-      val fast = packed.forwardFast(r)
+      val fast = indexed.forwardFast(r)
       assert(fast.isDefined, s"fast path did not engage for $r")
       import spark.implicits._
-      val job = packed.forwardDF(r).withColumnRenamed("osm_id", "osmId")
+      val job = indexed.forwardDF(r).withColumnRenamed("osm_id", "osmId")
         .as[Hit].collect().toIndexedSeq
       assert(fast.get == job, s"fast path diverged from job path for $r")
     }
     // short-token and empty requests: scan fallback / in-process empty
-    assert(packed.forwardFast(reqs(3)).isEmpty) // "zz" routes to the job path
-    assert(packed.forwardFast(reqs(4)).contains(Seq.empty)) // "" answers in-process
-    // a threshold-0 engine never takes the fast path but stays correct
-    val noFast = new ScoutEngine(spark, pois, admin, Settings(),
-      nameIndex = Some(graft.etl.TrigramIndex.packed(graft.etl.TrigramIndex.build(pois))),
-      fastPathMaxCandidates = 0)
-    for (r <- reqs.take(3)) {
-      assert(noFast.forwardFast(r).isEmpty)
-      assert(noFast.forward(r) == scan.forward(r))
-    }
+    assert(indexed.forwardFast(reqs(3)).isEmpty) // "zz" routes to the job path
+    assert(indexed.forwardFast(reqs(4)).contains(Seq.empty)) // "" answers in-process
+    // the job route is the scan program whatever the bind, even for a
+    // narrow indexable request the fast path would serve
+    assert(indexed.forwardDF(reqs(0)).sameSemantics(scan.forwardDF(reqs(0))),
+      indexed.forwardDF(reqs(0)).queryExecution.analyzed.toString)
+    // only the row layout binds: a packed (gram, col_id, ids) index fails
+    val e = intercept[IllegalArgumentException](new ScoutEngine(spark, pois, admin,
+      Settings(), nameIndex = Some(graft.etl.TrigramIndex.packed(spark.read.parquet(ixDir)))))
+    assert(e.getMessage.contains("row layout (gram, col_id, osm_id)"), e.getMessage)
 
-    // bulk on a packed engine: identical hits to the scan engine AND
-    // index-accelerated (round-9 ADVICE: the packed layout silently
-    // routed bulk to the unindexed scan join). The derived row layout
-    // explodes the posting arrays -> a Generate node in the plan, which
-    // the scan join never carries.
+    // bulk on the indexed engine: identical hits to the scan engine AND
+    // index-accelerated — it joins the bound postings, so its plan reads
+    // their files (pois are in memory: no other file is read)
     val texts = Seq("Monograph Dining", "dining", "zz", "")
-    assert(packed.bulk(texts) == scan.bulk(texts), "bulk hits diverged")
-    val plan = packed.bulkDF(texts).queryExecution.executedPlan.toString
-    assert(plan.contains("Generate"),
-      "packed engine's bulk plan shows no posting-array explode — index acceleration lost")
+    assert(indexed.bulk(texts) == scan.bulk(texts), "bulk hits diverged")
+    val read = indexed.bulkDF(texts).inputFiles
+    assert(read.nonEmpty && read.forall(_.contains(ixDir)),
+      s"indexed engine's bulk plan does not read the bound postings: ${read.toSeq}")
   }
 
   test("reverse fast path: bit-equal to the distributed grid join; ocean probes answer None") {
@@ -388,8 +389,7 @@ class ScoutEngineSpec extends SparkSpec {
     def gaz(rows: Seq[Row]) = {
       val raw = spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
       val p = GazetteerBuilder.buildPois(raw)
-      (p, GazetteerBuilder.buildAdmin(raw),
-        graft.etl.TrigramIndex.packed(graft.etl.TrigramIndex.build(p)))
+      (p, GazetteerBuilder.buildAdmin(raw), graft.etl.TrigramIndex.build(p))
     }
     val (p1, a1, ix1) = gaz(Seq(
       poi(1L, "Monograph Dining", "amenity" -> "restaurant", 3.139, 101.6869), admin))
@@ -446,8 +446,7 @@ class ScoutEngineSpec extends SparkSpec {
     def gaz(rows: Seq[Row]) = {
       val raw = spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
       val p = GazetteerBuilder.buildPois(raw)
-      (p, GazetteerBuilder.buildAdmin(raw),
-        graft.etl.TrigramIndex.packed(graft.etl.TrigramIndex.build(p)))
+      (p, GazetteerBuilder.buildAdmin(raw), graft.etl.TrigramIndex.build(p))
     }
     // v1: the familiar corpus; v2: a re-crawl where the restaurant was
     // renamed and a new POI appeared

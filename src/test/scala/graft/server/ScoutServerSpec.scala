@@ -398,8 +398,7 @@ class ScoutServerSpec extends SparkSpec {
     def gaz(rows: Seq[Row]) = {
       val raw = spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
       val p = GazetteerBuilder.buildPois(raw)
-      (p, GazetteerBuilder.buildAdmin(raw),
-        graft.etl.TrigramIndex.packed(graft.etl.TrigramIndex.build(p)))
+      (p, GazetteerBuilder.buildAdmin(raw), graft.etl.TrigramIndex.build(p))
     }
     val (p1, a1, ix1) = gaz(Seq(
       Row(1L, "Monograph Dining", Map("amenity" -> "restaurant"), "POINT(101.6869 3.139)"), admin))
@@ -511,7 +510,7 @@ class ScoutServerSpec extends SparkSpec {
     val pois = GazetteerBuilder.buildPois(raw)
     val eng = new ScoutEngine(spark, pois, GazetteerBuilder.buildAdmin(raw),
       Settings(),
-      nameIndex = Some(graft.etl.TrigramIndex.packed(graft.etl.TrigramIndex.build(pois))))
+      nameIndex = Some(graft.etl.TrigramIndex.build(pois)))
     val srv = new ScoutServer(eng, port = 0).start()
     val idxPath = java.nio.file.Files
       .createTempDirectory("graft-chaos-tindex").toString + "/idx"
@@ -621,7 +620,7 @@ class ScoutServerSpec extends SparkSpec {
       val p2 = GazetteerBuilder.buildPois(applied)
       val ref = new ScoutEngine(spark, p2, GazetteerBuilder.buildAdmin(applied),
         Settings(),
-        nameIndex = Some(graft.etl.TrigramIndex.packed(graft.etl.TrigramIndex.build(p2))))
+        nameIndex = Some(graft.etl.TrigramIndex.build(p2)))
       val refSrv = new ScoutServer(ref, port = 0).start()
       val fwd2 = http("POST", "/v1/geocode/forward", fwdReq, refSrv.boundPort)
       val rev2 = http("POST", "/v1/geocode/reverse", revReq, refSrv.boundPort)
